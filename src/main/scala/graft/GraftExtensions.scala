@@ -150,7 +150,7 @@ object GraftFunctions {
   val descriptions: Seq[Description] = Seq(
     desc(
       "graft_jaro_winkler",
-      "graft_jaro_winkler(a, b) - Jaro-Winkler similarity of two strings (Winkler 1990 greedy matching, SWAR kernel)."
+      "graft_jaro_winkler(a, b) - Jaro-Winkler similarity of two strings (Winkler 1990 greedy matching, bit-parallel kernel)."
     ) { args =>
       arity(args, "graft_jaro_winkler", 2)
       JaroWinklerExpr(args(0), args(1))

@@ -20,8 +20,10 @@ private[cluster] object UnionFind {
   /** Open-addressing long→long map (linear probing, power-of-two
     * capacity, explicit occupancy array so the full key range is
     * usable — doc ids are xxhash64 values). Driver-side only. */
-  private final class LongLongMap(initialCap: Int) {
-    private var cap = Integer.highestOneBit(math.max(16, initialCap) * 2 - 1) << 1
+  private[cluster] final class LongLongMap(initialCap: Int, maxCap: Int = 1 << 30) {
+    // initialCap is the expected entry count: capacity starts at twice
+    // its next power of two
+    private var cap = Integer.highestOneBit(math.max(1, initialCap) * 2 - 1) << 1
     private var mask = cap - 1
     private var ks = new Array[Long](cap)
     private var vs = new Array[Long](cap)
@@ -50,6 +52,9 @@ private[cluster] object UnionFind {
 
     private def grow(): Unit = {
       val oks = ks; val ovs = vs; val oocc = occ
+      // fail loudly: an Int capacity would overflow negative past 2^30
+      // slots and corrupt the map
+      require(cap <= maxCap / 2, s"LongLongMap cannot grow past $maxCap slots ($n entries)")
       cap <<= 1; mask = cap - 1
       ks = new Array[Long](cap); vs = new Array[Long](cap); occ = new Array[Boolean](cap)
       val on = n; n = 0
@@ -74,8 +79,8 @@ private[cluster] object UnionFind {
     * bench-scale graph (~4M edges of dictionary-encoded long ids) spent
     * multiple driver-seconds in the generic HashMap[Any,Any] path; this
     * is the same algorithm on an open-addressing long map. */
-  def minLabelsLong(src: Array[Long], dst: Array[Long]): (Array[Long], Array[Long]) = {
-    val parent = new LongLongMap(1 << 16)
+  def minLabelsLong(src: Array[Long], dst: Array[Long], initialCap: Int = 1 << 16): (Array[Long], Array[Long]) = {
+    val parent = new LongLongMap(initialCap)
     def find(x: Long): Long = {
       var r = x
       var p = parent.getOrDefault(r, r)

@@ -21,7 +21,8 @@ object JW {
     * Winkler boost only when jaro > 0.7.
     *
     * Hot path: ASCII strings ≤ 64 bytes run allocation-free on the
-    * UTF8String bytes with Long bitmasks for the match flags — the
+    * UTF8String bytes against a per-thread pattern-match table of `r`
+    * ([[PM]]), with Long bitmasks for the match flags — the
     * String-materializing path allocates millions of objects/sec at
     * bench scale and turns stage S GC-bound (measured: thread-scaling
     * efficiency 0.70 with allocations). Non-ASCII or long inputs fall
@@ -31,18 +32,8 @@ object JW {
     val lb = r.numBytes
     if (la == 0 && lb == 0) return 1.0
     if (la == 0 || lb == 0) return 0.0
-    if (la <= 64 && lb <= 64 && isAscii(l) && isAscii(r)) jwAsciiSmall(l, r)
+    if (PM.fits(l) && PM.fits(r)) jwAsciiSmall(l, r)
     else jaroWinkler(l.toString, r.toString)
-  }
-
-  private def isAscii(s: UTF8String): Boolean = {
-    var i = 0
-    val n = s.numBytes
-    while (i < n) {
-      if ((s.getByte(i) & 0x80) != 0) return false
-      i += 1
-    }
-    true
   }
 
   /** Thresholded variant: returns the exact Jaro-Winkler value when it
@@ -51,41 +42,47 @@ object JW {
     * lets ~dissimilar pairs abort after a prefix scan — no allocation,
     * no loss for any caller comparing against thresholds ≥ cutoff.
     * Scoring uses cutoff = its lowest decision threshold. */
-  def jwGE(l: UTF8String, r: UTF8String, cutoff: Double): Double = {
-    val la = l.numBytes
-    val lb = r.numBytes
+  def jwGE(l: UTF8String, r: UTF8String, cutoff: Double): Double =
+    if (PM.fits(l) && PM.fits(r)) {
+      val pm = PM.table()
+      PM.load(pm, r)
+      try jwGEPM(l, r, pm, cutoff) finally PM.clear(pm, r)
+    } else {
+      // jaro handles the empty cases (1.0 for two empties, else 0.0)
+      val v = jaroWinkler(l.toString, r.toString)
+      if (v >= cutoff) v else 0.0
+    }
+
+  /** [[jwGE]] with `b` already loaded into `pm`; both sides fit the
+    * table. [[FusedSpanKernel]] calls this once per span pair while it
+    * holds one load of `b` for all spans of `a`. */
+  private[functions] def jwGEPM(a: UTF8String, b: UTF8String, pm: Array[Long], cutoff: Double): Double = {
+    val la = a.numBytes
+    val lb = b.numBytes
     if (la == 0 && lb == 0) return 1.0
     if (la == 0 || lb == 0) return 0.0
-    val v =
-      if (la <= 64 && lb <= 64 && isAscii(l) && isAscii(r)) jwAsciiSmall(l, r, cutoff)
-      else jaroWinkler(l.toString, r.toString)
+    val v = jwPM(a, b, pm, cutoff)
     if (v >= cutoff) v else 0.0
   }
 
-  /** Per-thread scratch for the SWAR kernel: b's bytes packed into
-    * longs, plus a generation-stamped per-character position-mask cache
-    * (no clearing between calls; `gen` invalidates lazily). */
-  private final class Scratch {
-    val bLongs = new Array[Long](8)
-    val charMask = new Array[Long](128)
-    val charGen = new Array[Int](128)
-    var gen = 0
-  }
-  private val scratch = new ThreadLocal[Scratch] {
-    override def initialValue(): Scratch = new Scratch
+  /** Jaro-Winkler for ASCII ≤ 64 bytes over a pattern-match table of
+    * `b` (loaded and cleared around this one call). */
+  private[graft] def jwAsciiSmall(a: UTF8String, b: UTF8String, cutoff: Double = 0.0): Double = {
+    val pm = PM.table()
+    PM.load(pm, b)
+    try jwPM(a, b, pm, cutoff) finally PM.clear(pm, b)
   }
 
-  /** SWAR Jaro-Winkler for ASCII ≤ 64 bytes: b's bytes are packed into
-    * ≤ 8 longs once per call; for each distinct character of `a` a
-    * 64-bit "positions of this char in b" mask is built with the
-    * zero-byte trick + movemask multiply (8 bytes per step) and cached;
-    * each match-scan step is then `mask & ~claimed & window` +
-    * numberOfTrailingZeros — the first free matching position, exactly
-    * the reference scan's greedy choice. ~3-4× fewer ops than the
-    * byte-at-a-time loop on 40-char inputs (JwBench), value-identical
-    * (JaroWinklerSpec differential test). Abort-check placement matches
-    * the reference kernel exactly, so thresholded results agree too. */
-  private[graft] def jwAsciiSmall(a: UTF8String, b: UTF8String, cutoff: Double = 0.0): Double = {
+  /** The match scan over a loaded table: for each byte of `a`,
+    * `pm(a(i)) & ~claimed & window` is the set of free matching
+    * positions of `b` inside the match window, and its lowest set bit
+    * is exactly the reference scan's greedy choice. One table lookup
+    * and a few word operations per byte of `a`, no per-call mask
+    * building; transpositions walk only the matched bits. Abort-check
+    * placement matches the reference kernel exactly, so thresholded
+    * results agree too (bit-identical to [[jwAsciiSmallRef]]:
+    * JaroWinklerSpec, SpanKernelPropSpec). */
+  private def jwPM(a: UTF8String, b: UTF8String, pm: Array[Long], cutoff: Double): Double = {
     val la = a.numBytes
     val lb = b.numBytes
     val window = math.max(0, math.max(la, lb) / 2 - 1)
@@ -100,21 +97,6 @@ object JW {
       val mx = math.max(la, lb).toDouble
       if ((mn / mx + 2.0) / 3.0 < needJ) return 0.0
     }
-    val s = scratch.get()
-    // pack b into longs (little-endian: byte k lives at bits 8(k&7) of
-    // long k>>3); zero-fill the tail of the last chunk
-    val nChunks = (lb + 7) >> 3
-    var c = 0
-    while (c < nChunks) { s.bLongs(c) = 0L; c += 1 }
-    var k0 = 0
-    while (k0 < lb) {
-      s.bLongs(k0 >> 3) |= (b.getByte(k0) & 0xffL) << ((k0 & 7) << 3)
-      k0 += 1
-    }
-    val lenMask = if (lb == 64) -1L else (1L << lb) - 1L
-    s.gen += 1
-    val gen = s.gen
-
     var aM = 0L
     var bM = 0L
     var matches = 0
@@ -123,31 +105,8 @@ object JW {
       val lo = math.max(0, i - window)
       val hi = math.min(lb - 1, i + window)
       if (hi >= lo) {
-        val ca = a.getByte(i) & 0x7f
-        var m = 0L
-        if (s.charGen(ca) == gen) m = s.charMask(ca)
-        else {
-          // build the char-position mask: EXACT per-byte zero test
-          // (the classic (x-0x01..)&~x&0x80.. is only approximate —
-          // borrow chains flag a 0x01 byte above a true zero byte),
-          // then a movemask multiply compresses the 0x80 flags to bits
-          val ca01 = (ca & 0xffL) * 0x0101010101010101L
-          var ch = 0
-          while (ch < nChunks) {
-            val x = s.bLongs(ch) ^ ca01
-            val u = (x & 0x7f7f7f7f7f7f7f7fL) + 0x7f7f7f7f7f7f7f7fL
-            val z = ~(u | x | 0x7f7f7f7f7f7f7f7fL) // 0x80 iff byte == 0, carry-free
-            m |= ((z * 0x0002040810204081L) >>> 56) << (ch << 3)
-            ch += 1
-          }
-          m &= lenMask
-          s.charMask(ca) = m
-          s.charGen(ca) = gen
-        }
-        val winMask =
-          if (hi - lo + 1 >= 64) -1L
-          else ((1L << (hi - lo + 1)) - 1L) << lo
-        val valid = m & ~bM & winMask
+        val winMask = (-1L >>> (63 - hi)) & (-1L << lo) // bits lo..hi
+        val valid = pm(a.getByte(i)) & ~bM & winMask
         if (valid != 0L) {
           val k = java.lang.Long.numberOfTrailingZeros(valid)
           aM |= 1L << i
@@ -162,16 +121,16 @@ object JW {
       }
     }
     if (matches == 0) return 0.0
+    // the j-th matched byte of a pairs with the j-th matched byte of b
     var t = 0
-    var k = 0
-    i = 0
-    while (i < la) {
-      if (((aM >>> i) & 1L) == 1L) {
-        while (((bM >>> k) & 1L) == 0L) k += 1
-        if (a.getByte(i) != b.getByte(k)) t += 1
-        k += 1
-      }
-      i += 1
+    var am = aM
+    var bm = bM
+    while (am != 0L) {
+      val ka = java.lang.Long.numberOfTrailingZeros(am)
+      val kb = java.lang.Long.numberOfTrailingZeros(bm)
+      if (a.getByte(ka) != b.getByte(kb)) t += 1
+      am &= am - 1L
+      bm &= bm - 1L
     }
     val m = matches.toDouble
     val j = (m / la + m / lb + (m - t / 2.0) / m) / 3.0
@@ -185,7 +144,7 @@ object JW {
   }
 
   /** The byte-at-a-time reference kernel (differential-test oracle for
-    * the SWAR path above; not on the hot path). */
+    * the pattern-match path above; not on the hot path). */
   private[graft] def jwAsciiSmallRef(a: UTF8String, b: UTF8String, cutoff: Double = 0.0): Double = {
     val la = a.numBytes
     val lb = b.numBytes

@@ -39,6 +39,14 @@ final class PackedDict(val flat: Array[Byte], val offs: Array[Int]) extends Seri
   * where consecutive rows of the same candidate pair hit the same ~10
   * entries — cache-resident, ~15× less DRAM traffic.
   *
+  * The kernels themselves are the bit-parallel ones: [[JW.jwGE]] scans
+  * a per-thread pattern-match table of the right-hand text ([[PM]]),
+  * [[Lev.sim]] runs Myers' bit-parallel Levenshtein over the same
+  * table; texts that are non-ASCII or over 64 bytes take the
+  * String / `UTF8String.levenshteinDistance` fallbacks, same values.
+  * Stage S calls them through [[FusedSpanKernel]], which loads each
+  * table once per candidate pair instead of once per span pair.
+  *
   * Scale bound: the dictionary must fit in executor memory (bench
   * fixture: 1.65M distinct texts ≈ 150 MB heap). Corpora beyond that
   * use [[graft.scoring.Scoring.scoreWithRepsDirect]] — same results,
@@ -106,14 +114,13 @@ object JwDict {
 
   /** Normalized Levenshtein similarity on dict ids — identical to
     * `1 - levenshtein(ta, tb) / greatest(length(ta), length(tb), 1)`
-    * (the built-in levenshtein is UTF8String.levenshteinDistance). */
+    * (the built-in levenshtein is UTF8String.levenshteinDistance);
+    * computed by [[Lev.sim]], Myers' bit-parallel kernel for ASCII
+    * spans ≤ 64 bytes. */
   def levSim(bc: Broadcast[PackedDict], a: Int, b: Int): Double = {
     if (a == b) return 1.0
     val d = arr(bc)
-    val x = d(a)
-    val y = d(b)
-    val mx = math.max(math.max(x.numChars, y.numChars), 1)
-    1.0 - x.levenshteinDistance(y).toDouble / mx
+    Lev.sim(d(a), d(b))
   }
 }
 

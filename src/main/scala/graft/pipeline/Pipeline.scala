@@ -165,11 +165,15 @@ object Pipeline {
   private final class Ckpt(spark: SparkSession, runDir: String, runId: String) {
     private val metaLock = new Object
     private val pending = new java.util.concurrent.ConcurrentLinkedQueue[scala.concurrent.Future[Unit]]()
-    private val metaEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(
-        java.util.concurrent.Executors.newFixedThreadPool(2, (r: Runnable) => {
-          val t = new Thread(r, "ckpt-meta"); t.setDaemon(true); t
-        }))
+    private val metaPool = {
+      import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+      val p = new ThreadPoolExecutor(2, 2, 1L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+        (r: Runnable) => { val t = new Thread(r, "ckpt-meta"); t.setDaemon(true); t })
+      // a run that throws before await() still leaves no idle threads
+      p.allowCoreThreadTimeOut(true)
+      p
+    }
+    private val metaEc = scala.concurrent.ExecutionContext.fromExecutor(metaPool)
 
     /** Submit background lineage+metrics work for a stage that just
       * committed. `lineageOf` is hashed in one pass that also yields
@@ -209,14 +213,19 @@ object Pipeline {
 
     /** Barrier: every background lineage/metrics job has committed (or
       * its failure is rethrown). Called before run/runDelta returns so
-      * the metrics table is complete for readers (Bench, resume). */
-    def await(): Unit = {
-      var f = pending.poll()
-      while (f != null) {
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        f = pending.poll()
+      * the metrics table is complete for readers (Bench, resume). Ends
+      * the Ckpt: the pool's threads have exited when this returns. */
+    def await(): Unit =
+      try {
+        var f = pending.poll()
+        while (f != null) {
+          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+          f = pending.poll()
+        }
+      } finally {
+        metaPool.shutdown()
+        metaPool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
       }
-    }
   }
 
   /** Stages S0 (doc reps) + S1 (dictionary/pair tables, size-gated) +

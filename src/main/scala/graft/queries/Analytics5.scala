@@ -182,7 +182,7 @@ object Analytics5 {
     //      flag assignment counts 2 transpositions where the greedy
     //      order yields 3; ~37% of fixture pairs differ). Our kernel
     //      matches the published definition (JaroWinklerSpec golden
-    //      values + 200k-pair SWAR differential), so conforming to
+    //      values + 200k-pair kernel differential), so conforming to
     //      DuckDB here would be wrong, not verification. ----
     "q39_lev_rescue" -> ((s, dir) => {
       val nt = docsStr(s, dir)

@@ -101,13 +101,13 @@ class JaroWinklerSpec extends AnyFunSuite {
     assert(r.isNullAt(0))
   }
 
-  test("SWAR kernel is bit-identical to the byte-at-a-time reference kernel") {
+  test("pattern-match kernel is bit-identical to the byte-at-a-time reference kernel") {
     import org.apache.spark.unsafe.types.UTF8String
     // 200k random pairs across three regimes: fixture-like normalized
     // text (lowercase+digits+space, syllable-ish lengths), near-dup
     // edits of a shared base, and fully random ascii incl. length
     // extremes (1..64). Exact Double equality at cutoff 0 and 0.75 —
-    // the SWAR path must reproduce the reference kernel's greedy match
+    // the pattern-match path must reproduce the reference kernel's greedy match
     // assignment, transpositions, prefix bonus, AND abort decisions.
     val rnd = new scala.util.Random(11)
     val alnum = "abcdefghijklmnopqrstuvwxyz0123456789 "

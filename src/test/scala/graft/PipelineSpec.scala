@@ -28,6 +28,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(result.clusters.select("doc_id").distinct().count() == n)
   }
 
+  test("a returned run leaves no checkpoint-metadata thread behind") {
+    result.clusters.count()
+    val live = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && t.getName == "ckpt-meta")
+    assert(live.isEmpty, s"${live.length} ckpt-meta threads outlived Pipeline.run")
+  }
+
   test("cluster ids are members of their own cluster (canonical-id stability)") {
     // canonical id = the doc_id of the min-nid member (dictIds path):
     // must BE a member, and must be the same member on every rerun
