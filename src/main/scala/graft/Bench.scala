@@ -193,7 +193,6 @@ object Bench {
     val pipeCfg = graft.pipeline.Pipeline.Cfg(
       blocking = graft.blocking.Blocking.Cfg(
         fusedMinhash = sys.env.get("SPARK_GRAFT_FUSED_MINHASH").forall(_ != "0")),
-      scorePath = sys.env.getOrElse("SPARK_GRAFT_SCORE_PATH_PIPE", "fused"),
       compactCandidateFiles = sys.env.get("SPARK_GRAFT_COMPACT_FILES").contains("1")
     )
     locally {
@@ -223,13 +222,12 @@ object Bench {
     val nPairs = metrics.getOrElse(("scored_pairs", "scored_pairs"), 0.0)
     results("pir_blocking") = metrics.getOrElse(("candidates", "wall_ms"), 0.0) / 1000
     // scoring = rep checkpoints (S0) + dict stages (S1) + chunked pair
-    // scoring (S) — every stage the scorePath needs is charged to it
+    // scoring (S) — every stage-S checkpoint is charged to it
     results("pir_scoring") = (metrics.getOrElse(("scored_pairs", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_rep", "wall_ms"), 0.0) +
       metrics.getOrElse(("media_rep", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_dict", "wall_ms"), 0.0) +
-      metrics.getOrElse(("text_ids", "wall_ms"), 0.0) +
-      metrics.getOrElse(("text_pair_scores", "wall_ms"), 0.0)) / 1000
+      metrics.getOrElse(("text_ids", "wall_ms"), 0.0)) / 1000
     results("pir_clustering") = metrics.getOrElse(("clusters", "wall_ms"), 0.0) / 1000
     results("pir_pairs_per_sec") = if (results("pir_scoring") > 0) nPairs / results("pir_scoring") else 0.0
     results("pir_docs_per_sec") = if (e2e > 0) nDocs / e2e else 0.0

@@ -29,10 +29,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
   * with the pattern-match table and Myers kernels below
   * (perfbench `functions.fused_ns_per_pair`, three seeds each).
   *
-  * Value-identical to the exploded paths by construction: max and
-  * bit-OR are order-independent, and per span pair the arithmetic is
-  * exactly [[JwDict.jwGE]] / [[JwDict.levSim]] on the same dictionary
-  * strings (asserted column-exact in ScoringDedupSpec).
+  * Value-identical to the exploded formulation by construction: max
+  * and bit-OR are order-independent, and per span pair the arithmetic
+  * is exactly [[JwDict.jwGE]] / [[JwDict.levSim]] on the same dictionary
+  * strings (SpanKernelPropSpec; column-exact against the pipeline's
+  * dictionary-free fallback, Scoring.scoreWithRepsDirect, in
+  * ScoringDedupSpec).
   *
   * Reference semantics: the multi-signal link probability of
   * src/core/cross_device_linker.py:143-216, re-expressed as

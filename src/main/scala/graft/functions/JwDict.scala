@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The broadcast span-text dictionary, packed FLAT: one UTF-8 byte
@@ -30,14 +26,13 @@ final class PackedDict(val flat: Array[Byte], val offs: Array[Int]) extends Seri
   * over dense text ids, with the distinct normalized span texts shipped
   * ONCE per executor as a broadcast [[PackedDict]].
   *
-  * Why: stage S explodes candidate pairs into span-pair rows, and with
-  * inline string kernels every exploded row materializes both span
-  * texts (and each Generate re-copies the inner text array per outer
-  * row) — measured as the stage's memory-bandwidth ceiling at 32
-  * threads. With dict ids the whole exploded stream is fixed-width
-  * ints; the kernel reads text bytes from the broadcast dictionary,
-  * where consecutive rows of the same candidate pair hit the same ~10
-  * entries — cache-resident, ~15× less DRAM traffic.
+  * Why: with the texts in a per-executor dictionary, stage S's pair
+  * stream carries only fixed-width id arrays — no span text enters a
+  * join shuffle — and a candidate pair's ~10 texts stay cache-resident
+  * while the kernel compares all of their span pairs. Inline string
+  * kernels over exploded span-pair rows (the dictionary-free fallback)
+  * copy both texts into every row, measured as the stage's
+  * memory-bandwidth ceiling at 32 threads.
   *
   * The kernels themselves are the bit-parallel ones: [[JW.jwGE]] scans
   * a per-thread pattern-match table of the right-hand text ([[PM]]),
@@ -122,44 +117,4 @@ object JwDict {
     val d = arr(bc)
     Lev.sim(d(a), d(b))
   }
-}
-
-private[functions] abstract class DictKernelExpr extends BinaryExpression {
-  def bc: Broadcast[PackedDict]
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  protected def genCall(ctx: CodegenContext, l: String, r: String): String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jwDictBc", bc, "org.apache.spark.broadcast.Broadcast")
-    defineCodeGen(ctx, ev, (l, r) => genCall(ctx, l, r).replace("$BC", ref))
-  }
-}
-
-case class JwDictGate(left: Expression, right: Expression, cutoff: Double, bc: Broadcast[PackedDict])
-    extends DictKernelExpr {
-  override def prettyName: String = "jaro_winkler_dict_ge"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JwDict.jwGE(bc, l.asInstanceOf[Int], r.asInstanceOf[Int], cutoff)
-  override protected def genCall(ctx: CodegenContext, l: String, r: String): String =
-    s"graft.functions.JwDict.jwGE($$BC, $l, $r, ${cutoff}D)"
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class LevDictSim(left: Expression, right: Expression, bc: Broadcast[PackedDict])
-    extends DictKernelExpr {
-  override def prettyName: String = "lev_sim_dict"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JwDict.levSim(bc, l.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def genCall(ctx: CodegenContext, l: String, r: String): String =
-    s"graft.functions.JwDict.levSim($$BC, $l, $r)"
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object JwDictExpr {
-  def jwGE(a: Column, b: Column, cutoff: Double, bc: Broadcast[PackedDict]): Column =
-    GraftShim.column(JwDictGate(GraftShim.expression(a), GraftShim.expression(b), cutoff, bc))
-  def levSim(a: Column, b: Column, bc: Broadcast[PackedDict]): Column =
-    GraftShim.column(LevDictSim(GraftShim.expression(a), GraftShim.expression(b), bc))
 }

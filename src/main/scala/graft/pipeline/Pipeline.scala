@@ -62,50 +62,20 @@ object Pipeline {
       // where birthday odds on 64-bit hashes (~2.7%) stop being
       // ignorable.
       dictMode: String = "hash",
-      // broadcast the per-doc rep frames (span-id arrays + media sets)
-      // into the candidate-pair stream when the corpus is at most this
-      // many docs: stage S then runs with ZERO shuffle exchanges
-      // (map-side hash joins off the candidate checkpoint). Default 0
-      // = off: on a single box the exchange is a memcpy and the four
-      // broadcast hash-relation builds are a measured net LOSS
-      // (557 vs 469 stage-S CPU core-s at bench scale, FusedAB); on a
-      // multi-node cluster the same knob skips two network shuffles of
-      // the dominant pair stream — set it to the executor-memory bound
-      // (~60 B/doc → 2M docs ≈ 120 MB) when deploying there.
-      broadcastRepsMaxDocs: Long = 0L,
-      // stage-S kernel path:
-      //  - "fused" (default): the whole per-pair text score — best JW,
-      //    rescue-Levenshtein, strong-span masks — computed by ONE
-      //    codegen'd expression over the two dict-id arrays; no
-      //    Generate, no aggregate, one row per pair end to end
-      //    (functions/FusedSpanScore.scala). Shares the broadcast
-      //    dictionary bound of "dict".
-      //  - "dict": dense text dictionary broadcast once; exploded
-      //    span-pair stream of fixed-width ints + hash aggregate.
-      //    Requires the distinct-span-text dictionary to fit in
-      //    executor memory (bench: 1.65M texts ≈ 150 MB).
-      //  - "direct": inline string kernels over a text-carrying
-      //    exploded stream (no memory bound; the pre-round-4 path).
-      //  - "pair": factorized distinct-text-pair score table (measured
-      //    2× slower than direct on the bench fixture — its distinct
-      //    pass buys nothing when spans rarely repeat verbatim; kept
-      //    for corpora with heavy exact-span repetition).
-      // All four are value-identical (ScoringDedupSpec).
-      scorePath: String = "fused",
       // byte budget for the span-text dictionary broadcast that the
-      // "fused"/"dict" paths depend on. The dictionary is the ONE
-      // broadcast in the pipeline that grows with corpus size (distinct
-      // span texts ~ corpus size; at 100 TB plausibly billions of
-      // entries), so an ungated collect is a guaranteed driver/executor
-      // OOM at scale. One aggregate over the checkpointed text_dict
-      // estimates the in-memory footprint (utf-8 bytes + per-entry JVM
-      // overhead); above the budget the run falls back to
-      // scorePath="direct" (inline string kernels, no dictionary, no
-      // memory bound — value-identical per ScoringDedupSpec), logs the
-      // decision, and records it in the metrics table as
-      // dict_fallback=1. Same gate pattern as broadcastRepsMaxDocs.
-      // Default 2 GiB ≈ a third of a 6 GiB executor heap; bench sf0.1
-      // uses ~200 MB.
+      // fused stage-S kernel reads. The dictionary is the ONE broadcast
+      // in the pipeline that grows with corpus size (distinct span
+      // texts ~ corpus size; at 100 TB plausibly billions of entries),
+      // so an ungated collect is a guaranteed driver/executor OOM at
+      // scale. One aggregate over the checkpointed text_dict estimates
+      // the in-memory footprint (utf-8 bytes + per-entry JVM overhead);
+      // above the budget the run scores with Scoring.scoreWithRepsDirect
+      // instead (inline string kernels, no dictionary, no memory bound —
+      // value-identical per ScoringDedupSpec), logs the decision, and
+      // records it in the metrics table as dict_fallback=1. At most
+      // 2 GiB (checked at run/runDelta entry): the broadcast blob is a
+      // single byte array. Default 2 GiB ≈ a third of a 6 GiB executor
+      // heap; bench sf0.1 uses ~200 MB.
       dictMaxBytes: Long = 2L << 30,
       // compact the chunk-partitioned candidates checkpoint to exactly
       // scoreChunks files (one repartition on the chunk column before
@@ -139,6 +109,16 @@ object Pipeline {
   )
 
   private def done(path: String): Boolean = new java.io.File(path + "/_SUCCESS").exists()
+
+  /** Entry check shared by [[run]] and [[runDelta]]: the dictionary
+    * broadcast is a single byte array (Scoring.broadcastDict), so a
+    * budget above 2 GiB would admit a dictionary that cannot be
+    * allocated — failing after stage B committed instead of falling
+    * back to the direct kernels. At 2 GiB, bytes + 32·n ≤ 2³¹ already
+    * keeps the blob within Int.MaxValue. */
+  private def requireValid(cfg: Cfg): Unit =
+    require(cfg.dictMaxBytes <= (2L << 30),
+      s"Cfg.dictMaxBytes must be at most 2 GiB (${2L << 30} bytes), got ${cfg.dictMaxBytes}")
 
   /** Checkpoint-stage writer shared by [[run]] and [[runDelta]]: write
     * to `runDir/name` with `_SUCCESS`-gated idempotent resume, lineage
@@ -228,7 +208,7 @@ object Pipeline {
       }
   }
 
-  /** Stages S0 (doc reps) + S1 (dictionary/pair tables, size-gated) +
+  /** Stages S0 (doc reps) + S1 (span-text dictionary, size-gated) +
     * S (chunk-resumable pair scoring) — shared verbatim by [[run]] and
     * [[runDelta]]; see the inline comments at each block. Returns the
     * scored-pairs frame (chunk column dropped). */
@@ -250,8 +230,6 @@ object Pipeline {
   ): DataFrame = {
     val chunkPruned = candidates.columns.contains(chunkCol)
     graft.util.PhaseTracker.set("scoring")
-    require(Set("fused", "dict", "direct", "pair").contains(cfg.scorePath),
-      s"unknown scorePath '${cfg.scorePath}'")
 
     // Stage S — pair-level resumable scoring: chunk by pmod(salt, n);
     // each chunk commits independently (its own parquet _SUCCESS), the
@@ -277,46 +255,32 @@ object Pipeline {
         case None => Scoring.mediaRep(docs)
       })
 
-      // Stage S1 (scorePath-dependent):
-      //  - dict: dense span-text dictionary + id-encoded rep,
-      //    checkpointed once; the dictionary is broadcast once and every
-      //    chunk's kernel reads it (see Scoring.scoreWithRepsDict).
-      //  - pair: distinct-text-pair score table, left-joined per chunk.
-      // dictionary-size gate (see Cfg.dictMaxBytes): estimate the
+      // Stage S1 — dense span-text dictionary + id-encoded rep,
+      // checkpointed once; the dictionary is broadcast once and every
+      // chunk's fused kernel reads it (see Scoring.scoreWithRepsFused).
+      // Dictionary-size gate (see Cfg.dictMaxBytes): estimate the
       // broadcast footprint from the checkpointed dictionary BEFORE
       // collecting it; over budget → the unbounded direct path. The
       // estimate is one pruned two-column aggregate (utf-8 bytes +
       // 32 B/entry for the byte-array object header and table slot).
-      var dictBcastBytes = 0L
-      val wantDict = cfg.scorePath == "dict" || cfg.scorePath == "fused"
+      val dict = ck.stage("text_dict")(Scoring.textDictDense(textRep))
+      val dictBcastBytes = {
+        val g = dict.agg(
+          coalesce(sum(octet_length(col("t"))), lit(0L)).as("b"),
+          count(lit(1)).as("n")
+        ).head()
+        g.getLong(0) + 32L * g.getLong(1)
+      }
       val dictSide =
-        if (wantDict) {
-          val dict = ck.stage("text_dict")(Scoring.textDictDense(textRep))
-          val g = dict.agg(
-            coalesce(sum(octet_length(col("t"))), lit(0L)).as("b"),
-            count(lit(1)).as("n")
-          ).head()
-          dictBcastBytes = g.getLong(0) + 32L * g.getLong(1)
-          if (dictBcastBytes <= cfg.dictMaxBytes) {
-            val txtIds = ck.stage("text_ids")(Scoring.textIdsRep(textRep, dict))
-            Some((txtIds, Scoring.broadcastDict(dict)))
-          } else {
-            System.err.println(
-              f"[pipeline] span-text dictionary ≈ ${dictBcastBytes / 1e6}%.0f MB exceeds " +
-                f"dictMaxBytes=${cfg.dictMaxBytes / 1e6}%.0f MB — falling back to scorePath=direct")
-            None
-          }
-        } else None
-      val scorePath = if (wantDict && dictSide.isEmpty) "direct" else cfg.scorePath
-      val pairScores =
-        if (scorePath == "pair")
-          Some(ck.stage("text_pair_scores")(Scoring.textPairScores(candidates, textRep, cfg.weights)))
-        else None
-
-      // one count on the checkpointed rep decides the fused path's rep
-      // distribution: broadcast (zero-shuffle stage S) vs shuffle joins
-      val bcastReps = scorePath == "fused" && cfg.broadcastRepsMaxDocs > 0 &&
-        dictSide.exists(_._1.count() <= cfg.broadcastRepsMaxDocs)
+        if (dictBcastBytes <= cfg.dictMaxBytes) {
+          val txtIds = ck.stage("text_ids")(Scoring.textIdsRep(textRep, dict))
+          Some((txtIds, Scoring.broadcastDict(dict)))
+        } else {
+          System.err.println(
+            f"[pipeline] span-text dictionary ≈ ${dictBcastBytes / 1e6}%.0f MB exceeds " +
+              f"dictMaxBytes=${cfg.dictMaxBytes / 1e6}%.0f MB — scoring with the direct string kernels")
+          None
+        }
 
       val t0 = System.nanoTime()
       // chunk-count marker: the stage read below globs every chunk=*
@@ -360,16 +324,10 @@ object Pipeline {
             val chunk =
               if (chunkPruned) candidates.where(col(chunkCol) === i)
               else candidates.where(pmod(col("salt"), lit(cfg.scoreChunks)) === i)
-            (scorePath match {
-              case "fused" =>
-                val (txtIds, bc) = dictSide.get
-                Scoring.scoreWithRepsFused(chunk, txtIds, mediaRep, cfg.weights, bc, bcastReps)
-              case "dict" =>
-                val (txtIds, bc) = dictSide.get
-                Scoring.scoreWithRepsDict(chunk, txtIds, mediaRep, cfg.weights, bc)
-              case "pair" =>
-                Scoring.scoreWithReps(chunk, textRep, mediaRep, cfg.weights, pairScores)
-              case _ =>
+            (dictSide match {
+              case Some((txtIds, bc)) =>
+                Scoring.scoreWithRepsFused(chunk, txtIds, mediaRep, cfg.weights, bc)
+              case None =>
                 Scoring.scoreWithRepsDirect(chunk, textRep, mediaRep, cfg.weights)
             }).write.mode("overwrite").parquet(cpath)
           }
@@ -391,9 +349,9 @@ object Pipeline {
           "scored_pairs" -> total.toDouble,
           "matched_pairs" -> out.where(col("is_match")).count().toDouble,
           // dictionary-gate audit trail: the estimated broadcast bytes
-          // and whether the run was forced off the fused/dict path
+          // and whether the run was forced off the fused path
           "dict_bcast_bytes" -> dictBcastBytes.toDouble,
-          "dict_fallback" -> (if (wantDict && dictSide.isEmpty) 1.0 else 0.0)
+          "dict_fallback" -> (if (dictSide.isEmpty) 1.0 else 0.0)
         )
       }
       new java.io.File(s"$scoredPath/_SUCCESS").createNewFile()
@@ -404,6 +362,7 @@ object Pipeline {
   /** Run (or resume) the pipeline. `docs` must have the input_hint
     * shape; stage outputs are written under `runDir`. */
   def run(spark: SparkSession, docs0: DataFrame, runDir: String, cfg: Cfg = Cfg()): Result = {
+    requireValid(cfg)
     val runId = "run"
     new java.io.File(runDir).mkdirs()
 
@@ -711,6 +670,7 @@ object Pipeline {
       runDir: String,
       cfg: Cfg = Cfg()
   ): Result = {
+    requireValid(cfg)
     val runId = "delta"
     new java.io.File(runDir).mkdirs()
 

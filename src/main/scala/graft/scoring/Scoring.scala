@@ -31,11 +31,16 @@ import graft.text.TextOps.normText
   * edge — critical because stage C closes transitively and one false
   * edge merges two whole entities.
   *
-  * Everything is one Column tree over exploded span pairs: the JW
-  * kernel is a codegen'd Catalyst expression, `levenshtein` is built-in
-  * and gated behind the cheap JW pre-check, the FS terms are
-  * constant-folded literals. One hash-aggregate shuffle brings
-  * span-pair rows back to pair granularity.
+  * One scoring path plus its overflow fallback. [[scoreWithRepsFused]]
+  * computes the whole text field of a pair — best JW, the Levenshtein
+  * rescue gated behind the JW pre-check, the strong-span masks — in one
+  * codegen'd Catalyst expression over per-doc span-text id arrays,
+  * reading the texts from a broadcast dictionary; the FS terms are
+  * constant-folded literals, and the plan stays at one row per pair.
+  * When that dictionary is over the pipeline's byte budget,
+  * [[scoreWithRepsDirect]] scores the same pairs with inline string
+  * kernels over exploded span pairs and one hash aggregate, with no
+  * memory bound. The two are value-identical on every column.
   */
 object Scoring {
 
@@ -176,85 +181,6 @@ object Scoring {
       "left_anti"
     )
 
-  /** Score against precomputed doc representations (the pipeline
-    * checkpoints them once and reuses them across resume-able scoring
-    * chunks — recomputing reps per chunk would re-scan the input).
-    *
-    * PRECONDITION: `candidates` must be distinct on (doc_a, doc_b).
-    * The text branch's terminal aggregate dedups, but the media branch
-    * joins back at candidate-row grain, so duplicate input pairs yield
-    * duplicate scored rows. Blocking.candidatesFromKeys guarantees
-    * distinctness (terminal groupBy(doc_a, doc_b)); callers feeding
-    * hand-built pair sets must dropDuplicates first — deliberately NOT
-    * done here, it would add a full extra shuffle of the candidate set
-    * to every scoring chunk.
-    *
-    * Default path is the distinct-text-pair factorization (see
-    * [[textPairScores]]): the exploded span-pair stream carries only
-    * fixed-width longs and the JW kernel runs once per DISTINCT
-    * normalized text pair instead of once per span-pair row. Output is
-    * value-identical to [[scoreWithRepsDirect]] (same kernel, same
-    * strings, symmetric JW/Levenshtein) — ScoringDedupSpec asserts
-    * exact equality. Pass a precomputed `pairScores` (the pipeline
-    * checkpoints one for all chunks) to avoid rebuilding it per call. */
-  def scoreWithReps(
-      candidates: DataFrame,
-      txt: DataFrame,
-      med: DataFrame,
-      w: Weights = Weights(),
-      pairScores: Option[DataFrame] = None
-  ): DataFrame = {
-    val ps = pairScores.getOrElse(textPairScores(candidates, txt, w))
-    val slim = slimSpanPairs(candidates, txt)
-    // left join against the (small) similar-pair score table: AQE picks
-    // a broadcast-hash join when it fits; eq rows (tia == tib) bypass
-    // the table entirely — exact equality is jw 1.0 by definition of
-    // the kernel (incl. the empty-empty case). Rows with no similarity
-    // signal are dropped BEFORE the aggregate; pairs whose rows all
-    // drop reappear with zero defaults via the media left join below.
-    val contrib = slim
-      .join(ps, Seq("lt", "gt"), "left")
-      .select(
-        col("doc_a"), col("doc_b"), col("ia"), col("ib"),
-        when(col("tia") === col("tib"), lit(1.0))
-          .otherwise(coalesce(col("jw"), lit(0.0))).as("jw"),
-        when(col("tia") === col("tib"), lit(0.0))
-          .otherwise(coalesce(col("lev_sim"), lit(0.0))).as("lev_sim")
-      )
-      .where(col("jw") > lit(0.0))
-    aggAndFinish(contrib, mediaPairScores(candidates, med, w), w)
-  }
-
-  /** Pair-grain aggregation of contributing span-pair rows + media
-    * join + FS combination, shared by the factorized and dict paths.
-    * `contrib`: (doc_a, doc_b, ia, ib, jw, lev_sim) with jw > 0 only —
-    * pairs whose rows all dropped reappear with zero defaults via the
-    * media LEFT join (mediaPair covers every candidate pair). */
-  private def aggAndFinish(contrib: DataFrame, mediaPair: DataFrame, w: Weights): DataFrame = {
-    val agg = contrib
-      .withColumn("strong", col("jw") >= lit(w.jwStrong) || col("lev_sim") >= lit(w.levStrong))
-      .groupBy("doc_a", "doc_b")
-      .agg(
-        max(col("jw")).as("jw_best0"),
-        max(col("lev_sim")).as("lev_best0"),
-        bit_or(when(col("strong"), expr("shiftleft(1L, ia)")).otherwise(0L)).as("mask_a0"),
-        bit_or(when(col("strong"), expr("shiftleft(1L, ib)")).otherwise(0L)).as("mask_b0")
-      )
-    val joined = mediaPair
-      .join(agg, Seq("doc_a", "doc_b"), "left")
-      .select(
-        col("doc_a"), col("doc_b"), col("m_score"), col("media_jaccard"),
-        coalesce(col("jw_best0"), lit(0.0)).as("jw_best"),
-        coalesce(col("lev_best0"), lit(0.0)).as("lev_best"),
-        coalesce(col("mask_a0"), lit(0L)).as("mask_a"),
-        coalesce(col("mask_b0"), lit(0L)).as("mask_b")
-      )
-      .withColumn("strong_a", bit_count(col("mask_a")).cast("long"))
-      .withColumn("strong_b", bit_count(col("mask_b")).cast("long"))
-      .withColumn("strong_min", least(col("strong_a"), col("strong_b")))
-    finishScore(joined, w)
-  }
-
   /** Dense dictionary of the distinct normalized span texts:
     * (t, tid:int), ids assigned in text sort order (range-sort +
     * zipWithIndex — no single-partition global sort; the pipeline
@@ -317,106 +243,43 @@ object Scoring {
     dict.sparkSession.sparkContext.broadcast(new graft.functions.PackedDict(flat, offs))
   }
 
-  /** Dict-kernel scoring path (round-4 default): the exploded span-pair
-    * stream carries only fixed-width ints — text bytes never enter a
-    * join shuffle or a Generate copy — and the JW/Levenshtein kernels
-    * read the broadcast dictionary, where a candidate pair's ~10 texts
-    * stay cache-hot across its whole row burst. Value-identical to
-    * [[scoreWithRepsDirect]] (same kernels, same strings; asserted by
-    * ScoringDedupSpec). `txtIds` from [[textIdsRep]], `bc` from
-    * [[broadcastDict]] — both derived from the same textRep. */
-  def scoreWithRepsDict(
+  /** Stage S: score against precomputed doc representations (the
+    * pipeline checkpoints them once and reuses them across resume-able
+    * scoring chunks). One row per candidate pair end to end: the text
+    * kernel — best JW, rescue-Levenshtein, strong-span bit masks — runs
+    * as a single codegen'd expression over the two dict-id arrays
+    * ([[graft.functions.FusedSpanKernel]]), so there is no Generate and
+    * no aggregate. `txtIds` from [[textIdsRep]], `bc` from
+    * [[broadcastDict]], both derived from the same textRep.
+    * Value-identical to [[scoreWithRepsDirect]] (ScoringDedupSpec).
+    *
+    * PRECONDITION: `candidates` must be distinct on (doc_a, doc_b):
+    * both branches join at candidate-row grain, so a duplicate input
+    * pair yields duplicate scored rows. Blocking.candidatesFromKeys
+    * guarantees it; a dropDuplicates here would add a full shuffle of
+    * the candidate set to every scoring chunk. */
+  def scoreWithRepsFused(
       candidates: DataFrame,
       txtIds: DataFrame,
       med: DataFrame,
       w: Weights,
       bc: org.apache.spark.broadcast.Broadcast[graft.functions.PackedDict]
   ): DataFrame = {
-    val pairs = candidates.select("doc_a", "doc_b")
-    val paired = pairs
-      .join(txtIds.select(col("doc_id").as("doc_a"), col("tids").as("tids_a")), "doc_a")
-      .join(txtIds.select(col("doc_id").as("doc_b"), col("tids").as("tids_b")), "doc_b")
-    val exA = paired.select(
-      col("doc_a"), col("doc_b"), col("tids_b"),
-      posexplode_outer(col("tids_a")).as(Seq("ia", "tia"))
-    )
-    val slim = exA.select(
-      col("doc_a"), col("doc_b"), col("ia"), col("tia"),
-      posexplode_outer(col("tids_b")).as(Seq("ib", "tib"))
-    )
-    val contrib = slim
-      .withColumn("jw", graft.functions.JwDictExpr.jwGE(col("tia"), col("tib"), 0.75, bc))
-      .where(col("jw") > lit(0.0))
-      .withColumn(
-        "lev_sim",
-        when(
-          col("jw") >= lit(0.75) && col("jw") < lit(w.jwStrong),
-          graft.functions.JwDictExpr.levSim(col("tia"), col("tib"), bc)
-        ).otherwise(lit(0.0))
-      )
-      .select("doc_a", "doc_b", "ia", "ib", "jw", "lev_sim")
-    aggAndFinish(contrib, mediaPairScores(candidates, med, w), w)
-  }
-
-  /** Fused scoring path (round-4 final default): one row per candidate
-    * pair end to end. The text kernel — best JW, rescue-Levenshtein,
-    * strong-span bit masks — runs as a single codegen'd expression over
-    * the two dict-id arrays ([[graft.functions.FusedSpanKernel]]), and
-    * the media branch is folded into the SAME row (medias join on the
-    * same doc_a/doc_b keys as the id arrays, reusing their hash
-    * partitioning), so stage S has no Generate, no aggregate, and no
-    * pair-grain re-join: two join chains → one map → write. At planet
-    * scale the only shuffles are the two rep joins, both on doc id.
-    * Value-identical to [[scoreWithRepsDirect]] (ScoringDedupSpec). */
-  def scoreWithRepsFused(
-      candidates: DataFrame,
-      txtIds: DataFrame,
-      med: DataFrame,
-      w: Weights,
-      bc: org.apache.spark.broadcast.Broadcast[graft.functions.PackedDict],
-      // broadcast the per-doc rep frames into the pair stream: stage S
-      // then has NO shuffle exchange at all (pairs stream off the
-      // candidate checkpoint through map-side hash joins). A cluster-
-      // shape knob: worth two network shuffles of the pair stream on a
-      // multi-node deployment, but a measured net LOSS on one box
-      // (broadcast hash-relation builds cost more than local memcpy
-      // exchanges: 557 vs 469 stage-S CPU core-s, FusedAB) — so the
-      // pipeline defaults it off (Cfg.broadcastRepsMaxDocs = 0) and
-      // gates it on a doc-count/executor-memory threshold when on.
-      bcastReps: Boolean = false,
-      // stage-S join strategy: "none" (default: planner sort-merge +
-      // AQE runtime conversion) or "shuffle_hash". MEASURED NEUTRAL on
-      // this box (tools/ScoreHintAB, interleaved noop-sink A/B ×3:
-      // SHJ 467-504 core-s vs SMJ 447-495 — the SMJ sorts are radix
-      // sorts over long keys and cost about what the hash-relation
-      // builds do), so the default stays with the planner, which AQE
-      // can still upgrade to broadcast at runtime. The knob remains
-      // the cluster-deployment A/B surface; results identical.
-      joinHint: String = "none"
-  ): DataFrame = {
     // Two independent pair-grain branches joined on (doc_a, doc_b) —
     // deliberately NOT one join chain: a single chain would carry the
     // tids_a/medias_a array payloads through the two later sort-merge
     // joins, and sorting var-length rows ×8 concurrent chunk jobs was
-    // a measured in-pipeline LOSS (scoring stage 1,333 vs the dict
-    // path's 923 CPU core-s) despite the kernel itself being cheaper.
-    // In this shape each array rides exactly ONE join — the same plan
-    // as the exploded paths minus their Generate + hash aggregate.
-    //
-    // Join strategy (round 6, guide §3.1): `joinHint` can force
-    // SHUFFLE_HASH on every build side, eliminating the SMJ sorts of
-    // the pair stream (3 per branch). Measured NEUTRAL at bench scale
-    // (see the joinHint doc) — the sorts are radix sorts over long
-    // keys — so the planner default stays; the knob is the A/B
-    // surface for deployments where the trade differs.
-    val hint: DataFrame => DataFrame =
-      if (bcastReps) broadcast
-      else if (joinHint == "none") identity
-      else (df: DataFrame) => df.hint(joinHint)
+    // a measured in-pipeline LOSS (scoring stage 1,333 vs 923 CPU
+    // core-s for an exploded-span formulation) despite the kernel
+    // itself being cheaper. In this shape each array rides exactly ONE
+    // join. Join strategy is the planner's: forcing SHUFFLE_HASH builds
+    // measured neutral (the sort-merge sorts are radix sorts over long
+    // keys), and broadcasting the reps measured a CPU loss on one box
+    // (broadcast hash-relation builds cost more than local exchanges).
     val pairs = candidates.select("doc_a", "doc_b")
     val textPair = pairs
-      .join(hint(txtIds.select(col("doc_id").as("doc_a"), col("tids").as("tids_a"))), "doc_a")
-      .join(hint(txtIds.select(col("doc_id").as("doc_b"), col("tids").as("tids_b"))), "doc_b")
+      .join(txtIds.select(col("doc_id").as("doc_a"), col("tids").as("tids_a")), "doc_a")
+      .join(txtIds.select(col("doc_id").as("doc_b"), col("tids").as("tids_b")), "doc_b")
       .select(
         col("doc_a"), col("doc_b"),
         graft.functions.FusedSpanScore.score(
@@ -429,14 +292,7 @@ object Scoring {
         col("r.mask_a").as("mask_a"),
         col("r.mask_b").as("mask_b")
       )
-    // branch-merge join: both branches end hash-partitioned on
-    // (doc_a, doc_b); hinting the (narrower) media branch as the hash
-    // build side avoids sorting both pair-grain streams. Left as-is
-    // under bcastReps (that mode's branches are broadcast-join chains).
-    val mediaPair0 = mediaPairScores(candidates, med, w, hint)
-    val mediaPair =
-      if (bcastReps || joinHint == "none") mediaPair0 else mediaPair0.hint(joinHint)
-    val joined = mediaPair
+    val joined = mediaPairScores(candidates, med, w)
       .join(textPair, Seq("doc_a", "doc_b"))
       .withColumn("strong_a", bit_count(col("mask_a")).cast("long"))
       .withColumn("strong_b", bit_count(col("mask_b")).cast("long"))
@@ -444,92 +300,11 @@ object Scoring {
     finishScore(joined, w)
   }
 
-  /** The slim exploded span-pair stream: every span pair of every
-    * candidate doc pair, texts dictionary-encoded to xxhash64 longs
-    * BEFORE the pair joins — neither the two join shuffles nor the
-    * Generate output carry a byte of text (span text was the measured
-    * stage-S memory-bandwidth ceiling at 32 threads). (lt, gt) is the
-    * order-canonicalized tid pair (JW and Levenshtein are symmetric). */
-  private def slimSpanPairs(candidates: DataFrame, txt: DataFrame): DataFrame = {
-    val tids = txt.select(col("doc_id"), transform(col("texts"), t => xxhash64(t)).as("tids"))
+  /** Media branch of [[scoreWithRepsFused]] at pair grain. */
+  private def mediaPairScores(candidates: DataFrame, med: DataFrame, w: Weights): DataFrame = {
     val pairs = candidates.select("doc_a", "doc_b")
-    val paired = pairs
-      .join(tids.select(col("doc_id").as("doc_a"), col("tids").as("tids_a")), "doc_a")
-      .join(tids.select(col("doc_id").as("doc_b"), col("tids").as("tids_b")), "doc_b")
-    val exA = paired.select(
-      col("doc_a"), col("doc_b"), col("tids_b"),
-      posexplode_outer(col("tids_a")).as(Seq("ia", "tia"))
-    )
-    exA
-      .select(
-        col("doc_a"), col("doc_b"), col("ia"), col("tia"),
-        posexplode_outer(col("tids_b")).as(Seq("ib", "tib"))
-      )
-      .withColumn("lt", least(col("tia"), col("tib")))
-      .withColumn("gt", greatest(col("tia"), col("tib")))
-  }
-
-  /** Dictionary of distinct normalized span texts with xxhash64 ids. */
-  def textDict(txt: DataFrame): DataFrame =
-    txt
-      .select(explode(col("texts")).as("t"))
-      .distinct()
-      .select(xxhash64(col("t")).as("tid"), col("t"))
-
-  /** Similarity scores for the DISTINCT unequal text pairs reachable
-    * from `candidates` — the factorized stage-S kernel table. The
-    * fixture's (and any real corpus') span texts repeat heavily across
-    * docs, so the candidate span-pair stream probes the same (ta, tb)
-    * combinations over and over; scoring each distinct pair once turns
-    * the JW/Levenshtein kernel cost from O(span-pair rows) into
-    * O(distinct text pairs). Only pairs clearing the kernel cutoff
-    * survive (everything else contributes exactly nothing to the
-    * aggregate), so the table stays small and broadcast-able. */
-  def textPairScores(
-      candidates: DataFrame,
-      txt: DataFrame,
-      w: Weights = Weights(),
-      dict0: Option[DataFrame] = None
-  ): DataFrame = {
-    val dict = dict0.getOrElse(textDict(txt))
-    // loud guard: a tid collision would silently alias two different
-    // texts (wrong eq-fast-path AND a fan-out in the dict joins). One
-    // tiny aggregate over the distinct-text dictionary.
-    locally {
-      val g = dict.agg(count(lit(1)).as("n"), countDistinct(col("tid")).as("nh")).head()
-      require(g.getLong(0) == g.getLong(1),
-        s"xxhash64 span-text collision (${g.getLong(0)} texts -> ${g.getLong(1)} tids); " +
-          "use scoreWithRepsDirect")
-    }
-    slimSpanPairs(candidates, txt)
-      .where(col("tia") =!= col("tib"))
-      .select("lt", "gt")
-      .distinct()
-      .join(dict.select(col("tid").as("lt"), col("t").as("ta")), "lt")
-      .join(dict.select(col("tid").as("gt"), col("t").as("tb")), "gt")
-      .withColumn("jw", graft.functions.JaroWinklerExpr.jaroWinklerGE(col("ta"), col("tb"), 0.75))
-      .withColumn(
-        "lev_sim",
-        when(
-          col("jw") >= lit(0.75) && col("jw") < lit(w.jwStrong),
-          lit(1.0) - levenshtein(col("ta"), col("tb")).cast("double") /
-            greatest(length(col("ta")), length(col("tb")), lit(1))
-        ).otherwise(lit(0.0))
-      )
-      .where(col("jw") > lit(0.0))
-      .select("lt", "gt", "jw", "lev_sim")
-  }
-
-  /** Media branch at pair grain (shared by both scoring paths). */
-  private def mediaPairScores(
-      candidates: DataFrame,
-      med: DataFrame,
-      w: Weights,
-      hint: DataFrame => DataFrame = identity
-  ): DataFrame = {
-    val pairs = candidates.select("doc_a", "doc_b")
-    val medA = hint(med.select(col("doc_id").as("doc_a"), col("medias").as("medias_a")))
-    val medB = hint(med.select(col("doc_id").as("doc_b"), col("medias").as("medias_b")))
+    val medA = med.select(col("doc_id").as("doc_a"), col("medias").as("medias_a"))
+    val medB = med.select(col("doc_id").as("doc_b"), col("medias").as("medias_b"))
     pairs
       .join(medA, Seq("doc_a"), "left")
       .join(medB, Seq("doc_b"), "left")
@@ -546,7 +321,7 @@ object Scoring {
       )
   }
 
-  /** Final FS combination + decision gate (shared by both paths). */
+  /** Final FS combination + decision gate of [[scoreWithRepsFused]]. */
   private def finishScore(df: DataFrame, w: Weights): DataFrame = {
     val textTerm = when(col("strong_min") >= 2, lit(w.wText2))
       .when(col("strong_min") === 1, lit(w.wText1))
@@ -559,10 +334,11 @@ object Scoring {
       )
   }
 
-  /** The pre-round-4 single-pass path: JW kernel inline over the
-    * text-carrying exploded span-pair stream. Kept as the A/B baseline
-    * and as the fallback for corpora with xxhash64 span-text collisions
-    * (see the guard in [[textPairScores]]). */
+  /** Dictionary-free stage S: the JW kernel inline over the
+    * text-carrying exploded span-pair stream, then one hash aggregate
+    * back to pair grain. The pipeline's fallback when the span-text
+    * dictionary is over `Pipeline.Cfg.dictMaxBytes` (no memory bound),
+    * and the value oracle [[scoreWithRepsFused]] is tested against. */
   def scoreWithRepsDirect(candidates: DataFrame, txt: DataFrame, med: DataFrame, w: Weights = Weights()): DataFrame = {
     val pairs = candidates.select("doc_a", "doc_b")
     val medA = med.select(col("doc_id").as("doc_a"), col("medias").as("medias_a"))

@@ -71,22 +71,9 @@ object PlanAudit {
       val ids = graft.scoring.Scoring.textIdsRep(txt, dict).localCheckpoint(true)
       audit("stage S — scoreWithRepsFused (default): two pair-grain branches, no Generate/aggregate",
         "Text branch: the whole per-pair score — best JW, rescue-Levenshtein, strong-span masks — is ONE " +
-          "codegen'd expression over the two dict-id arrays (FusedSpanScore). Media branch unchanged. " +
-          "Each array payload rides exactly one sort-merge join; branches merge fixed-width at pair grain.",
+          "codegen'd expression over the two dict-id arrays (FusedSpanScore); the media branch left-joins " +
+          "the media sets. Each array payload rides exactly one sort-merge join; branches merge fixed-width at pair grain.",
         graft.scoring.Scoring.scoreWithRepsFused(
-          cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
-      audit("stage S — scoreWithRepsFused + broadcast reps (multi-node knob, off by default)",
-        "Same kernel with every rep frame broadcast: zero shuffle of the pair stream — worth two network " +
-          "shuffles on a real cluster, a measured CPU loss on one box (FusedAB; Cfg.broadcastRepsMaxDocs).",
-        graft.scoring.Scoring.scoreWithRepsFused(
-          cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict),
-          bcastReps = true))
-      audit("stage S — scoreWithRepsDict (int-only exploded span pairs → single hash aggregate)",
-        "Dict-kernel exploded path (A/B baseline for the fused kernel): the stream carries only " +
-          "(ids, span index, text id) ints — " +
-          "no text bytes in any join shuffle or Generate copy; the JW/Levenshtein kernels read the broadcast " +
-          "dictionary; zero-signal rows are filtered BEFORE the aggregate; bit-masks avoid an Expand.",
-        graft.scoring.Scoring.scoreWithRepsDict(
           cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
       audit("stage S — scoreWithRepsDirect (text-carrying fallback)",
         "Inline string kernels over the exploded stream — the unbounded-dictionary fallback; same value " +

@@ -118,6 +118,20 @@ class PipelineSpec extends AnyFunSuite {
       result.clusters.orderBy("doc_id").collect().toSeq)
   }
 
+  test("a dictionary budget over 2 GiB is rejected at entry, before stage B writes") {
+    // the broadcast blob is one byte array: a larger budget would admit
+    // a dictionary that fails to allocate after stage B committed
+    val dirX = Files.createTempDirectory("graft_pipe_dictmax").toString
+    val cfg = Pipeline.Cfg(dictMaxBytes = 3L << 30)
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, docs, dirX, cfg))
+    assert(e.getMessage.contains("dictMaxBytes"), e.getMessage)
+    assert(!new java.io.File(s"$dirX/candidates").exists(), "stage B must not have run")
+    val dirY = Files.createTempDirectory("graft_pipe_dictmax_delta").toString
+    val ed = intercept[IllegalArgumentException](Pipeline.runDelta(spark, docs, docs, dirX, dirY, cfg))
+    assert(ed.getMessage.contains("dictMaxBytes"), ed.getMessage)
+    assert(!new java.io.File(s"$dirY/candidates").exists(), "delta stage B must not have run")
+  }
+
   test("span-sequence invariant: pipeline outputs join back to untouched input spans") {
     // the pipeline carries ids only; re-join clusters to source docs and
     // verify the span sequence (kind, text, media_ref, offset order) is
