@@ -189,12 +189,7 @@ object Bench {
     // --- JIT warmup: the first execution of the generated stage-S code
     // costs ~2x CPU (measured 2819 vs 1377 core-s on identical runs);
     // prime all kernels with an untimed pipeline at the t2 scale ---
-    // pipeline cfg overrides for A/B bisection (defaults = production)
-    val pipeCfg = graft.pipeline.Pipeline.Cfg(
-      blocking = graft.blocking.Blocking.Cfg(
-        fusedMinhash = sys.env.get("SPARK_GRAFT_FUSED_MINHASH").forall(_ != "0")),
-      compactCandidateFiles = sys.env.get("SPARK_GRAFT_COMPACT_FILES").contains("1")
-    )
+    val pipeCfg = graft.pipeline.Pipeline.Cfg()
     locally {
       val (wuDocs, _) = graft.schema.Fixture.ensureWritten(spark, "t2")
       val wuDir = "/tmp/graft_bench_warmup"

@@ -2,7 +2,7 @@ package graft.blocking
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.text.TextOps._
+import graft.text.TextOps.normText
 
 /** Stage B — salted multi-key candidate generation.
   *
@@ -30,17 +30,7 @@ object Blocking {
       bands: Int = 12,
       maxBlockSize: Int = 1000,
       salts: Int = 16,
-      seed: Long = 42L,
-      // fused MinHash kernel (one compiled pass per doc,
-      // functions/MinHashBands.scala) vs the explode→k-min-aggregate
-      // formulation. Bit-identical band keys (BlockingFusedSpec);
-      // the aggregate path is kept as the A/B + audit baseline.
-      fusedMinhash: Boolean = true,
-      // stage-B join strategy for the census-cap join and the pair
-      // self-join: "shuffle_hash" forces hash builds (no sorts),
-      // "none" leaves the planner's sort-merge + AQE. A/B surface
-      // (tools/BlockHintAB); pair set identical either way.
-      joinHint: String = "shuffle_hash"
+      seed: Long = 42L
   ) {
     def rows: Int = minhashK / bands
     require(minhashK % bands == 0, "minhashK must be divisible by bands")
@@ -49,10 +39,10 @@ object Blocking {
   /** Per-doc blocking keys: (doc_id, key_kind, block_key:long).
     * key_kind ∈ {'lsh','media'}.
     *
-    * MinHash shape: explode shingle hashes → one hash-aggregate with k
-    * min() exprs (see TextOps.minhashAggExprs for why not nested array
-    * combinators). The groupBy(doc_id) shuffle moves only k longs per
-    * doc thanks to partial aggregation. */
+    * MinHash shape: one compiled pass per doc (MinHashBands) — rolling
+    * shingle window + k affine minima + band mixing in registers; the
+    * per-doc output is `bands` longs, with no shingle rows and no
+    * shuffle. */
   def docKeys(docs: DataFrame, cfg: Cfg): DataFrame = {
     val texts = transform(
       filter(col("spans"), s => s.getField("kind") === lit("text")),
@@ -63,30 +53,11 @@ object Blocking {
     // the shingle/hash projection is the CPU-heavy stage — make sure it
     // is not fused onto an under-parallel file scan
     val src = graft.util.Parallelism.ensure(docs.select(col("doc_id"), docText.as("dt")))
-    val lsh =
-      if (cfg.fusedMinhash)
-        // one compiled pass per doc: rolling shingle window + k affine
-        // minima + band mixing in registers; per-doc output is `bands`
-        // longs (vs ~len(text) shingle rows through a k-min aggregate)
-        src.select(
-          col("doc_id"),
-          explode(graft.functions.MinHashBands.bandKeys(
-            col("dt"), cfg.shingleN, cfg.minhashK, cfg.bands, cfg.seed)).as("block_key")
-        ).select(col("doc_id"), lit("lsh").as("key_kind"), col("block_key"))
-      else {
-        val shingleRows = src.select(
-          col("doc_id"),
-          explode(shingleHashes(charShingles(col("dt"), cfg.shingleN))).as("h")
-        )
-        val aggs = minhashAggExprs(col("h"), cfg.minhashK, cfg.seed)
-        val sig = shingleRows
-          .groupBy("doc_id")
-          .agg(aggs.head, aggs.tail: _*)
-          .select(col("doc_id"), minhashSigFromAgg(cfg.minhashK).as("sig"))
-        sig
-          .select(col("doc_id"), explode(bandKeys(col("sig"), cfg.bands, cfg.rows)).as("block_key"))
-          .select(col("doc_id"), lit("lsh").as("key_kind"), col("block_key"))
-      }
+    val lsh = src.select(
+      col("doc_id"),
+      explode(graft.functions.MinHashBands.bandKeys(
+        col("dt"), cfg.shingleN, cfg.minhashK, cfg.bands, cfg.seed)).as("block_key")
+    ).select(col("doc_id"), lit("lsh").as("key_kind"), col("block_key"))
 
     val media = graft.util.Parallelism.ensure(docs)
       .select(
@@ -200,19 +171,16 @@ object Blocking {
     // both the cap join and the pair self-join plan as SortMergeJoins
     // and sort the full key table (and the census) per side; the hash
     // build is a per-partition slice (distinct-blocks/partitions rows)
-    // and needs no sort. Equi-joins — row set unchanged (Cfg.joinHint
-    // A/Bs this; tools/BlockHintAB).
-    val h: DataFrame => DataFrame =
-      if (cfg.joinHint == "none") identity else (df: DataFrame) => df.hint(cfg.joinHint)
+    // and needs no sort. Equi-joins — the row set is the same either way.
     val kept = keys
       .join(
-        h(census0.getOrElse(blockSizes(keys)).where(col("block_n") <= cfg.maxBlockSize)),
+        census0.getOrElse(blockSizes(keys)).where(col("block_n") <= cfg.maxBlockSize).hint("shuffle_hash"),
         Seq("key_kind", "block_key"))
       .select("key_kind", "block_key", "doc_id")
 
     val a = kept.select(col("key_kind"), col("block_key"), col("doc_id").as("doc_a"))
     val b = kept.select(col("key_kind"), col("block_key"), col("doc_id").as("doc_b"))
-    val raw = a.join(h(b), Seq("key_kind", "block_key"))
+    val raw = a.join(b.hint("shuffle_hash"), Seq("key_kind", "block_key"))
       // salt over BOTH ids (applied inside dedupWitness): a hot doc_a's
       // pairs must spread across salt buckets (a doc_a-only salt is
       // constant per hot doc and cannot split its pair mass)
@@ -257,16 +225,16 @@ object Blocking {
       .select(col("key_kind"), col("block_key"), col("doc_id"), lit(true).as("is_new"))
       .unionByName(oldInTouched)
 
-    val h: DataFrame => DataFrame =
-      if (cfg.joinHint == "none") identity else (df: DataFrame) => df.hint(cfg.joinHint)
     val kept = u
-      .join(h(blockSizes(u.select("key_kind", "block_key", "doc_id")).where(col("block_n") <= cfg.maxBlockSize)),
+      .join(
+        blockSizes(u.select("key_kind", "block_key", "doc_id")).where(col("block_n") <= cfg.maxBlockSize)
+          .hint("shuffle_hash"),
         Seq("key_kind", "block_key"))
       .select("key_kind", "block_key", "doc_id", "is_new")
 
     val a = kept.select(col("key_kind"), col("block_key"), col("doc_id").as("doc_a"), col("is_new").as("new_a"))
     val b = kept.select(col("key_kind"), col("block_key"), col("doc_id").as("doc_b"), col("is_new").as("new_b"))
-    val raw = a.join(h(b), Seq("key_kind", "block_key"))
+    val raw = a.join(b.hint("shuffle_hash"), Seq("key_kind", "block_key"))
       .where(col("doc_a") < col("doc_b") && (col("new_a") || col("new_b")))
     // kinds from the NEW keys only (delta-sized scan): every touched
     // block's (key_kind, block_key) appears among the new keys by the

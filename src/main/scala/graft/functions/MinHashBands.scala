@@ -10,7 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused MinHash/LSH band keys: normalized text → the `bands` LSH band
   * keys in ONE compiled pass, bit-identical to the declarative chain
   * `bandKeys(minhashAgg(explode(shingleHashes(charShingles(t, n)))))`
-  * (TextOps.scala / Blocking.docKeys).
+  * (TextOps.scala; BlockingFusedSpec holds that formulation as the
+  * reference).
   *
   * Why: the exploded formulation pushes ~len(text) shingle-hash rows
   * per doc through a Generate and a k-column min() hash aggregate —
@@ -37,6 +38,18 @@ import org.apache.spark.unsafe.types.UTF8String
 object MinHashKernel {
 
   private val P = 2147483647L // Mersenne 2^31 − 1, TextOps.mersennePrime
+
+  /** x mod P for P = 2^31 − 1 without the 64-bit division (round 6;
+    * the idiv was the inner-loop bottleneck at k=48 per shingle):
+    * 2^31 ≡ 1 (mod P), so folding the high bits into the low 31
+    * preserves the residue. For any non-negative long, two folds bring
+    * x to [0, P + 3] and one conditional subtract finishes — EXACTLY
+    * floorMod(x, P) (BlockingFusedSpec checks it over [0, Long.MaxValue]). */
+  private[graft] def modP(x: Long): Long = {
+    var v = (x & P) + (x >>> 31)
+    v = (v & P) + (v >>> 31)
+    if (v >= P) v - P else v
+  }
 
   /** `offsets(i)` = byte offset of char i (length nc+1) — only built
     * for non-ASCII inputs; normText output is ASCII in practice. */
@@ -67,18 +80,8 @@ object MinHashKernel {
       val hm = java.lang.Math.floorMod(h, P)
       var j = 0
       while (j < k) {
-        // x mod P for P = 2^31 − 1 without the 64-bit division
-        // (round 6; the idiv was the inner-loop bottleneck at k=48 per
-        // shingle): 2^31 ≡ 1 (mod P), so folding the high bits into
-        // the low 31 preserves the residue. x = hm·a + b < 2^62 and
-        // nonneg (hm < P, a < P, b < P), so two folds bring it to
-        // [0, 2^31] and one conditional subtract finishes — EXACTLY
-        // floorMod(x, P) on this range (BlockingFusedSpec asserts
-        // bit-equality against the declarative pmod chain).
-        val x = hm * as_(j) + bs(j)
-        var v = (x & P) + (x >>> 31)
-        v = (v & P) + (v >>> 31)
-        if (v >= P) v -= P
+        // hm·a + b < 2^62 and non-negative (hm, a, b < P)
+        val v = modP(hm * as_(j) + bs(j))
         if (v < mins(j)) mins(j) = v
         j += 1
       }

@@ -77,17 +77,6 @@ object Pipeline {
       // single byte array. Default 2 GiB ≈ a third of a 6 GiB executor
       // heap; bench sf0.1 uses ~200 MB.
       dictMaxBytes: Long = 2L << 30,
-      // compact the chunk-partitioned candidates checkpoint to exactly
-      // scoreChunks files (one repartition on the chunk column before
-      // the write; each writer task then owns one chunk dir). The
-      // default layout writes up to tasks×scoreChunks files — fine on
-      // healthy storage, but the ab_r5 A/B showed the ~8× file/commit
-      // count is the pipeline's sensitivity to degraded sync/writeback
-      // (HEAD lost ~300 s/run to it in that mode). Turn on where
-      // commits are expensive (object stores, degraded disks); off by
-      // default because the extra shuffle + 8-task write serialization
-      // costs more than it saves on healthy local disk.
-      compactCandidateFiles: Boolean = false,
       // persist the two artifacts a later incremental run (runDelta)
       // consumes: the per-doc blocking key table (`keys` — so delta
       // blocking joins new keys against it instead of re-shingling the
@@ -115,10 +104,33 @@ object Pipeline {
     * budget above 2 GiB would admit a dictionary that cannot be
     * allocated — failing after stage B committed instead of falling
     * back to the direct kernels. At 2 GiB, bytes + 32·n ≤ 2³¹ already
-    * keeps the blob within Int.MaxValue. */
-  private def requireValid(cfg: Cfg): Unit =
+    * keeps the blob within Int.MaxValue. `scoreChunks` sizes stage S's
+    * chunk pool, so it must be positive. */
+  private def requireValid(cfg: Cfg): Unit = {
     require(cfg.dictMaxBytes <= (2L << 30),
       s"Cfg.dictMaxBytes must be at most 2 GiB (${2L << 30} bytes), got ${cfg.dictMaxBytes}")
+    require(cfg.scoreChunks >= 1, s"Cfg.scoreChunks must be at least 1, got ${cfg.scoreChunks}")
+  }
+
+  /** Doc-id guard shared by [[run]] (over the input) and [[runDelta]]
+    * (over the increment), called at the start of stage B's compute so
+    * a bad id fails before any pair is written, not after stages S and
+    * C consumed it. One aggregate over the `doc_id` column per fresh
+    * run. Null ids are rejected in every id mode: hash mode would
+    * encode all of them to xxhash64(null) = 42, dense mode would drop
+    * them at the dictionary join. The collision check is hash-only: at
+    * 10¹² ids use dictMode = "dense" (collisions become certain at that
+    * scale); dense ids are unique by construction. */
+  private def requireValidIds(docs0: DataFrame, idMode: String, what: String): Unit = {
+    val hash = idMode == "hash"
+    val aggs = (count(lit(1)) - count(col("doc_id"))) +:
+      (if (hash) Seq(countDistinct(col("doc_id")), countDistinct(xxhash64(col("doc_id")))) else Nil)
+    val g = docs0.agg(aggs.head, aggs.tail: _*).head()
+    require(g.getLong(0) == 0L, s"${g.getLong(0)} $what rows have a null doc_id")
+    if (hash) require(g.getLong(1) == g.getLong(2),
+      s"xxhash64 doc_id collision among $what docs (${g.getLong(1)} ids -> ${g.getLong(2)} hashes); " +
+        "rerun with dictIds=false")
+  }
 
   /** Checkpoint-stage writer shared by [[run]] and [[runDelta]]: write
     * to `runDir/name` with `_SUCCESS`-gated idempotent resume, lineage
@@ -137,7 +149,7 @@ object Pipeline {
     * concurrent FileOutputCommitter runs on one path collide in
     * `_temporary/0`), and [[await]] rethrows any background failure
     * before the pipeline returns, so a caller still observes every
-    * guard/metric error — at the end of the run instead of at the
+    * metric error — at the end of the run instead of at the
     * stage boundary. Crash-window semantics are unchanged in kind: a
     * kill between a stage `_SUCCESS` and its metrics append already
     * lost the metrics rows before this change; the window is merely
@@ -303,18 +315,12 @@ object Pipeline {
           java.nio.file.Files.writeString(marker, cfg.scoreChunks.toString)
         }
       }
-      // chunks are independent jobs — submit them CONCURRENTLY so the
-      // scheduler backfills each job's shuffle/commit barriers with the
-      // other chunks' tasks (sequential chunks left cores idle at every
-      // barrier: measured 0.56 scaling efficiency 8→32 before this)
-      // fail at config read with the env var named, not mid-run with a
-      // bare NumberFormatException after blocking already committed
-      val conc = sys.env.get("SPARK_GRAFT_SCORE_CONC").map { s =>
-        scala.util.Try(s.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SCORE_CONC must be an integer, got '$s'"))
-      }.getOrElse(math.min(cfg.scoreChunks, 8))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, conc))
+      // chunks are independent jobs — submit them CONCURRENTLY, up to
+      // 8 at a time, so the scheduler backfills each job's
+      // shuffle/commit barriers with the other chunks' tasks
+      // (sequential chunks left cores idle at every barrier: measured
+      // 0.56 scaling efficiency 8→32 before this)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(cfg.scoreChunks, 8))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       val futs = (0 until cfg.scoreChunks).map { i =>
@@ -387,13 +393,6 @@ object Pipeline {
     }
 
     val ck = new Ckpt(spark, runDir, runId)
-    def stage(
-        name: String,
-        metrics: (DataFrame, Long) => Seq[(String, Double)] = (_, _) => Nil,
-        partitionCols: Seq[String] = Nil
-    )(
-        compute: => DataFrame
-    ): DataFrame = ck.stage(name, metrics, partitionCols)(compute)
 
     // internal long ids (see Cfg.dictIds/dictMode); the checkpointed
     // clusters table and the Result accessors expose original string
@@ -403,7 +402,7 @@ object Pipeline {
     // range-sorted then zipWithIndex (two narrow jobs, one shuffle of
     // the id column; no global single-partition sort). Checkpointed
     // first so every later stage and resume reads the SAME dictionary.
-    lazy val denseDict = stage("id_dict") {
+    lazy val denseDict = ck.stage("id_dict") {
       import spark.implicits._
       docs0.select("doc_id").distinct()
         .repartitionByRange(col("doc_id"))
@@ -419,7 +418,9 @@ object Pipeline {
       case "dense" => denseDict
       case _ => docs0.select(col("doc_id").as("orig_id"), xxhash64(col("doc_id")).as("nid")).distinct()
     }).localCheckpoint(true)
-    val docs = idMode match {
+    // lazy: in dense mode this forces stage B0, which must come after
+    // the doc-id guard at the start of the candidates stage
+    lazy val docs = idMode match {
       case "off" => docs0
       case "hash" => docs0.withColumn("doc_id", xxhash64(col("doc_id")))
       case "dense" =>
@@ -455,21 +456,9 @@ object Pipeline {
     // drop-accounting metrics (dropMetrics previously re-aggregated
     // the whole key table a second time)
     lazy val census = Blocking.blockSizes(keys).localCheckpoint(true)
-    val candidates = stage(
+    val candidates = ck.stage(
       "candidates",
       (_, total) => {
-        if (idMode == "hash") {
-          // loud collision guard: one pruned single-column pass per
-          // fresh run; at 10¹² ids use dictMode = "dense" (collisions
-          // become certain at that scale). Dense ids need no guard —
-          // unique by construction.
-          val ids = docs0.agg(
-            countDistinct(col("doc_id")).as("n"),
-            countDistinct(xxhash64(col("doc_id"))).as("nh")
-          ).head()
-          require(ids.getLong(0) == ids.getLong(1),
-            s"xxhash64 doc_id collision (${ids.getLong(0)} ids -> ${ids.getLong(1)} hashes); rerun with dictIds=false")
-        }
         val drops = Blocking.dropMetrics(keys, cfg.blocking, Some(census)).head()
         Seq(
           "candidate_pairs" -> total.toDouble,
@@ -490,10 +479,9 @@ object Pipeline {
       // pmod predicate is layout-independent).
       partitionCols = Seq(chunkCol)
     ) {
-      val base = Blocking.candidatesFromKeys(keys, cfg.blocking, Some(census))
+      requireValidIds(docs0, idMode, "input")
+      Blocking.candidatesFromKeys(keys, cfg.blocking, Some(census))
         .withColumn(chunkCol, pmod(col("salt"), lit(cfg.scoreChunks)).cast("int"))
-      if (cfg.compactCandidateFiles) base.repartition(cfg.scoreChunks, col(chunkCol))
-      else base
     }
     // a resumed run must still end up delta-capable: force the keys
     // stage (idempotent) even when the candidates checkpoint was hit,
@@ -513,7 +501,7 @@ object Pipeline {
     // Stage C
     graft.util.PhaseTracker.set("clustering")
     var ccIters = -1
-    val clusters = stage(
+    val clusters = ck.stage(
       "clusters",
       // row count from the lineage pass; distinct-cluster count is one
       // pruned single-column aggregate (was: two separate full count
@@ -771,16 +759,10 @@ object Pipeline {
         .reduce(_.unionByName(_))
     }
     val keysNew = ck.stage("keys_new") {
-      // loud guards, both delta-sized: new ids must not collide with
-      // each other or the prior corpus (hash mode), and must be NEW
-      // (delta adds docs; upsert of an existing doc needs a retract,
-      // which increments cannot express)
-      if (idMode == "hash") {
-        val g = newDocs0.agg(
-          countDistinct(col("doc_id")).as("n"),
-          countDistinct(xxhash64(col("doc_id"))).as("nh")).head()
-        require(g.getLong(0) == g.getLong(1), "xxhash64 doc_id collision among new docs")
-      }
+      // loud guards, both delta-sized: new ids must be valid (see
+      // requireValidIds) and must be NEW (delta adds docs; upsert of an
+      // existing doc needs a retract, which increments cannot express)
+      requireValidIds(newDocs0, idMode, "new")
       val overlap = docsNew.select("doc_id")
         .join(spark.read.parquet(s"$priorRunDir/cc_assign").select("doc_id"), Seq("doc_id"), "left_semi")
         .count()
@@ -798,10 +780,8 @@ object Pipeline {
       ),
       partitionCols = Seq(chunkCol)
     ) {
-      val base = Blocking.deltaCandidates(keysNew, priorKeys, cfg.blocking)
+      Blocking.deltaCandidates(keysNew, priorKeys, cfg.blocking)
         .withColumn(chunkCol, pmod(col("salt"), lit(cfg.scoreChunks)).cast("int"))
-      if (cfg.compactCandidateFiles) base.repartition(cfg.scoreChunks, col(chunkCol))
-      else base
     }
     // NO merged key table: the delta dir's `keys_new` plus the
     // `_parents` chain IS the key table for the next increment (see

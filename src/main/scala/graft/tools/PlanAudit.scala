@@ -55,10 +55,6 @@ object PlanAudit {
       "One compiled pass per doc (MinHashBands expression): rolling shingle window + k affine minima + " +
         "band mixing in registers — NO shuffle, no k-min aggregate; scan reads only (doc_id, spans).",
       keys)
-    audit("stage B — docKeys (explode → k-min aggregate baseline)",
-      "The pre-fusion formulation: shingle Generate + one shuffle for the per-doc signature aggregate. " +
-        "Bit-identical keys (BlockingFusedSpec); kept as the A/B baseline.",
-      graft.blocking.Blocking.docKeys(docs, graft.blocking.Blocking.Cfg(fusedMinhash = false)))
     val keysM = keys.localCheckpoint(true)
     audit("stage B — candidatesFromKeys (census + salted pair self-join)",
       "Census join + self-join + canonical dedup aggregate + range repartition over the materialized key table.",

@@ -1,9 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalacheck.{Gen, Prop}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
+import graft.functions.MinHashKernel
 import graft.schema.{Doc, Fixture, Span}
+import graft.text.TextOps
 
 /** The fused MinHash kernel (functions/MinHashBands.scala) must emit
   * BIT-IDENTICAL (doc_id, key_kind, block_key) rows to the
@@ -16,11 +20,35 @@ class BlockingFusedSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
-  private def keySet(docs: org.apache.spark.sql.DataFrame, fused: Boolean): Set[(String, String, Long)] =
-    Blocking.docKeys(docs, Blocking.Cfg(fusedMinhash = fused))
+  /** The explode→k-min-aggregate formulation of Blocking.docKeys' lsh
+    * keys, built from the TextOps primitives: shingle hashes exploded
+    * to rows, one k-column min() aggregate per doc, then the band keys
+    * of the signature. Media keys come from Blocking.docKeys itself. */
+  private def aggregateKeys(docs: DataFrame, cfg: Blocking.Cfg): DataFrame = {
+    import TextOps._
+    val texts = transform(
+      filter(col("spans"), s => s.getField("kind") === lit("text")),
+      s => s.getField("text"))
+    val shingleRows = docs.select(
+      col("doc_id"),
+      explode(shingleHashes(charShingles(normText(array_join(texts, " ")), cfg.shingleN))).as("h"))
+    val aggs = minhashAggExprs(col("h"), cfg.minhashK, cfg.seed)
+    val lsh = shingleRows
+      .groupBy("doc_id")
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id"), minhashSigFromAgg(cfg.minhashK).as("sig"))
+      .select(col("doc_id"), lit("lsh").as("key_kind"),
+        explode(bandKeys(col("sig"), cfg.bands, cfg.rows)).as("block_key"))
+    lsh.unionByName(Blocking.docKeys(docs, cfg).where(col("key_kind") === "media"))
+  }
+
+  private def keySet(docs: DataFrame, fused: Boolean): Set[(String, String, Long)] = {
+    val cfg = Blocking.Cfg()
+    (if (fused) Blocking.docKeys(docs, cfg) else aggregateKeys(docs, cfg))
       .collect()
       .map(r => (r.getAs[String]("doc_id"), r.getAs[String]("key_kind"), r.getAs[Long]("block_key")))
       .toSet
+  }
 
   test("fused band keys equal the aggregate path exactly on the t1 fixture") {
     val docs = Fixture.docs(spark, Fixture.scales("t1")).toDF()
@@ -76,5 +104,24 @@ class BlockingFusedSpec extends AnyFunSuite {
         col("dt"), cfg.shingleN, cfg.minhashK, cfg.bands, cfg.seed)).as("bk")
     ).collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(fused == declarative)
+  }
+
+  test("Mersenne fold equals floorMod(x, P) for every non-negative long") {
+    val p = TextOps.mersennePrime
+    val edges = Seq(0L, p - 1, p, 1L << 31, 2 * p, (p - 1) * (p - 1) + (p - 1), Long.MaxValue)
+    edges.foreach { x =>
+      assert(MinHashKernel.modP(x) == java.lang.Math.floorMod(x, p), s"x=$x")
+    }
+    PropCheck.check(
+      // the whole non-negative range, plus the kernel's own operand
+      // range floorMod(h, P)·a + b ≤ (P−1)² + (P−1) and the [0, 4P) band;
+      // no shrinking, because Long shrinks step outside the domain
+      Prop.forAllNoShrink(Gen.oneOf(
+        Gen.chooseNum(0L, Long.MaxValue),
+        Gen.chooseNum(0L, (p - 1) * (p - 1) + (p - 1)),
+        Gen.chooseNum(0L, 4 * p))) { x =>
+        MinHashKernel.modP(x) == java.lang.Math.floorMod(x, p)
+      },
+      minSuccessful = 100000)
   }
 }

@@ -159,6 +159,17 @@ class PipelineDeltaSpec extends AnyFunSuite {
     assert(e3.getMessage.contains("cannot upsert"))
   }
 
+  test("a null doc_id in the increment is rejected at delta stage B, before candidates are written") {
+    prior // the delta needs a completed prior
+    val first = docsB.select("doc_id").orderBy("doc_id").head().getString(0)
+    val bad = docsB.withColumn("doc_id",
+      when(col("doc_id") === first, lit(null).cast("string")).otherwise(col("doc_id")))
+    val dirN = dir("nullid")
+    val e = intercept[IllegalArgumentException](Pipeline.runDelta(spark, docsA, bad, dirPrior, dirN))
+    assert(e.getMessage.contains("null doc_id"), e.getMessage)
+    assert(!new java.io.File(s"$dirN/candidates").exists(), "delta stage B must not have written candidates")
+  }
+
   test("_parents pin: resuming a delta dir against a different prior fails loudly") {
     d1 // dirD1 holds a completed delta run against dirPrior
     // a second delta-capable prior for the same increment

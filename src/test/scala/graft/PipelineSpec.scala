@@ -92,20 +92,9 @@ class PipelineSpec extends AnyFunSuite {
     // fall back from fused to direct (no broadcast collect, no text_ids
     // stage), record the decision, and produce value-identical output
     val dirG = Files.createTempDirectory("graft_pipe_dictgate").toString
-    // piggyback compactCandidateFiles on the same run (one pipeline
-    // execution covers both knobs' value-identity)
-    val gated = Pipeline.run(spark, docs, dirG,
-      Pipeline.Cfg(dictMaxBytes = 1L, compactCandidateFiles = true))
+    val gated = Pipeline.run(spark, docs, dirG, Pipeline.Cfg(dictMaxBytes = 1L))
     assert(!new java.io.File(s"$dirG/text_ids/_SUCCESS").exists(),
       "fallback run must not build the dictionary-id rep")
-    // compact layout: exactly one data file per chunk dir
-    val chunkDirs = new java.io.File(s"$dirG/candidates").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("chunk_"))
-    assert(chunkDirs.nonEmpty)
-    chunkDirs.foreach { d =>
-      val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(parts == 1, s"${d.getName}: expected 1 compacted file, found $parts")
-    }
     val m = spark.read.parquet(s"$dirG/metrics")
     assert(m.where(col("name") === "dict_fallback" && col("value") === 1.0).count() == 1,
       "fallback must be recorded in the metrics table")
@@ -130,6 +119,34 @@ class PipelineSpec extends AnyFunSuite {
     val ed = intercept[IllegalArgumentException](Pipeline.runDelta(spark, docs, docs, dirX, dirY, cfg))
     assert(ed.getMessage.contains("dictMaxBytes"), ed.getMessage)
     assert(!new java.io.File(s"$dirY/candidates").exists(), "delta stage B must not have run")
+  }
+
+  test("scoreChunks below 1 is rejected at entry, before stage B writes") {
+    // scoreChunks sizes the stage-S chunk pool; 0 would fail only after
+    // stage B committed (or, clamped, score no pairs at all)
+    val dirZ = Files.createTempDirectory("graft_pipe_chunks0").toString
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, docs, dirZ, Pipeline.Cfg(scoreChunks = 0)))
+    assert(e.getMessage.contains("scoreChunks"), e.getMessage)
+    assert(!new java.io.File(s"$dirZ/candidates").exists(), "stage B must not have run")
+  }
+
+  test("a null doc_id is rejected at stage B, before candidates are written") {
+    // xxhash64(null) = 42, so a null id also shows up as one extra
+    // distinct hash: the guard must name the null, not a "collision",
+    // and must fire before stage B writes anything
+    val first = docs.select("doc_id").orderBy("doc_id").head().getString(0)
+    val bad = docs.withColumn("doc_id",
+      when(col("doc_id") === first, lit(null).cast("string")).otherwise(col("doc_id")))
+    // every id mode: hash (default), dense (whose stage-B0 dictionary
+    // must not be written either) and off
+    Seq(Pipeline.Cfg(), Pipeline.Cfg(dictMode = "dense"), Pipeline.Cfg(dictIds = false)).foreach { cfg =>
+      val dirN = Files.createTempDirectory("graft_pipe_nullid").toString
+      val e = intercept[IllegalArgumentException](Pipeline.run(spark, bad, dirN, cfg))
+      assert(e.getMessage.contains("null doc_id"), e.getMessage)
+      Seq("id_dict", "candidates").foreach { s =>
+        assert(!new java.io.File(s"$dirN/$s").exists(), s"$cfg: stage B must not have written $s")
+      }
+    }
   }
 
   test("span-sequence invariant: pipeline outputs join back to untouched input spans") {
