@@ -294,7 +294,7 @@ object Bench {
       (math.min(diskW0, diskW1) > 0 &&
         math.min(diskW0, diskW1) < hp.DiskWFloorMBps) -> "disk_w",
       // loaded-steal mode: host withheld CPU under the pre-run burn
-      // (threshold shared with tools.Weather; clean ladder reading
+      // (threshold from util.HostProbe; clean ladder reading
       // 0.03 cores at 8 threads, degraded 0.6-2.1 at 16-32)
       (loadSteal0 > hp.StealRateMax) -> "steal_under_load"
     ).collect { case (true, r) => r }

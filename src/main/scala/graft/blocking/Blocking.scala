@@ -84,17 +84,13 @@ object Blocking {
     * with a deterministic witness key (min (key_kind, block_key)) so the
     * checkpointed table is byte-stable across reruns.
     *
-    * `materialize` pins the per-doc key table before it is read three
+    * The per-doc key table is pinned before it is read three
     * times (census + both self-join sides) — without it the whole
     * MinHash subtree executes 3×, measured as 81% of end-to-end wall
-    * time at the bench scale. Locally a localCheckpoint; on a cluster
-    * this is the stage-B1 keys table checkpoint. */
-  def candidates(
-      docs: DataFrame,
-      cfg: Cfg,
-      materialize: DataFrame => DataFrame = _.localCheckpoint(true)
-  ): DataFrame =
-    candidatesFromKeys(materialize(docKeys(docs, cfg)), cfg)
+    * time at the bench scale. [[graft.pipeline.Pipeline.run]] builds
+    * the same pairs from its own pinned (or checkpointed) key table. */
+  def candidates(docs: DataFrame, cfg: Cfg): DataFrame =
+    candidatesFromKeys(docKeys(docs, cfg).localCheckpoint(true), cfg)
 
   /** The distinct key kinds of a key table, sorted by UTF-8 byte order
     * (= Spark's string comparison) — the witness dedup enumerates them

@@ -105,11 +105,16 @@ object Pipeline {
     * allocated — failing after stage B committed instead of falling
     * back to the direct kernels. At 2 GiB, bytes + 32·n ≤ 2³¹ already
     * keeps the blob within Int.MaxValue. `scoreChunks` sizes stage S's
-    * chunk pool, so it must be positive. */
-  private def requireValid(cfg: Cfg): Unit = {
+    * chunk pool, so it must be positive. Returns the internal id space
+    * the Cfg selects: "off" (string ids), "hash" or "dense" (see
+    * Cfg.dictIds/dictMode). */
+  private def requireValid(cfg: Cfg): String = {
     require(cfg.dictMaxBytes <= (2L << 30),
       s"Cfg.dictMaxBytes must be at most 2 GiB (${2L << 30} bytes), got ${cfg.dictMaxBytes}")
     require(cfg.scoreChunks >= 1, s"Cfg.scoreChunks must be at least 1, got ${cfg.scoreChunks}")
+    val idMode = if (!cfg.dictIds) "off" else cfg.dictMode
+    require(Set("off", "hash", "dense").contains(idMode), s"unknown dictMode '${cfg.dictMode}'")
+    idMode
   }
 
   /** Doc-id guard shared by [[run]] (over the input) and [[runDelta]]
@@ -130,6 +135,123 @@ object Pipeline {
     if (hash) require(g.getLong(1) == g.getLong(2),
       s"xxhash64 doc_id collision among $what docs (${g.getLong(1)} ids -> ${g.getLong(2)} hashes); " +
         "rerun with dictIds=false")
+  }
+
+  /** The trimmed content of the marker file `dir/name`, if it exists. */
+  private def marker(dir: String, name: String): Option[String] = {
+    val p = java.nio.file.Paths.get(s"$dir/$name")
+    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p).trim) else None
+  }
+
+  private def writeMarker(dir: String, name: String, value: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"), value)
+  }
+
+  /** The id mode recorded in `dir`'s `_dictids` marker, if it has one
+    * ("true"/"false" are the legacy hash/off markers). */
+  private def markedIdMode(dir: String): Option[String] =
+    marker(dir, "_dictids").map {
+      case "true" => "hash"
+      case "false" => "off"
+      case m => m
+    }
+
+  /** id-encoding marker: checkpoints written under a different id
+    * encoding are incompatible (long nids vs string ids, or hash vs
+    * dense longs) — resuming across the mismatch would silently join
+    * nothing. Fail loudly like _chunks; a fresh dir gets the marker. */
+  private def pinIdMode(runDir: String, idMode: String): Unit = markedIdMode(runDir) match {
+    case Some(prior) =>
+      require(prior == idMode,
+        s"run dir $runDir was written with id mode '$prior' but this run uses '$idMode'; " +
+          "use a fresh run dir or match the setting")
+    case None => writeMarker(runDir, "_dictids", idMode)
+  }
+
+  /** A run's internal id space: `mode` plus the (orig_id, nid)
+    * dictionary that decodes it at the output boundary. `map` is built
+    * (and pinned) on first use only. */
+  private final class IdSpace(mode: String, map: => DataFrame) {
+    private lazy val idMap = map
+
+    /** Internal long ids back to the input's string ids, one join per
+      * id column; identity when ids were never encoded. */
+    def back(df: DataFrame, idCols: Seq[String]): DataFrame =
+      if (mode == "off") df
+      else idCols.foldLeft(df) { (d, c) =>
+        d.join(idMap.select(col("nid").as(c), col("orig_id").as(s"${c}__s")), c)
+          .drop(c)
+          .withColumnRenamed(s"${c}__s", c)
+      }
+  }
+
+  /** Scoring-chunk partition column (see [[candidatesStage]]). */
+  private def chunkCol(cfg: Cfg): String = s"chunk_${cfg.scoreChunks}"
+
+  /** Stage B's checkpoint, shared by [[run]] and [[runDelta]]:
+    * `pairs` written directory-partitioned by scoring chunk. Each
+    * chunk job's filter becomes partition PRUNING instead of a pmod
+    * predicate parquet cannot push down — without this every one of
+    * the scoreChunks jobs decoded the FULL candidate table (8×
+    * redundant scan decode at bench scale). The modulus is baked into
+    * the COLUMN NAME (chunk_<scoreChunks>), so the layout
+    * self-describes atomically with the data: a resume under a
+    * different scoreChunks simply doesn't find its column and falls
+    * back to the always-correct pmod-on-salt filter (the chunk dirs
+    * partition the same rows, so scanning all of them with the pmod
+    * predicate is layout-independent). */
+  private def candidatesStage(ck: Ckpt, cfg: Cfg, metrics: (DataFrame, Long) => Seq[(String, Double)])(
+      pairs: => DataFrame
+  ): DataFrame =
+    ck.stage("candidates", metrics, partitionCols = Seq(chunkCol(cfg))) {
+      pairs.withColumn(chunkCol(cfg), pmod(col("salt"), lit(cfg.scoreChunks)).cast("int"))
+    }
+
+  /** Metrics of the clusters stage: the row count comes from the
+    * lineage pass, the distinct-cluster count is one pruned
+    * single-column aggregate. `ccIters` is read when the background
+    * metrics run, after the stage's compute has set it. */
+  private def clusterMetrics(ccIters: => Int)(out: DataFrame, total: Long): Seq[(String, Double)] = Seq(
+    "docs" -> total.toDouble,
+    "clusters" -> out.agg(countDistinct(col("cluster_id"))).head().getLong(0).toDouble,
+    "cc_iterations" -> ccIters.toDouble
+  )
+
+  /** Stage C2 and the output boundary: aggregate-evidence singleton
+    * attachment (see Attach) over the pre-attach assignments, then
+    * dictionary decode — the stored clusters table is user-facing and
+    * carries original ids (cluster_id = the doc_id of the min-nid
+    * member; deterministic, so resume stays byte-stable). */
+  private def attachedClusters(ids: IdSpace, assign: DataFrame, evidence: DataFrame): DataFrame =
+    ids.back(Attach.attachSingletons(assign, evidence), Seq("doc_id", "cluster_id"))
+      .repartitionByRange(col("cluster_id"), col("doc_id"))
+
+  /** Return path of [[run]] and [[runDelta]]: the background
+    * lineage/metrics barrier (the metrics table must be complete, and
+    * any guard failure surfaced, before the run returns), then the
+    * decoded Result. Drops EVERY chunk_<n> column, not just the current
+    * modulus: a candidates checkpoint resumed under a different
+    * scoreChunks carries its writer's chunk_<old> partition column,
+    * which would otherwise leak into Result.candidates and change its
+    * schema between a fresh run and a resume. */
+  private def finish(
+      ck: Ckpt,
+      ids: IdSpace,
+      candidates: DataFrame,
+      scored: DataFrame,
+      clusters: DataFrame,
+      ccIters: Int
+  ): Result = {
+    graft.util.PhaseTracker.set("other")
+    ck.await()
+    val chunkCols = candidates.columns.filter(_.matches("chunk_\\d+"))
+    Result(
+      ids.back(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
+      ids.back(scored, Seq("doc_a", "doc_b")),
+      clusters,
+      ccIters
+    )
   }
 
   /** Checkpoint-stage writer shared by [[run]] and [[runDelta]]: write
@@ -154,7 +276,7 @@ object Pipeline {
     * kill between a stage `_SUCCESS` and its metrics append already
     * lost the metrics rows before this change; the window is merely
     * wider, and a resume recomputes nothing either way. */
-  private final class Ckpt(spark: SparkSession, runDir: String, runId: String) {
+  private final class Ckpt(val spark: SparkSession, val runDir: String, runId: String) {
     private val metaLock = new Object
     private val pending = new java.util.concurrent.ConcurrentLinkedQueue[scala.concurrent.Future[Unit]]()
     private val metaPool = {
@@ -225,14 +347,10 @@ object Pipeline {
     * [[runDelta]]; see the inline comments at each block. Returns the
     * scored-pairs frame (chunk column dropped). */
   private def scoreStage(
-      spark: SparkSession,
       ck: Ckpt,
-      runDir: String,
-      runId: String,
       cfg: Cfg,
       docs: DataFrame,
       candidates: DataFrame,
-      chunkCol: String,
       // media df-fraction table override (media_ref, dffrac): runDelta
       // passes the MERGED corpus statistics so pairs scored over the
       // touched slice see the same media rarity a full run over the
@@ -240,7 +358,8 @@ object Pipeline {
       // delta scores diverge from the full-run contract.
       mediaDfFrac: Option[DataFrame] = None
   ): DataFrame = {
-    val chunkPruned = candidates.columns.contains(chunkCol)
+    import ck.{runDir, spark}
+    val chunkPruned = candidates.columns.contains(chunkCol(cfg))
     graft.util.PhaseTracker.set("scoring")
 
     // Stage S — pair-level resumable scoring: chunk by pmod(salt, n);
@@ -300,50 +419,68 @@ object Pipeline {
       // scoreChunks would silently duplicate scored pairs on resume.
       // Mismatch => the old partition of the pair set is incompatible;
       // drop all chunk dirs and start the stage over.
-      locally {
-        val marker = java.nio.file.Paths.get(s"$scoredPath/_chunks")
-        val prior =
-          if (java.nio.file.Files.exists(marker))
-            scala.util.Try(java.nio.file.Files.readString(marker).trim.toInt).toOption
-          else None
-        if (!prior.contains(cfg.scoreChunks)) {
-          val d = new java.io.File(scoredPath)
-          if (d.exists()) d.listFiles().filter(_.getName.startsWith("chunk=")).foreach { f =>
-            org.apache.commons.io.FileUtils.deleteQuietly(f)
-          }
-          java.nio.file.Files.createDirectories(marker.getParent)
-          java.nio.file.Files.writeString(marker, cfg.scoreChunks.toString)
+      if (!marker(scoredPath, "_chunks").contains(cfg.scoreChunks.toString)) {
+        val d = new java.io.File(scoredPath)
+        if (d.exists()) d.listFiles().filter(_.getName.startsWith("chunk=")).foreach { f =>
+          org.apache.commons.io.FileUtils.deleteQuietly(f)
         }
+        writeMarker(scoredPath, "_chunks", cfg.scoreChunks.toString)
       }
       // chunks are independent jobs — submit them CONCURRENTLY, up to
       // 8 at a time, so the scheduler backfills each job's
       // shuffle/commit barriers with the other chunks' tasks
       // (sequential chunks left cores idle at every barrier: measured
-      // 0.56 scaling efficiency 8→32 before this)
+      // 0.56 scaling efficiency 8→32 before this).
+      // Every chunk job carries one per-stage job tag. The first failure
+      // cancels the siblings' jobs and keeps unstarted chunks from
+      // starting, and the stage waits for every chunk to stop before it
+      // rethrows that failure: no orphaned job may commit a chunk=i dir
+      // into a run its caller has given up on.
+      val sc = spark.sparkContext
+      val tag = s"graft-scoring-${java.util.UUID.randomUUID()}"
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(cfg.scoreChunks, 8))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futs = (0 until cfg.scoreChunks).map { i =>
-        scala.concurrent.Future {
+      (0 until cfg.scoreChunks).foreach { i =>
+        pool.execute { () =>
           val cpath = s"$scoredPath/chunk=$i"
-          if (!done(cpath)) {
-            val chunk =
-              if (chunkPruned) candidates.where(col(chunkCol) === i)
-              else candidates.where(pmod(col("salt"), lit(cfg.scoreChunks)) === i)
-            (dictSide match {
-              case Some((txtIds, bc)) =>
-                Scoring.scoreWithRepsFused(chunk, txtIds, mediaRep, cfg.weights, bc)
-              case None =>
-                Scoring.scoreWithRepsDirect(chunk, textRep, mediaRep, cfg.weights)
-            }).write.mode("overwrite").parquet(cpath)
+          if (failure.get == null && !done(cpath)) {
+            sc.addJobTag(tag)
+            try {
+              val chunk =
+                if (chunkPruned) candidates.where(col(chunkCol(cfg)) === i)
+                else candidates.where(pmod(col("salt"), lit(cfg.scoreChunks)) === i)
+              (dictSide match {
+                case Some((txtIds, bc)) =>
+                  Scoring.scoreWithRepsFused(chunk, txtIds, mediaRep, cfg.weights, bc)
+                case None =>
+                  Scoring.scoreWithRepsDirect(chunk, textRep, mediaRep, cfg.weights)
+              }).write.mode("overwrite").parquet(cpath)
+            } catch {
+              // the first failure is the cause; a sibling's cancellation is its consequence
+              case e: Throwable => if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+            } finally sc.removeJobTag(tag)
           }
         }
       }
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf
-      )
-      finally pool.shutdown()
+      pool.shutdown()
+      // cancel again while waiting: a chunk that passed the failure
+      // check just before the first cancel may still submit a job
+      while (!pool.awaitTermination(100, java.util.concurrent.TimeUnit.MILLISECONDS))
+        if (failure.get != null) sc.cancelJobsWithTag(tag)
+      if (failure.get != null) {
+        // AQE submits broadcast-exchange jobs from its own threads, and
+        // they can start after the chunk's failed query returned:
+        // cancel until no tagged job ran for 3 polls
+        var quiet = 0
+        while (quiet < 3) {
+          sc.cancelJobsWithTag(tag)
+          Thread.sleep(100)
+          val running = sc.statusTracker.getJobIdsForTag(tag).exists(
+            sc.statusTracker.getJobInfo(_).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+          quiet = if (running) 0 else quiet + 1
+        }
+        throw failure.get
+      }
       val out = spark.read.parquet(scoredPath).drop("chunk")
       val wallMs = (System.nanoTime() - t0) / 1e6
       // lineage + metrics in the background (Ckpt.meta): the total
@@ -368,36 +505,16 @@ object Pipeline {
   /** Run (or resume) the pipeline. `docs` must have the input_hint
     * shape; stage outputs are written under `runDir`. */
   def run(spark: SparkSession, docs0: DataFrame, runDir: String, cfg: Cfg = Cfg()): Result = {
-    requireValid(cfg)
-    val runId = "run"
+    val idMode = requireValid(cfg)
     new java.io.File(runDir).mkdirs()
+    pinIdMode(runDir, idMode)
 
-    // id-encoding marker: checkpoints written under a different id
-    // encoding are incompatible (long nids vs string ids, or hash vs
-    // dense longs) — resuming across the mismatch would silently join
-    // nothing. Fail loudly like _chunks. ("true" = legacy hash marker.)
-    val idMode = if (!cfg.dictIds) "off" else cfg.dictMode
-    require(Set("off", "hash", "dense").contains(idMode), s"unknown dictMode '${cfg.dictMode}'")
-    locally {
-      val marker = java.nio.file.Paths.get(s"$runDir/_dictids")
-      if (java.nio.file.Files.exists(marker)) {
-        val prior = java.nio.file.Files.readString(marker).trim match {
-          case "true" => "hash"
-          case "false" => "off"
-          case m => m
-        }
-        require(prior == idMode,
-          s"run dir $runDir was written with id mode '$prior' but this run uses '$idMode'; " +
-            "use a fresh run dir or match the setting")
-      } else java.nio.file.Files.writeString(marker, idMode)
-    }
-
-    val ck = new Ckpt(spark, runDir, runId)
+    val ck = new Ckpt(spark, runDir, "run")
 
     // internal long ids (see Cfg.dictIds/dictMode); the checkpointed
     // clusters table and the Result accessors expose original string
     // ids. idMap is distinct-ed: duplicate doc_id input rows would
-    // otherwise multiply every mapBack inner join.
+    // otherwise multiply every decode join.
     // Stage B0 (dense mode only) — stable dense ids: distinct ids
     // range-sorted then zipWithIndex (two narrow jobs, one shuffle of
     // the id column; no global single-partition sort). Checkpointed
@@ -411,13 +528,13 @@ object Pipeline {
         .map { case (r, i) => (r.getString(0), i) }
         .toDF("orig_id", "nid")
     }
-    // pinned: mapBack joins it once per id column (two in the clusters
-    // stage alone) — without the pin each join re-scans the input and
-    // re-runs the distinct shuffle
-    lazy val idMap = (idMode match {
+    // pinned: the output boundary joins it once per id column (two in
+    // the clusters stage alone) — without the pin each join re-scans
+    // the input and re-runs the distinct shuffle
+    val ids = new IdSpace(idMode, (idMode match {
       case "dense" => denseDict
       case _ => docs0.select(col("doc_id").as("orig_id"), xxhash64(col("doc_id")).as("nid")).distinct()
-    }).localCheckpoint(true)
+    }).localCheckpoint(true))
     // lazy: in dense mode this forces stage B0, which must come after
     // the doc-id guard at the start of the candidates stage
     lazy val docs = idMode match {
@@ -429,17 +546,6 @@ object Pipeline {
           .drop("doc_id")
           .withColumnRenamed("nid", "doc_id")
     }
-    def mapBack(df: DataFrame, idCols: Seq[String]): DataFrame =
-      if (idMode == "off") df
-      else idCols.foldLeft(df) { (d, c) =>
-        d.join(idMap.select(col("nid").as(c), col("orig_id").as(s"${c}__s")), c)
-          .drop(c)
-          .withColumnRenamed(s"${c}__s", c)
-      }
-
-    // scoring-chunk partition column; the modulus rides in the name so
-    // the checkpoint layout self-describes (see the candidates stage)
-    val chunkCol = s"chunk_${cfg.scoreChunks}"
 
     // Stage B — key table materialized once (lazily, only when the
     // candidates checkpoint is absent), shared by the pair join and the
@@ -456,32 +562,16 @@ object Pipeline {
     // drop-accounting metrics (dropMetrics previously re-aggregated
     // the whole key table a second time)
     lazy val census = Blocking.blockSizes(keys).localCheckpoint(true)
-    val candidates = ck.stage(
-      "candidates",
-      (_, total) => {
-        val drops = Blocking.dropMetrics(keys, cfg.blocking, Some(census)).head()
-        Seq(
-          "candidate_pairs" -> total.toDouble,
-          "dropped_blocks" -> drops.getDouble(0),
-          "dropped_pairs_est" -> drops.getDouble(1)
-        )
-      },
-      // directory-partition by scoring chunk: each chunk job's filter
-      // becomes partition PRUNING instead of a pmod predicate parquet
-      // cannot push down — without this every one of the scoreChunks
-      // jobs decoded the FULL candidate table (8× redundant scan
-      // decode at bench scale). The modulus is baked into the COLUMN
-      // NAME (chunk_<scoreChunks>), so the layout self-describes
-      // atomically with the data: a resume under a different
-      // scoreChunks simply doesn't find its column and falls back to
-      // the always-correct pmod-on-salt filter (the chunk dirs
-      // partition the same rows, so scanning all of them with the
-      // pmod predicate is layout-independent).
-      partitionCols = Seq(chunkCol)
-    ) {
+    val candidates = candidatesStage(ck, cfg, (_, total) => {
+      val drops = Blocking.dropMetrics(keys, cfg.blocking, Some(census)).head()
+      Seq(
+        "candidate_pairs" -> total.toDouble,
+        "dropped_blocks" -> drops.getDouble(0),
+        "dropped_pairs_est" -> drops.getDouble(1)
+      )
+    }) {
       requireValidIds(docs0, idMode, "input")
       Blocking.candidatesFromKeys(keys, cfg.blocking, Some(census))
-        .withColumn(chunkCol, pmod(col("salt"), lit(cfg.scoreChunks)).cast("int"))
     }
     // a resumed run must still end up delta-capable: force the keys
     // stage (idempotent) even when the candidates checkpoint was hit,
@@ -496,71 +586,35 @@ object Pipeline {
     }
 
     // Stages S0/S1/S — shared with runDelta; see scoreStage
-    val scored = scoreStage(spark, ck, runDir, runId, cfg, docs, candidates, chunkCol)
+    val scored = scoreStage(ck, cfg, docs, candidates)
 
     // Stage C
     graft.util.PhaseTracker.set("clustering")
     var ccIters = -1
-    val clusters = ck.stage(
-      "clusters",
-      // row count from the lineage pass; distinct-cluster count is one
-      // pruned single-column aggregate (was: two separate full count
-      // jobs on top of the lineage scan)
-      (out, total) => Seq(
-        "docs" -> total.toDouble,
-        "clusters" -> out.agg(countDistinct(col("cluster_id"))).head().getLong(0).toDouble,
-        "cc_iterations" -> ccIters.toDouble
-      )
-    ) {
+    // pre-attach hard component labels, computed once (CC is
+    // deterministic): read by the clusters compute and by the
+    // cc_assign resume backfill below
+    lazy val assign = {
       val edges = scored.where(col("is_match")).select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val r = ConnectedComponents.run(edges, docs.select("doc_id"), cfg.ccMaxIter)
       ccIters = r.iterations
-      val assign = r.assignments.localCheckpoint(true)
-      // pre-attach hard component labels, persisted for runDelta's
-      // contraction step (internal id space; see Cfg.persistForDelta)
+      r.assignments.localCheckpoint(true)
+    }
+    val clusters = ck.stage("clusters", clusterMetrics(ccIters)) {
+      // persisted for runDelta's contraction step (internal id space;
+      // see Cfg.persistForDelta)
       if (cfg.persistForDelta) ck.stage("cc_assign")(assign)
-      // C2: aggregate-evidence singleton attachment (see Attach), then
-      // dictionary decode — the stored clusters table is user-facing
-      // and carries original ids (cluster_id = the doc_id of the
-      // min-nid member; deterministic, so resume stays byte-stable)
-      mapBack(
-        Attach.attachSingletons(assign, scored),
-        Seq("doc_id", "cluster_id")
-      ).repartitionByRange(col("cluster_id"), col("doc_id"))
+      attachedClusters(ids, assign, scored)
     }
-
     // contract: a RESUMED run must still end up delta-capable (same as
-    // keys/media_df/corpus_stats above). cc_assign is written inside
-    // the clusters compute block, which a _SUCCESS hit skips entirely —
-    // when resuming into persistForDelta over a clusters checkpoint
-    // from a non-delta run, recompute the pre-attach labels from the
-    // scored checkpoint (CC is deterministic, so these are the labels
-    // the original clusters table was built from). No-op on fresh runs:
-    // the inner write already committed its _SUCCESS.
-    if (cfg.persistForDelta && !done(s"$runDir/cc_assign")) {
-      ck.stage("cc_assign") {
-        val edges = scored.where(col("is_match"))
-          .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        ConnectedComponents.run(edges, docs.select("doc_id"), cfg.ccMaxIter).assignments
-      }
-    }
+    // keys/media_df/corpus_stats above). The compute above writes
+    // cc_assign, but a clusters _SUCCESS hit skips it — when resuming
+    // into persistForDelta over a clusters checkpoint from a non-delta
+    // run, derive the labels the original clusters table was built
+    // from out of the scored checkpoint. No-op on fresh runs.
+    if (cfg.persistForDelta && !done(s"$runDir/cc_assign")) ck.stage("cc_assign")(assign)
 
-    graft.util.PhaseTracker.set("other")
-    // background lineage/metrics barrier: the metrics table must be
-    // complete (and any guard failure surfaced) before the run returns
-    ck.await()
-    // drop EVERY chunk_<n> column, not just the current modulus: a
-    // candidates checkpoint resumed under a different scoreChunks
-    // carries its writer's chunk_<old> partition column, which would
-    // otherwise leak into Result.candidates and change its schema
-    // between a fresh run and a resume
-    val chunkCols = candidates.columns.filter(_.matches("chunk_\\d+"))
-    Result(
-      mapBack(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
-      mapBack(scored, Seq("doc_a", "doc_b")),
-      clusters,
-      ccIters
-    )
+    finish(ck, ids, candidates, scored, clusters, ccIters)
   }
 
   /** Cluster CDC between two runs' user-facing clusters checkpoints —
@@ -658,62 +712,39 @@ object Pipeline {
       runDir: String,
       cfg: Cfg = Cfg()
   ): Result = {
-    requireValid(cfg)
-    val runId = "delta"
+    val idMode = requireValid(cfg)
     new java.io.File(runDir).mkdirs()
-
-    val idMode = if (!cfg.dictIds) "off" else cfg.dictMode
     require(idMode != "dense",
       "runDelta requires a run-stable id space: dictMode='hash' (or dictIds=false); " +
         "'dense' ids are a per-run dictionary")
     // the prior run must be delta-capable and share the id space
-    locally {
-      val marker = java.nio.file.Paths.get(s"$priorRunDir/_dictids")
-      require(java.nio.file.Files.exists(marker), s"$priorRunDir has no _dictids marker")
-      val prior = java.nio.file.Files.readString(marker).trim match {
-        case "true" => "hash"
-        case "false" => "off"
-        case m => m
-      }
-      require(prior == idMode,
-        s"prior run dir $priorRunDir uses id mode '$prior' but this delta uses '$idMode'")
-    }
+    val priorMode = markedIdMode(priorRunDir)
+    require(priorMode.isDefined, s"$priorRunDir has no _dictids marker")
+    require(priorMode.get == idMode,
+      s"prior run dir $priorRunDir uses id mode '${priorMode.get}' but this delta uses '$idMode'")
     Seq("media_df", "corpus_stats", "cc_assign", "scored_pairs", "clusters").foreach { s =>
       require(done(s"$priorRunDir/$s"),
         s"$priorRunDir/$s missing or incomplete — the prior run must use Cfg.persistForDelta=true")
     }
-    locally {
-      val marker = java.nio.file.Paths.get(s"$runDir/_dictids")
-      if (java.nio.file.Files.exists(marker))
-        require(java.nio.file.Files.readString(marker).trim == idMode,
-          s"delta run dir $runDir was written with a different id mode")
-      else java.nio.file.Files.writeString(marker, idMode)
-    }
+    pinIdMode(runDir, idMode)
     // ancestor chain for attach evidence; this dir extends it by one
-    val parents: Seq[String] = {
-      val pm = java.nio.file.Paths.get(s"$priorRunDir/_parents")
-      val above =
-        if (java.nio.file.Files.exists(pm))
-          java.nio.file.Files.readAllLines(pm).toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-        else Nil
-      above :+ priorRunDir
-    }
+    val parents: Seq[String] =
+      marker(priorRunDir, "_parents").toSeq.flatMap(_.linesIterator).filter(_.nonEmpty) :+ priorRunDir
     // pin the prior chain exactly like _dictids pins the id mode: a
     // delta dir resumed against a DIFFERENT prior would silently mix
     // checkpoints computed against two priors (keys_new/candidates/
     // scored from the first, contraction/media merge from the second)
-    locally {
-      val pm = java.nio.file.Paths.get(s"$runDir/_parents")
-      val chain = parents.mkString("\n")
-      if (java.nio.file.Files.exists(pm))
-        require(java.nio.file.Files.readString(pm).trim == chain.trim,
+    val chain = parents.mkString("\n")
+    marker(runDir, "_parents") match {
+      case Some(pinned) =>
+        require(pinned == chain.trim,
           s"delta run dir $runDir was started against a different prior chain " +
-            s"(${java.nio.file.Files.readString(pm).trim.linesIterator.toSeq.lastOption.getOrElse("?")}) — " +
+            s"(${pinned.linesIterator.toSeq.lastOption.getOrElse("?")}) — " +
             s"use a fresh delta dir for prior $priorRunDir")
-      else java.nio.file.Files.writeString(pm, chain)
+      case None => writeMarker(runDir, "_parents", chain)
     }
 
-    val ck = new Ckpt(spark, runDir, runId)
+    val ck = new Ckpt(spark, runDir, "delta")
 
     def enc(df: DataFrame): DataFrame =
       if (idMode == "off") df else df.withColumn("doc_id", xxhash64(col("doc_id")))
@@ -723,19 +754,12 @@ object Pipeline {
     // that can appear in the output is either a prior doc (all present
     // in the prior clusters checkpoint — no corpus scan needed) or a
     // new doc.
-    val priorClustersOrig = spark.read.parquet(s"$priorRunDir/clusters")
-    lazy val idMap = priorClustersOrig.select(col("doc_id").as("orig_id"))
+    val ids = new IdSpace(idMode, spark.read.parquet(s"$priorRunDir/clusters")
+      .select(col("doc_id").as("orig_id"))
       .union(newDocs0.select(col("doc_id").as("orig_id")))
       .distinct()
       .select(col("orig_id"), xxhash64(col("orig_id")).as("nid"))
-      .localCheckpoint(true)
-    def mapBack(df: DataFrame, idCols: Seq[String]): DataFrame =
-      if (idMode == "off") df
-      else idCols.foldLeft(df) { (d, c) =>
-        d.join(idMap.select(col("nid").as(c), col("orig_id").as(s"${c}__s")), c)
-          .drop(c)
-          .withColumnRenamed(s"${c}__s", c)
-      }
+      .localCheckpoint(true))
 
     graft.util.PhaseTracker.set("blocking")
     // The prior key table is CHAINED, not merged: walking the parent
@@ -771,18 +795,10 @@ object Pipeline {
       Blocking.docKeys(docsNew, cfg.blocking)
     }
 
-    val chunkCol = s"chunk_${cfg.scoreChunks}"
-    val candidates = ck.stage(
-      "candidates",
-      (_, total) => Seq(
-        "candidate_pairs" -> total.toDouble,
-        "new_docs" -> docsNew.count().toDouble
-      ),
-      partitionCols = Seq(chunkCol)
-    ) {
-      Blocking.deltaCandidates(keysNew, priorKeys, cfg.blocking)
-        .withColumn(chunkCol, pmod(col("salt"), lit(cfg.scoreChunks)).cast("int"))
-    }
+    val candidates = candidatesStage(ck, cfg, (_, total) => Seq(
+      "candidate_pairs" -> total.toDouble,
+      "new_docs" -> docsNew.count().toDouble
+    ))(Blocking.deltaCandidates(keysNew, priorKeys, cfg.blocking))
     // NO merged key table: the delta dir's `keys_new` plus the
     // `_parents` chain IS the key table for the next increment (see
     // priorKeys above) — writing the merged union here would be the
@@ -825,18 +841,11 @@ object Pipeline {
       enc(priorDocs0).join(touchedIds, Seq("doc_id"), "left_semi"))
 
     val scored =
-      scoreStage(spark, ck, runDir, runId, cfg, docsTouched, candidates, chunkCol, Some(dfFrac))
+      scoreStage(ck, cfg, docsTouched, candidates, Some(dfFrac))
 
     graft.util.PhaseTracker.set("clustering")
     var ccIters = -1
-    val clusters = ck.stage(
-      "clusters",
-      (out, total) => Seq(
-        "docs" -> total.toDouble,
-        "clusters" -> out.agg(countDistinct(col("cluster_id"))).head().getLong(0).toDouble,
-        "cc_iterations" -> ccIters.toDouble
-      )
-    ) {
+    val clusters = ck.stage("clusters", clusterMetrics(ccIters)) {
       val priorAssign = spark.read.parquet(s"$priorRunDir/cc_assign")
       val edges = scored.where(col("is_match")).select(col("doc_a").as("src"), col("doc_b").as("dst"))
       // contract old endpoints to their prior hard label (new ids pass
@@ -885,20 +894,9 @@ object Pipeline {
             .where(col("score") >= lit(Attach.DefaultAttachFloor))
         }
         .reduce(_.unionByName(_))
-      mapBack(
-        Attach.attachSingletons(mergedCk, scored.unionByName(ancestorScored)),
-        Seq("doc_id", "cluster_id")
-      ).repartitionByRange(col("cluster_id"), col("doc_id"))
+      attachedClusters(ids, mergedCk, scored.unionByName(ancestorScored))
     }
 
-    graft.util.PhaseTracker.set("other")
-    ck.await()
-    val chunkCols = candidates.columns.filter(_.matches("chunk_\\d+"))
-    Result(
-      mapBack(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
-      mapBack(scored, Seq("doc_a", "doc_b")),
-      clusters,
-      ccIters
-    )
+    finish(ck, ids, candidates, scored, clusters, ccIters)
   }
 }

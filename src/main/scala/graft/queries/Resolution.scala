@@ -3,17 +3,22 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.Fixture
-import graft.blocking.Blocking
-import graft.scoring.Scoring
-import graft.cluster.ConnectedComponents
+import graft.pipeline.Pipeline
 import graft.tools.Calibrate
 
 /** Identity-resolution pipeline exposed as driver queries. These run on
   * the deterministic fixture (the driver testdata has no span-schema
   * table — FIXTURES.md §1), so they carry no DuckDB oracle; correctness
   * is enforced by the ScalaTest suite (pairwise F1 gate) and the
-  * invariant/oracle specs. Results are cached per (JVM, scale) so the
-  * driver's sequential query loop computes each stage once.
+  * invariant/oracle specs.
+  *
+  * Every `pir_*` row reads one [[Pipeline.run]] per (JVM, scale): a
+  * checkpointed run dir under the temp dir, cached so a sequential
+  * query loop (`Verify`) computes each stage once, and deleted when the
+  * JVM exits. The run uses string ids (`dictIds = false`), so each
+  * cluster is labelled with its lexicographically smallest `doc_id`.
+  * It is the production assembly with its limits: at the `bench` scale
+  * it needs the heap `Pipeline.run` needs there (ROADMAP item 6).
   */
 object Resolution {
 
@@ -44,21 +49,19 @@ object Resolution {
 
   def staged(spark: SparkSession, scale: String): Staged =
     cache.getOrElseUpdate(scale, {
-      val cfg = Fixture.scales(scale)
       val (docsPath, labelsPath) = Fixture.ensureWritten(spark, scale)
       val docs = spark.read.parquet(docsPath)
-      val labels = spark.read.parquet(labelsPath)
-      // localCheckpoint, not persist: the columnar cache path costs
-      // ~3.6x the raw compute on the scored-pairs plan (measured)
-      val cand = Blocking.candidates(docs, Blocking.Cfg()).localCheckpoint(true)
-      val scored = Scoring.score(cand, docs).localCheckpoint(true)
-      val edges = scored.where(col("is_match")).select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val cc = ConnectedComponents.run(edges, docs.select("doc_id"))
-      val attached = graft.cluster.Attach
-        .attachSingletons(cc.assignments.localCheckpoint(true), scored)
-        .localCheckpoint(true)
-      Staged(docs, labels, cand, scored, attached, cc.iterations)
+      val r = Pipeline.run(spark, docs, scratchDir(s"pir_$scale"), Pipeline.Cfg(dictIds = false))
+      Staged(docs, spark.read.parquet(labelsPath), r.candidates, r.scoredPairs, r.clusters, r.ccIterations)
     })
+
+  /** A fresh run dir under the temp dir, deleted when the JVM exits:
+    * the frames of a cached run read from it until then. */
+  def scratchDir(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pir_candidates" -> ((s, dir) => staged(s, scaleFor(dir)).candidates),
@@ -121,34 +124,21 @@ object Resolution {
       val docs = spark.read.parquet(docsPath)
       val docsA = docs.where(pmod(xxhash64(col("doc_id")), lit(5)) < 3)
       val docsB = docs.where(pmod(xxhash64(col("doc_id")), lit(5)) === 3)
-      val dirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-      def tmp(tag: String) = {
-        val p = java.nio.file.Files.createTempDirectory(s"graft_pir_delta_$tag")
-        dirs += p
-        p.toString
-      }
+      val root = scratchDir("pir_delta")
+      def tmp(tag: String) = s"$root/$tag"
       def digest(cl: DataFrame): Long =
         cl.agg(assignDigest(cl)).head().getLong(0)
-      val full = graft.pipeline.Pipeline.run(spark, docsA.unionByName(docsB), tmp("full"))
+      val full = Pipeline.run(spark, docsA.unionByName(docsB), tmp("full"))
       val priorDir = tmp("prior")
-      graft.pipeline.Pipeline.run(
-        spark, docsA, priorDir, graft.pipeline.Pipeline.Cfg(persistForDelta = true))
-      val delta = graft.pipeline.Pipeline.runDelta(spark, docsA, docsB, priorDir, tmp("delta"))
+      Pipeline.run(spark, docsA, priorDir, Pipeline.Cfg(persistForDelta = true))
+      val delta = Pipeline.runDelta(spark, docsA, docsB, priorDir, tmp("delta"))
       val (fd, dd) = (digest(full.clusters), digest(delta.clusters))
       val out = Seq((fd, dd, fd == dd, full.clusters.count(), delta.candidates.count()))
         .toDF("full_digest", "delta_digest", "full_eq_delta", "n_docs", "delta_pairs")
         .localCheckpoint(true)
       // everything the caller needs is in the localCheckpointed row —
-      // drop the three full-pipeline temp dirs instead of leaking them
-      // into /tmp on every driver JVM that runs pir_delta
-      dirs.foreach { p =>
-        scala.util.Try {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-          finally walk.close()
-        }
-      }
+      // drop the three full-pipeline run dirs now, not at JVM exit
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
       deltaCache.set(out)
       out
     }

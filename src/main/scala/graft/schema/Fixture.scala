@@ -42,8 +42,8 @@ object Fixture {
     "t1"    -> Cfg(entities = 50),
     "t2"    -> Cfg(entities = 500),
     "bench" -> Cfg(entities = 5000),
-    // 10× the bench point (~3.2M docs): the scale-ladder measurement
-    // (tools/ScaleLadder, round 6) — converts the 100 TB story's
+    // 10× the bench point (~3.2M docs): the round-6 scale-ladder
+    // measurement point (needs ~38 GB of heap) — converts the 100 TB story's
     // "plan shape says it scales" into a measured docs/s + pair-growth
     // + memory point. Not reachable from the driver bench mapping
     // (Resolution.scaleFor), so the frozen bench contract is unchanged.

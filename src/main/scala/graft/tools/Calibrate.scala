@@ -3,13 +3,14 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.Fixture
-import graft.blocking.Blocking
-import graft.scoring.Scoring
-import graft.cluster.ConnectedComponents
+import graft.pipeline.Pipeline
 
 /** Dev harness: score-distribution + pairwise-F1 readout on a fixture
   * scale, used to calibrate FS m/u weights and the decision threshold
-  * (SURVEY.md §7.3 item 3). Run:
+  * (SURVEY.md §7.3 item 3). `main` resolves the fixture with
+  * [[Pipeline.run]] in a scratch run dir (string ids, with the
+  * pre-attach `cc_assign` checkpoint kept) and reads every line from
+  * its outputs. Run:
   *   sbt "runMain graft.tools.Calibrate t1"
   */
 object Calibrate {
@@ -73,11 +74,12 @@ object Calibrate {
     val labels = Fixture.labels(spark, cfg).toDF().cache()
     println(s"docs=${docs.count()} labels=${labels.count()}")
 
-    val bcfg = Blocking.Cfg()
-    val cand = Blocking.candidates(docs, bcfg).cache()
+    val dir = graft.queries.Resolution.scratchDir("calibrate")
+    val run = Pipeline.run(spark, docs, dir, Pipeline.Cfg(dictIds = false, persistForDelta = true))
+    val cand = run.candidates
     println(s"candidates=${cand.count()}")
 
-    val scored = Scoring.score(cand, docs).cache()
+    val scored = run.scoredPairs
     // score distribution by truth
     val la = labels.select(col("doc_id").as("doc_a"), col("entity_id").as("ent_a"))
     val lb = labels.select(col("doc_id").as("doc_b"), col("entity_id").as("ent_b"))
@@ -98,13 +100,13 @@ object Calibrate {
       println(f"scored thr=$thr%4.1f  P=$p%.4f R=$r%.4f F1=$f1%.4f pos=$pos fp=$fp")
     }
 
-    // clustering at default threshold
-    val edges = scored.where(col("is_match")).select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val cc = ConnectedComponents.run(edges, docs.select("doc_id"))
-    println(s"cc iterations=${cc.iterations} clusters=${cc.assignments.select("cluster_id").distinct().count()}")
-    val (p, r, f1, pos, fp) = pairwiseF1(clusterPairs(cc.assignments, cand), cand, labels)
+    // clustering at default threshold: the pre-attach assignments, then
+    // the attached clusters
+    val cc = spark.read.parquet(s"$dir/cc_assign")
+    println(s"cc iterations=${run.ccIterations} clusters=${cc.select("cluster_id").distinct().count()}")
+    val (p, r, f1, pos, fp) = pairwiseF1(clusterPairs(cc, cand), cand, labels)
     println(f"clustered P=$p%.4f R=$r%.4f F1=$f1%.4f pos=$pos fp=$fp")
-    val att = graft.cluster.Attach.attachSingletons(cc.assignments.localCheckpoint(true), scored)
+    val att = run.clusters
     println(s"after attach: clusters=${att.select("cluster_id").distinct().count()}")
     val (p2, r2, f12, pos2, fp2) = pairwiseF1(clusterPairs(att, cand), cand, labels)
     println(f"attached  P=$p2%.4f R=$r2%.4f F1=$f12%.4f pos=$pos2 fp=$fp2")

@@ -133,8 +133,9 @@ object Lift {
     labels.join(tagged, "entity_id")
   }
 
-  /** End-to-end readout on a fixture scale: resolve with the production
-    * pipeline stages (Calibrate's flow), then report the lift row. */
+  /** End-to-end readout on a fixture scale: resolve with
+    * [[graft.pipeline.Pipeline.run]] in a scratch run dir (string ids,
+    * as the `pir_*` queries use), then report the lift row. */
   def main(args: Array[String]): Unit = {
     val scale = if (args.nonEmpty) args(0) else "t1"
     val spark = SparkSession.builder()
@@ -150,11 +151,8 @@ object Lift {
     val cfg = graft.schema.Fixture.scales(scale)
     val docs = graft.schema.Fixture.docs(spark, cfg).toDF().cache()
     val labels = graft.schema.Fixture.labels(spark, cfg).toDF().cache()
-    val cand = graft.blocking.Blocking.candidates(docs, graft.blocking.Blocking.Cfg())
-    val scored = graft.scoring.Scoring.score(cand, docs)
-    val edges = scored.where(col("is_match")).select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val cc = graft.cluster.ConnectedComponents.run(edges, docs.select("doc_id"))
-    val att = graft.cluster.Attach.attachSingletons(cc.assignments.localCheckpoint(true), scored)
+    val att = graft.pipeline.Pipeline.run(spark, docs, graft.queries.Resolution.scratchDir("lift"),
+      graft.pipeline.Pipeline.Cfg(dictIds = false)).clusters
 
     val row = compute(att.select("doc_id", "cluster_id"), labels, fixtureAccount).head()
     // lift/z are nullable (degenerate baselines) — print, don't NPE

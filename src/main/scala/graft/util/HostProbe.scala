@@ -2,9 +2,9 @@ package graft.util
 
 /** Shared host-probe primitives and degraded-window thresholds.
   *
-  * One home for the instruments that Bench, tools.Weather,
-  * tools.DeltaBench, tools.MemScale and util.LoadProbe previously each
-  * carried a private copy of — the copies had already drifted (guard
+  * One home for the instruments that Bench and util.LoadProbe (and the
+  * retired round-5/6 host tools) previously each carried a private
+  * copy of — the copies had already drifted (guard
   * differences, threshold subsets), and a threshold fix applied to one
   * would silently change what "clean" means for the others. The
   * thresholds are the BASELINE.md round-5 classifier values: each sits

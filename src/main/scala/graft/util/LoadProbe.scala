@@ -3,7 +3,7 @@ package graft.util
 /** Hypervisor-steal probe under SUSTAINED all-core load.
   *
   * Round-5 discovery (burn-ladder, BASELINE.md): this host's steal is
-  * LOAD-DEPENDENT — an idle/short probe (Weather's 8-s DRAM sweep)
+  * LOAD-DEPENDENT — an idle/short probe (an 8-s DRAM sweep)
   * reads ~0 steal while a sustained 32-thread burn on the same box
   * measures 1-2+ stolen cores (8 threads: ~0; 16/24/32: 0.6-2.1).
   * A clean idle probe therefore cannot certify a window for an

@@ -1,5 +1,7 @@
 package graft
 
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
@@ -10,7 +12,8 @@ import graft.schema.Fixture
   * EXACTLY the rows of the naive `min(struct(key_kind, block_key))`
   * SortAggregate it replaced — witness kind, witness key, and salt —
   * for both the pipeline kind set ({lsh, media}) and the md5 band
-  * kind set (b00..b11, the q38/q42 shape), full and delta variants. */
+  * kind set (b00..b11, the q38/q42 shape), full and delta variants,
+  * and on random small key tables. */
 class BlockingWitnessSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -65,6 +68,43 @@ class BlockingWitnessSpec extends AnyFunSuite {
     val want = rows(structMinCandidates(keys, cfg))
     assert(got.nonEmpty)
     assert(got === want)
+  }
+
+  // kind vocabulary: upper case sorts before lower case, and UTF-8 byte
+  // order puts the supplementary character after U+FF21 (UTF-16 order
+  // would not)
+  private val kindPool = Seq("lsh", "media", "Z", "b00", "\u00e9", "\uff21", "\ud83d\ude00")
+
+  /** A key table over a few docs, a narrow block_key range (blocks
+    * collide) and a kind set of 0, 1, 2, 3 or 65 kinds (65 takes the
+    * struct-min fallback for more than 64 kinds); every kind appears. */
+  private val keyTable: Gen[(Int, Seq[(String, String, Long)])] = {
+    def row(nDocs: Int, kind: Gen[String]) =
+      Gen.zip(Gen.choose(0, nDocs - 1).map(d => f"d$d%02d"), kind, Gen.choose(0L, 3L))
+    for {
+      nKinds <- Gen.oneOf(0, 1, 2, 3, 65)
+      kinds <- if (nKinds == 65) Gen.const((0 until 65).map(i => f"k$i%02d"))
+        else Gen.pick(nKinds, kindPool).map(_.toSeq)
+      nDocs <- Gen.choose(2, 10)
+      each <- Gen.sequence[Seq[Seq[(String, String, Long)]], Seq[(String, String, Long)]](
+        kinds.map(k => Gen.listOfN(2, row(nDocs, Gen.const(k)))))
+      extra <- if (kinds.isEmpty) Gen.const(Nil) else Gen.listOfN(3 * nDocs, row(nDocs, Gen.oneOf(kinds)))
+    } yield (nKinds, (each.flatten ++ extra).distinct)
+  }
+
+  test("random key tables: candidatesFromKeys == struct-min reference (0-3 and 65 kinds, capped blocks)") {
+    val s = spark
+    import s.implicits._
+    val sizes = scala.collection.mutable.Set.empty[Int]
+    PropCheck.check(Prop.forAllNoShrink(keyTable, Gen.choose(2, 6)) { case ((nKinds, rowsIn), cap) =>
+      sizes += nKinds
+      val keys = rowsIn.toDF("doc_id", "key_kind", "block_key")
+      val cfg = Blocking.Cfg(maxBlockSize = cap)
+      val got = rows(Blocking.candidatesFromKeys(keys, cfg))
+      val want = rows(structMinCandidates(keys, cfg))
+      (got == want) :| s"kinds=$nKinds cap=$cap rows=$rowsIn\ngot=$got\nwant=$want"
+    }, minSuccessful = 25)
+    assert(sizes == Set(0, 1, 2, 3, 65), s"kind-set sizes drawn: $sizes")
   }
 
   test("delta variant: conditional-min keeps the BlockingDeltaSpec decomposition exact") {

@@ -160,6 +160,49 @@ class PipelineSpec extends AnyFunSuite {
     assert(h1 == h2)
   }
 
+  test("a failed scoring chunk stops its siblings before run throws; resume redoes only the rest") {
+    import org.apache.commons.io.FileUtils
+    val before = result.clusters.orderBy("doc_id").collect().toSeq
+    val dir = Files.createTempDirectory("graft_pipe_chunkfail").toFile
+    FileUtils.copyDirectory(new java.io.File(runDir), dir)
+    Seq("scored_pairs", "clusters").foreach(s => FileUtils.deleteDirectory(new java.io.File(dir, s)))
+    // schema inference reads the first data file by path; corrupt the
+    // last one instead, so only the scan of its chunk partition fails
+    val data = FileUtils.listFiles(new java.io.File(dir, "candidates"), Array("parquet"), true)
+      .toArray(Array.empty[java.io.File]).sortBy(_.getPath)
+    val bad = data.last
+    val chunk = bad.getParentFile.getName
+    assert(chunk.startsWith("chunk_8=") && chunk != data.head.getParentFile.getName, chunk)
+    val good = Files.readAllBytes(bad.toPath)
+    Files.write(bad.toPath, new Array[Byte](good.length))
+
+    val scoredDir = new java.io.File(dir, "scored_pairs")
+    def committed(): Map[String, Long] =
+      Option(scoredDir.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.getName.startsWith("chunk=") && new java.io.File(f, "_SUCCESS").exists())
+        .map(f => f.getName -> new java.io.File(f, "_SUCCESS").lastModified()).toMap
+    val e = intercept[Exception](Pipeline.run(spark, docs, dir.toString))
+    val afterThrow = committed()
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(String.valueOf).mkString("\n")
+    assert(msgs.contains(chunk), s"the failure must come from $chunk:\n$msgs")
+    assert(!afterThrow.contains(s"chunk=${chunk.stripPrefix("chunk_8=")}"))
+    // the status store is fed by the listener bus, asynchronously
+    val deadline = System.nanoTime() + 2000000000L
+    while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty, "chunk jobs outlived the failed run")
+    Thread.sleep(5000)
+    assert(committed() == afterThrow, "chunks committed after run had thrown")
+
+    Files.write(bad.toPath, good)
+    val resumed = Pipeline.run(spark, docs, dir.toString)
+    afterThrow.foreach { case (c, mtime) =>
+      assert(new java.io.File(scoredDir, s"$c/_SUCCESS").lastModified() == mtime, s"$c was rewritten")
+    }
+    assert(resumed.clusters.orderBy("doc_id").collect().toSeq == before)
+    FileUtils.deleteQuietly(dir)
+  }
+
   test("resume is idempotent: rerun recomputes nothing and clusters are identical") {
     val before = result.clusters.orderBy("doc_id").collect().toSeq
     val t0 = System.nanoTime()
