@@ -1,17 +1,37 @@
 package graft.lineage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.{LineageRow, MetricRow}
 
-/** Per-partition lineage + scalar metrics for every pipeline stage
-  * (north rule: "checkpoint every stage ... with per-partition lineage
-  * + metrics tables so any stage resumes idempotently").
+/** Lineage + scalar metrics for every pipeline stage (north rule:
+  * "checkpoint every stage ... with per-partition lineage + metrics
+  * tables so any stage resumes idempotently").
   *
-  * Lineage row = (stage, run_id, partition_id, output_rows,
-  * content_hash) where content_hash is an order-insensitive xxhash64
-  * fold of all columns — cheap (one extra narrow aggregation over data
-  * already materialized for the checkpoint write) and enough to prove
-  * two runs produced identical partition content.
+  * A checkpoint is committed in write units: one per stage, except
+  * `scored_pairs`, whose units are its `chunk=i` dirs. A unit's lineage
+  * is the fold (output_rows, content_hash) of what it wrote, with
+  * content_hash the order-insensitive bit_xor of a per-row xxhash64
+  * over all columns in read-back order. [[write]] observes that fold in
+  * the write job itself, so no data is read back to hash it.
+  *
+  * Commit order of a unit: data (with the committer's `_SUCCESS`
+  * suppressed), then its metadata side files `_lineage` and `_metrics`,
+  * then `_SUCCESS` ([[commit]]). A committed unit therefore always
+  * carries its own lineage and metrics, and a crash before `_SUCCESS`
+  * leaves a unit that the resume's overwrite replaces whole, side files
+  * included. The `_`-prefixed names are hidden from Spark's file index.
+  *
+  * The run dir's `lineage` and `metrics` tables are rebuilt from the
+  * side files of its committed units ([[rebuild]]), so they are
+  * complete and duplicate-free after every returned run, resumed or
+  * not. Lineage rows: one per write unit, an empty one included (0
+  * rows, hash 0), with partition_id = i for `scored_pairs/chunk=i` and
+  * 0 for every other stage; runs are compared on the stage fold (sum of
+  * output_rows, bit_xor of content_hash).
   *
   * The reference's closest analog is its audit/metrics logging
   * (reference: src/privacy/audit_logging.py:111-126 content hashing;
@@ -19,54 +39,61 @@ import org.apache.spark.sql.functions._
   */
 object Lineage {
 
-  /** Compute lineage rows for a stage output (already checkpointed). */
-  def lineageRows(df: DataFrame, stage: String, runId: String): DataFrame = {
-    val allCols = df.columns.map(col).toIndexedSeq
-    df.groupBy(spark_partition_id().as("partition_id"))
-      .agg(
-        count(lit(1)).as("output_rows"),
-        // bit_xor: order-insensitive content fold, no ANSI sum overflow
-        coalesce(bit_xor(xxhash64(allCols: _*)), lit(0L)).as("content_hash")
-      )
-      .select(
-        lit(stage).as("stage"),
-        lit(runId).as("run_id"),
-        col("partition_id"),
-        col("output_rows"),
-        col("content_hash")
-      )
+  /** Write `df` as parquet under `path` (overwrite, partitioned by
+    * `partitionCols`) WITHOUT the committer's `_SUCCESS`, and return
+    * the unit's (output_rows, content_hash) as observed by the write
+    * job. Read-back order puts partition columns last, and the hash
+    * follows it, so the fold equals one over `spark.read.parquet(path)`. */
+  def write(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): (Long, Long) = {
+    val cols = df.columns.filterNot(partitionCols.contains) ++ partitionCols
+    val obs = Observation()
+    val hash = coalesce(bit_xor(xxhash64(cols.toIndexedSeq.map(col): _*)), lit(0L))
+    df.observe(obs, count(lit(1)).as("rows"), hash.as("hash"))
+      .write
+      .mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
+    val m = obs.get
+    (m("rows").asInstanceOf[Long], m("hash").asInstanceOf[Long])
   }
 
-  def writeLineage(df: DataFrame, stage: String, runId: String, dir: String): Unit =
-    lineageRows(df, stage, runId).coalesce(1).write.mode("append").parquet(s"$dir/lineage")
+  /** Commit a written unit: its lineage fold (if it is a lineage unit)
+    * and metrics go into side files, and only then `_SUCCESS`. Doubles
+    * are written with `Double.toString`, which round-trips exactly. */
+  def commit(path: String, fold: Option[(Long, Long)], metrics: Seq[(String, Double)]): Unit = {
+    fold.foreach { case (rows, hash) => Files.writeString(Paths.get(path, "_lineage"), s"$rows\t$hash\n") }
+    if (metrics.nonEmpty)
+      Files.write(Paths.get(path, "_metrics"),
+        metrics.map { case (n, v) => s"$n\t${java.lang.Double.toString(v)}" }.asJava)
+    new File(path, "_SUCCESS").createNewFile()
+  }
 
-  /** Write already-collected lineage rows (the caller computed them to
-    * read the per-stage row count out of the same pass — one aggregate
-    * job serves both lineage and the stage metrics, instead of a
-    * separate full count() per stage). */
-  def writeCollectedLineage(
-      spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType,
-      dir: String
-  ): Unit =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .coalesce(1).write.mode("append").parquet(s"$dir/lineage")
-
-  def writeMetrics(
-      spark: SparkSession,
-      stage: String,
-      runId: String,
-      metrics: Seq[(String, Double)],
-      dir: String
-  ): Unit = {
+  /** Overwrite `runDir/lineage` and `runDir/metrics` from the side files
+    * of the run dir's committed units (dirs with `_SUCCESS`, and their
+    * committed `chunk=i` dirs): two small write jobs. */
+  def rebuild(spark: SparkSession, runDir: String, runId: String): Unit = {
     import spark.implicits._
-    metrics
-      .map { case (n, v) => (stage, runId, n, v) }
-      .toDF("stage", "run_id", "name", "value")
-      .coalesce(1)
-      .write
-      .mode("append")
-      .parquet(s"$dir/metrics")
+    def committed(parent: File): Seq[File] =
+      Option(parent.listFiles()).toSeq.flatten
+        .filter(d => d.isDirectory && new File(d, "_SUCCESS").exists())
+        .sortBy(_.getName)
+    def fields(unit: File, side: String): Seq[Array[String]] = {
+      val p = new File(unit, side).toPath
+      if (Files.exists(p)) Files.readAllLines(p).asScala.toSeq.map(_.split('\t')) else Nil
+    }
+    val units = committed(new File(runDir)).flatMap { s =>
+      (s.getName, s, 0) +: committed(s).collect {
+        case c if c.getName.startsWith("chunk=") => (s.getName, c, c.getName.stripPrefix("chunk=").toInt)
+      }
+    }
+    val lineage = units.flatMap { case (stage, u, part) =>
+      fields(u, "_lineage").map(f => LineageRow(stage, runId, part, f(0).toLong, f(1).toLong))
+    }
+    val metrics = units.flatMap { case (stage, u, _) =>
+      fields(u, "_metrics").map(f => MetricRow(stage, runId, f(0), f(1).toDouble))
+    }
+    lineage.toDF().coalesce(1).write.mode("overwrite").parquet(s"$runDir/lineage")
+    metrics.toDF().coalesce(1).write.mode("overwrite").parquet(s"$runDir/metrics")
   }
 }

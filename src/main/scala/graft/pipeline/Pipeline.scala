@@ -209,9 +209,9 @@ object Pipeline {
     }
 
   /** Metrics of the clusters stage: the row count comes from the
-    * lineage pass, the distinct-cluster count is one pruned
-    * single-column aggregate. `ccIters` is read when the background
-    * metrics run, after the stage's compute has set it. */
+    * write's lineage fold, the distinct-cluster count is one pruned
+    * single-column aggregate. `ccIters` is read after the stage's
+    * compute has set it. */
   private def clusterMetrics(ccIters: => Int)(out: DataFrame, total: Long): Seq[(String, Double)] = Seq(
     "docs" -> total.toDouble,
     "clusters" -> out.agg(countDistinct(col("cluster_id"))).head().getLong(0).toDouble,
@@ -227,14 +227,14 @@ object Pipeline {
     ids.back(Attach.attachSingletons(assign, evidence), Seq("doc_id", "cluster_id"))
       .repartitionByRange(col("cluster_id"), col("doc_id"))
 
-  /** Return path of [[run]] and [[runDelta]]: the background
-    * lineage/metrics barrier (the metrics table must be complete, and
-    * any guard failure surfaced, before the run returns), then the
-    * decoded Result. Drops EVERY chunk_<n> column, not just the current
-    * modulus: a candidates checkpoint resumed under a different
-    * scoreChunks carries its writer's chunk_<old> partition column,
-    * which would otherwise leak into Result.candidates and change its
-    * schema between a fresh run and a resume. */
+  /** Return path of [[run]] and [[runDelta]]: rebuild the run dir's
+    * lineage and metrics tables from its committed units (see
+    * Lineage), then the decoded Result. Drops EVERY chunk_<n> column,
+    * not just the current modulus: a candidates checkpoint resumed
+    * under a different scoreChunks carries its writer's chunk_<old>
+    * partition column, which would otherwise leak into
+    * Result.candidates and change its schema between a fresh run and a
+    * resume. */
   private def finish(
       ck: Ckpt,
       ids: IdSpace,
@@ -244,7 +244,7 @@ object Pipeline {
       ccIters: Int
   ): Result = {
     graft.util.PhaseTracker.set("other")
-    ck.await()
+    Lineage.rebuild(ck.spark, ck.runDir, ck.runId)
     val chunkCols = candidates.columns.filter(_.matches("chunk_\\d+"))
     Result(
       ids.back(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
@@ -255,58 +255,14 @@ object Pipeline {
   }
 
   /** Checkpoint-stage writer shared by [[run]] and [[runDelta]]: write
-    * to `runDir/name` with `_SUCCESS`-gated idempotent resume, lineage
-    * rows and a metrics table.
-    *
-    * Round-6 latency change (guide §2.6 "overlap independent jobs"):
-    * the lineage aggregation and the metrics jobs of a committed stage
-    * run on a small background pool, so the NEXT stage's compute
-    * backfills the cores they leave idle instead of waiting behind
-    * them (at bench scale the blocking stage's lineage+metrics jobs
-    * were ~300 core-s of purely sequential tail). The stage row count
-    * is read out of the lineage pass itself (sum of per-partition
-    * output_rows) instead of a separate count() job — `metrics`
-    * therefore receives (stage output, total rows). Appends to the
-    * shared lineage/metrics tables are serialized by a lock (two
-    * concurrent FileOutputCommitter runs on one path collide in
-    * `_temporary/0`), and [[await]] rethrows any background failure
-    * before the pipeline returns, so a caller still observes every
-    * metric error — at the end of the run instead of at the
-    * stage boundary. Crash-window semantics are unchanged in kind: a
-    * kill between a stage `_SUCCESS` and its metrics append already
-    * lost the metrics rows before this change; the window is merely
-    * wider, and a resume recomputes nothing either way. */
-  private final class Ckpt(val spark: SparkSession, val runDir: String, runId: String) {
-    private val metaLock = new Object
-    private val pending = new java.util.concurrent.ConcurrentLinkedQueue[scala.concurrent.Future[Unit]]()
-    private val metaPool = {
-      import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
-      val p = new ThreadPoolExecutor(2, 2, 1L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
-        (r: Runnable) => { val t = new Thread(r, "ckpt-meta"); t.setDaemon(true); t })
-      // a run that throws before await() still leaves no idle threads
-      p.allowCoreThreadTimeOut(true)
-      p
-    }
-    private val metaEc = scala.concurrent.ExecutionContext.fromExecutor(metaPool)
-
-    /** Submit background lineage+metrics work for a stage that just
-      * committed. `lineageOf` is hashed in one pass that also yields
-      * the row count handed to `metrics`. */
-    def meta(name: String, lineageOf: DataFrame, wallMs: Double)(
-        metrics: Long => Seq[(String, Double)]
-    ): Unit =
-      pending.add(scala.concurrent.Future {
-        val lr = Lineage.lineageRows(lineageOf, name, runId)
-        val schema = lr.schema
-        val rows = lr.collect()
-        val total = rows.iterator.map(_.getLong(3)).sum
-        val ms = metrics(total) :+ ("wall_ms" -> wallMs)
-        metaLock.synchronized {
-          Lineage.writeCollectedLineage(spark, rows, schema, runDir)
-          Lineage.writeMetrics(spark, name, runId, ms, runDir)
-        }
-      }(metaEc))
-
+    * to `runDir/name` with `_SUCCESS`-gated idempotent resume. The
+    * commit order is data → metadata → `_SUCCESS` (Lineage.write and
+    * Lineage.commit): the write job observes the stage's lineage fold,
+    * and `metrics` receives (stage output, row count from that fold)
+    * and runs before the commit. So a committed stage always carries
+    * its lineage and metrics, and a metric failure surfaces at the
+    * stage that caused it. */
+  private final class Ckpt(val spark: SparkSession, val runDir: String, val runId: String) {
     def stage(
         name: String,
         metrics: (DataFrame, Long) => Seq[(String, Double)] = (_, _) => Nil,
@@ -317,29 +273,13 @@ object Pipeline {
       val path = s"$runDir/$name"
       if (!done(path)) {
         val t0 = System.nanoTime()
-        compute.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+        val fold = Lineage.write(compute, path, partitionCols)
         val out = spark.read.parquet(path)
         val wallMs = (System.nanoTime() - t0) / 1e6
-        meta(name, out, wallMs)(total => metrics(out, total))
+        Lineage.commit(path, Some(fold), metrics(out, fold._1) :+ ("wall_ms" -> wallMs))
       }
       spark.read.parquet(path)
     }
-
-    /** Barrier: every background lineage/metrics job has committed (or
-      * its failure is rethrown). Called before run/runDelta returns so
-      * the metrics table is complete for readers (Bench, resume). Ends
-      * the Ckpt: the pool's threads have exited when this returns. */
-    def await(): Unit =
-      try {
-        var f = pending.poll()
-        while (f != null) {
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-          f = pending.poll()
-        }
-      } finally {
-        metaPool.shutdown()
-        metaPool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
-      }
   }
 
   /** Stages S0 (doc reps) + S1 (span-text dictionary, size-gated) +
@@ -449,12 +389,13 @@ object Pipeline {
               val chunk =
                 if (chunkPruned) candidates.where(col(chunkCol(cfg)) === i)
                 else candidates.where(pmod(col("salt"), lit(cfg.scoreChunks)) === i)
-              (dictSide match {
+              val scoredChunk = dictSide match {
                 case Some((txtIds, bc)) =>
                   Scoring.scoreWithRepsFused(chunk, txtIds, mediaRep, cfg.weights, bc)
                 case None =>
                   Scoring.scoreWithRepsDirect(chunk, textRep, mediaRep, cfg.weights)
-              }).write.mode("overwrite").parquet(cpath)
+              }
+              Lineage.commit(cpath, Some(Lineage.write(scoredChunk, cpath)), Nil)
             } catch {
               // the first failure is the cause; a sibling's cancellation is its consequence
               case e: Throwable => if (failure.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
@@ -481,23 +422,19 @@ object Pipeline {
         }
         throw failure.get
       }
-      val out = spark.read.parquet(scoredPath).drop("chunk")
       val wallMs = (System.nanoTime() - t0) / 1e6
-      // lineage + metrics in the background (Ckpt.meta): the total
-      // comes from the lineage pass, the matched count is one pruned
-      // single-column job — clustering starts immediately and
-      // backfills both
-      ck.meta("scored_pairs", out, wallMs) { total =>
-        Seq(
-          "scored_pairs" -> total.toDouble,
-          "matched_pairs" -> out.where(col("is_match")).count().toDouble,
-          // dictionary-gate audit trail: the estimated broadcast bytes
-          // and whether the run was forced off the fused path
-          "dict_bcast_bytes" -> dictBcastBytes.toDouble,
-          "dict_fallback" -> (if (dictSide.isEmpty) 1.0 else 0.0)
-        )
-      }
-      new java.io.File(s"$scoredPath/_SUCCESS").createNewFile()
+      // the stage's lineage is its chunks' (each committed with its own
+      // fold); its metrics come from one pruned aggregate over all chunks
+      val g = spark.read.parquet(scoredPath).agg(count(lit(1)), count_if(col("is_match"))).head()
+      Lineage.commit(scoredPath, None, Seq(
+        "scored_pairs" -> g.getLong(0).toDouble,
+        "matched_pairs" -> g.getLong(1).toDouble,
+        // dictionary-gate audit trail: the estimated broadcast bytes
+        // and whether the run was forced off the fused path
+        "dict_bcast_bytes" -> dictBcastBytes.toDouble,
+        "dict_fallback" -> (if (dictSide.isEmpty) 1.0 else 0.0),
+        "wall_ms" -> wallMs
+      ))
     }
     spark.read.parquet(scoredPath).drop("chunk")
   }

@@ -51,8 +51,9 @@ final case class ScoredPair(
   * across reruns — resume idempotency requirement). */
 final case class ClusterAssignment(doc_id: String, cluster_id: String)
 
-/** Per-partition lineage row, one per (stage, partition); see SURVEY.md
-  * §7.3 item 6. */
+/** Lineage row, one per checkpoint write unit: partition_id is the
+  * scoring chunk for `scored_pairs`, 0 for every other stage (see
+  * graft.lineage.Lineage and SURVEY.md §7.3 item 6). */
 final case class LineageRow(
     stage: String,
     run_id: String,

@@ -169,18 +169,6 @@ object Scoring {
     scoreWithRepsFused(candidates, textIdsRep(txt, dict), mediaRep(docs), w, broadcastDict(dict))
   }
 
-  /** Anti-join resume: the candidate pairs NOT yet present in a
-    * (possibly partial) scored checkpoint — the reference's cache
-    * semantics, where cached results are removed from the work set
-    * (reference: src/api/optimized_api_server.py:673-700). Use with a
-    * partial `scored_pairs` table to recompute only missing pairs. */
-  def unscored(candidates: DataFrame, scoredCheckpoint: DataFrame): DataFrame =
-    candidates.join(
-      scoredCheckpoint.select("doc_a", "doc_b"),
-      Seq("doc_a", "doc_b"),
-      "left_anti"
-    )
-
   /** Dense dictionary of the distinct normalized span texts:
     * (t, tid:int), ids assigned in text sort order (range-sort +
     * zipWithIndex — no single-partition global sort; the pipeline

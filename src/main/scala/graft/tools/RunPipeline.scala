@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import graft.schema.Fixture
 import graft.pipeline.Pipeline
 
@@ -29,7 +30,10 @@ object RunPipeline {
     println(f"pipeline done in $sec%.1f s; ccIterations=${res.ccIterations}")
     println(s"clusters rows=${res.clusters.count()} distinct=${res.clusters.select("cluster_id").distinct().count()}")
     spark.read.parquet(s"$runDir/metrics").show(50, false)
-    spark.read.parquet(s"$runDir/lineage").groupBy("stage").count().show()
+    // the per-stage fold runs are compared on
+    spark.read.parquet(s"$runDir/lineage").groupBy("stage")
+      .agg(sum("output_rows").as("rows"), bit_xor(col("content_hash")).as("content_hash"))
+      .orderBy("stage").show(50, false)
     spark.stop()
   }
 }

@@ -28,13 +28,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(result.clusters.select("doc_id").distinct().count() == n)
   }
 
-  test("a returned run leaves no checkpoint-metadata thread behind") {
-    result.clusters.count()
-    val live = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
-      .filter(t => t.isAlive && t.getName == "ckpt-meta")
-    assert(live.isEmpty, s"${live.length} ckpt-meta threads outlived Pipeline.run")
-  }
-
   test("cluster ids are members of their own cluster (canonical-id stability)") {
     // canonical id = the doc_id of the min-nid member (dictIds path):
     // must BE a member, and must be the same member on every rerun
@@ -203,6 +196,40 @@ class PipelineSpec extends AnyFunSuite {
     FileUtils.deleteQuietly(dir)
   }
 
+  test("a crash at any commit point resumes to complete, duplicate-free lineage and metrics") {
+    import org.apache.commons.io.FileUtils
+    result.clusters.count()
+    val dir = Files.createTempDirectory("graft_pipe_crash").toFile
+    FileUtils.copyDirectory(new java.io.File(runDir), dir)
+    def rm(paths: String*): Unit = paths.foreach(p => FileUtils.deleteQuietly(new java.io.File(dir, p)))
+    def lineage = spark.read.parquet(s"$dir/lineage")
+    def folds(): Map[String, (Long, Long)] =
+      lineage.groupBy("stage").agg(sum("output_rows"), bit_xor(col("content_hash")))
+        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val before = folds()
+    val clusters = result.clusters.orderBy("doc_id").collect().toSeq
+    // one lineage row per write unit: the 8 scoring chunks, one per other stage
+    val units = before.keySet.map(s => s -> (if (s == "scored_pairs") 8L else 1L)).toMap
+    val crashes = Seq[(String, () => Unit)](
+      "data written, no metadata, no _SUCCESS" ->
+        (() => rm("clusters/_SUCCESS", "clusters/_lineage", "clusters/_metrics")),
+      "metadata written, no _SUCCESS" -> (() => rm("candidates/_SUCCESS", "text_rep", "media_rep", "text_dict",
+        "text_ids", "scored_pairs", "clusters")),
+      "one chunk lost" -> (() => rm("scored_pairs/_SUCCESS", "scored_pairs/chunk=2"))
+    )
+    crashes.foreach { case (what, crash) =>
+      crash()
+      val resumed = Pipeline.run(spark, docs, dir.toString)
+      val dup = spark.read.parquet(s"$dir/metrics").groupBy("stage", "name").count().where(col("count") =!= 1)
+      assert(dup.count() == 0, s"$what: metrics rows not one per (stage, name): ${dup.collect().mkString(" ")}")
+      val rows = lineage.groupBy("stage").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(rows == units, s"$what: lineage rows per stage")
+      assert(folds() == before, s"$what: per-stage lineage fold (rows, hash) changed")
+      assert(resumed.clusters.orderBy("doc_id").collect().toSeq == clusters, s"$what: clusters changed")
+    }
+    FileUtils.deleteQuietly(dir)
+  }
+
   test("resume is idempotent: rerun recomputes nothing and clusters are identical") {
     val before = result.clusters.orderBy("doc_id").collect().toSeq
     val t0 = System.nanoTime()
@@ -267,9 +294,18 @@ class PipelineSpec extends AnyFunSuite {
 
   test("lineage covers every stage; metrics recorded") {
     val lineage = spark.read.parquet(s"$runDir/lineage")
-    val stages = lineage.select("stage").distinct().collect().map(_.getString(0)).toSet
-    assert(stages == Set("candidates", "text_rep", "media_rep", "text_dict", "text_ids",
+    val folds = lineage.groupBy("stage").agg(sum("output_rows"), bit_xor(col("content_hash")))
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(folds.keySet == Set("candidates", "text_rep", "media_rep", "text_dict", "text_ids",
       "scored_pairs", "clusters"))
+    // the fold observed by each write equals one over the checkpoint as
+    // it reads back (candidates' partition column last, chunk dropped)
+    folds.foreach { case (stage, fold) =>
+      val out = spark.read.parquet(s"$runDir/$stage").drop("chunk")
+      val g = out.agg(count(lit(1)), coalesce(bit_xor(xxhash64(out.columns.toIndexedSeq.map(col): _*)), lit(0L)))
+        .head()
+      assert(fold == ((g.getLong(0), g.getLong(1))), s"$stage: lineage fold differs from its read-back")
+    }
     val metrics = spark.read.parquet(s"$runDir/metrics")
     val names = metrics.select("name").collect().map(_.getString(0)).toSet
     assert(names.contains("candidate_pairs") && names.contains("cc_iterations") && names.contains("dropped_pairs_est"))

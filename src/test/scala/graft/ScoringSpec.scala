@@ -69,18 +69,6 @@ class ScoringSpec extends AnyFunSuite {
     assert(!m && s < 2.0, s"hot-asset-only pair must score low (score=$s)")
   }
 
-  test("anti-join resume: unscored returns exactly the complement of a partial checkpoint") {
-    import spark.implicits._
-    val cand = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")).toDF("doc_a", "doc_b")
-    val partial = Seq(("a", "b"), ("b", "c")).toDF("doc_a", "doc_b")
-    val rest = Scoring.unscored(cand, partial)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(rest == Set(("a", "c"), ("c", "d")))
-    // complement ∪ checkpoint = full work set, no overlap
-    assert(Scoring.unscored(cand, cand.limit(0)).count() == 4)
-    assert(Scoring.unscored(cand, cand).count() == 0)
-  }
-
   test("docs with no media are unaffected by the media field when text is decisive") {
     val d = background ++ Seq(
       Doc("n01", Seq(text("ladu miko pera sonte velu", 0), text("karo bine tasselo morid vanu", 1))),
