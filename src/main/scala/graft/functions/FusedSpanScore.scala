@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
   * The span kernels then are most of what is left: single-threaded on
   * the benchmark's `full` corpus (≈26 span pairs per candidate pair,
   * 4-core Xeon), this call measured 51–60 µs/pair with a per-call SWAR
-  * Jaro-Winkler and Spark's `levenshteinDistance`, and 16–22 µs/pair
-  * with the pattern-match table and Myers kernels below
-  * (perfbench `functions.fused_ns_per_pair`, three seeds each).
+  * Jaro-Winkler and Spark's `levenshteinDistance`, 16–22 µs/pair with
+  * the pattern-match table and Myers kernels below (11.7–13.0 when
+  * re-measured), and 7.8–8.8 µs/pair once the JW match scan went
+  * branch-free (perfbench `functions.fused_ns_per_pair`, seeds 1–3).
   *
   * Value-identical to the exploded formulation by construction: max
   * and bit-OR are order-independent, and per span pair the arithmetic

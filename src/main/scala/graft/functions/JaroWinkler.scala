@@ -76,9 +76,11 @@ object JW {
   /** The match scan over a loaded table: for each byte of `a`,
     * `pm(a(i)) & ~claimed & window` is the set of free matching
     * positions of `b` inside the match window, and its lowest set bit
-    * is exactly the reference scan's greedy choice. One table lookup
-    * and a few word operations per byte of `a`, no per-call mask
-    * building; transpositions walk only the matched bits. Abort-check
+    * is exactly the reference scan's greedy choice. The per-byte step
+    * is branch-free (most span pairs run the whole scan, and a
+    * matched-or-not branch mispredicts on real text): `bit` is the
+    * claimed position or 0, `nz` its 0/1 flag. Transpositions walk only
+    * the matched bits, also branch-free. Abort-check
     * placement matches the reference kernel exactly, so thresholded
     * results agree too (bit-identical to [[jwAsciiSmallRef]]:
     * JaroWinklerSpec, SpanKernelPropSpec). */
@@ -102,18 +104,16 @@ object JW {
     var matches = 0
     var i = 0
     while (i < la) {
+      // bits lo..hi, 0 when hi < lo (a past b's end; an empty b has an empty table)
       val lo = math.max(0, i - window)
       val hi = math.min(lb - 1, i + window)
-      if (hi >= lo) {
-        val winMask = (-1L >>> (63 - hi)) & (-1L << lo) // bits lo..hi
-        val valid = pm(a.getByte(i)) & ~bM & winMask
-        if (valid != 0L) {
-          val k = java.lang.Long.numberOfTrailingZeros(valid)
-          aM |= 1L << i
-          bM |= 1L << k
-          matches += 1
-        }
-      }
+      val winMask = (-1L >>> (63 - hi)) & (-1L << lo)
+      val valid = pm(a.getByte(i)) & ~bM & winMask
+      val bit = valid & -valid
+      val nz = (bit | -bit) >>> 63
+      bM |= bit
+      aM |= nz << i
+      matches += nz.toInt
       i += 1
       if (cutoff > 0.0 && (i & 7) == 0) {
         val mMax = (matches + (la - i)).toDouble
@@ -128,7 +128,8 @@ object JW {
     while (am != 0L) {
       val ka = java.lang.Long.numberOfTrailingZeros(am)
       val kb = java.lang.Long.numberOfTrailingZeros(bm)
-      if (a.getByte(ka) != b.getByte(kb)) t += 1
+      val x = a.getByte(ka) ^ b.getByte(kb)
+      t += (x | -x) >>> 31 // 1 iff x ≠ 0
       am &= am - 1L
       bm &= bm - 1L
     }

@@ -271,14 +271,16 @@ object Pipeline {
         compute: => DataFrame
     ): DataFrame = {
       val path = s"$runDir/$name"
-      if (!done(path)) {
+      if (done(path)) spark.read.parquet(path)
+      else {
         val t0 = System.nanoTime()
         val fold = Lineage.write(compute, path, partitionCols)
+        // the stage's one read: commit adds only files hidden from it
         val out = spark.read.parquet(path)
         val wallMs = (System.nanoTime() - t0) / 1e6
         Lineage.commit(path, Some(fold), metrics(out, fold._1) :+ ("wall_ms" -> wallMs))
+        out
       }
-      spark.read.parquet(path)
     }
   }
 
@@ -311,8 +313,8 @@ object Pipeline {
     // open, not a multi-GB dictionary broadcast it never reads.
     val scoredPath = s"$runDir/scored_pairs"
     if (!done(scoredPath)) {
-      // Stage S0 — doc representations, checkpointed once and shared by
-      // every scoring chunk (recomputing them per chunk would re-scan
+      // Stage S0 — doc representations, checkpointed once and read by
+      // S1 and the fallback (recomputing them per chunk would re-scan
       // the whole input scoreChunks times). NOTE: media_rep is
       // independent of the text chain and COULD run concurrently with
       // it (guide §2.6) — tried in round 6 and reverted: the bench
@@ -326,7 +328,8 @@ object Pipeline {
         case None => Scoring.mediaRep(docs)
       })
 
-      // Stage S1 — dense span-text dictionary + id-encoded rep,
+      // Stage S1 — dense span-text dictionary + the per-doc rep every
+      // chunk joins twice (`text_ids`: span-text ids + media_rep array),
       // checkpointed once; the dictionary is broadcast once and every
       // chunk's fused kernel reads it (see Scoring.scoreWithRepsFused).
       // Dictionary-size gate (see Cfg.dictMaxBytes): estimate the
@@ -344,8 +347,8 @@ object Pipeline {
       }
       val dictSide =
         if (dictBcastBytes <= cfg.dictMaxBytes) {
-          val txtIds = ck.stage("text_ids")(Scoring.textIdsRep(textRep, dict))
-          Some((txtIds, Scoring.broadcastDict(dict)))
+          val rep = ck.stage("text_ids")(Scoring.textIdsRep(textRep, dict, mediaRep))
+          Some((rep, Scoring.broadcastDict(dict)))
         } else {
           System.err.println(
             f"[pipeline] span-text dictionary ≈ ${dictBcastBytes / 1e6}%.0f MB exceeds " +
@@ -390,8 +393,7 @@ object Pipeline {
                 if (chunkPruned) candidates.where(col(chunkCol(cfg)) === i)
                 else candidates.where(pmod(col("salt"), lit(cfg.scoreChunks)) === i)
               val scoredChunk = dictSide match {
-                case Some((txtIds, bc)) =>
-                  Scoring.scoreWithRepsFused(chunk, txtIds, mediaRep, cfg.weights, bc)
+                case Some((rep, bc)) => Scoring.scoreWithRepsFused(chunk, rep, cfg.weights, bc)
                 case None =>
                   Scoring.scoreWithRepsDirect(chunk, textRep, mediaRep, cfg.weights)
               }
@@ -425,7 +427,8 @@ object Pipeline {
       val wallMs = (System.nanoTime() - t0) / 1e6
       // the stage's lineage is its chunks' (each committed with its own
       // fold); its metrics come from one pruned aggregate over all chunks
-      val g = spark.read.parquet(scoredPath).agg(count(lit(1)), count_if(col("is_match"))).head()
+      val out = spark.read.parquet(scoredPath)
+      val g = out.agg(count(lit(1)), count_if(col("is_match"))).head()
       Lineage.commit(scoredPath, None, Seq(
         "scored_pairs" -> g.getLong(0).toDouble,
         "matched_pairs" -> g.getLong(1).toDouble,
@@ -435,8 +438,8 @@ object Pipeline {
         "dict_fallback" -> (if (dictSide.isEmpty) 1.0 else 0.0),
         "wall_ms" -> wallMs
       ))
-    }
-    spark.read.parquet(scoredPath).drop("chunk")
+      out.drop("chunk")
+    } else spark.read.parquet(scoredPath).drop("chunk")
   }
 
   /** Run (or resume) the pipeline. `docs` must have the input_hint

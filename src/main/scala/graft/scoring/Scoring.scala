@@ -140,6 +140,14 @@ object Scoring {
 
   private val emptyMedias = array().cast("array<struct<media_ref:string,dffrac:double>>")
 
+  /** |medias_a ∩ medias_b| / |medias_a ∪ medias_b|, 0 when both are empty. */
+  private val mediaJaccard: Column =
+    when(
+      size(array_union(col("medias_a"), col("medias_b"))) > 0,
+      size(array_intersect(col("medias_a"), col("medias_b"))).cast("double") /
+        size(array_union(col("medias_a"), col("medias_b")))
+    ).otherwise(lit(0.0))
+
   private def mediaScore(w: Weights): Column = {
     val shared = array_intersect(col("medias_a"), col("medias_b"))
     val sumShared = aggregate(
@@ -166,7 +174,7 @@ object Scoring {
   def score(candidates: DataFrame, docs: DataFrame, w: Weights = Weights()): DataFrame = {
     val txt = textRep(docs).localCheckpoint(true)
     val dict = textDictDense(txt).localCheckpoint(true)
-    scoreWithRepsFused(candidates, textIdsRep(txt, dict), mediaRep(docs), w, broadcastDict(dict))
+    scoreWithRepsFused(candidates, textIdsRep(txt, dict, mediaRep(docs)), w, broadcastDict(dict))
   }
 
   /** Dense dictionary of the distinct normalized span texts:
@@ -184,22 +192,30 @@ object Scoring {
       .toDF("t", "tid")
   }
 
-  /** Per-doc span-text ids: (doc_id, tids:array<int>), index-aligned
-    * with textRep's texts array (one shuffle join of the exploded rep
-    * against the dictionary; empty-texts docs keep an empty array). */
-  def textIdsRep(txt: DataFrame, dict: DataFrame): DataFrame =
+  /** Per-doc rep that every scoring chunk joins twice: (doc_id,
+    * tids:array<int>, medias). `tids` are index-aligned with textRep's
+    * texts array (one shuffle join of the exploded rep against the
+    * dictionary; empty-texts docs keep an empty array); `medias` is the
+    * doc's [[mediaRep]] array, empty for docs without media. */
+  def textIdsRep(txt: DataFrame, dict: DataFrame, med: DataFrame): DataFrame =
     txt.select(col("doc_id"), posexplode_outer(col("texts")).as(Seq("ia", "t")))
-      // shuffle-hash build on the dictionary side: unhinted this is a
-      // SortMergeJoin that sorts the exploded span rows AND the
-      // dictionary by the text column (string sort) — the most
-      // expensive possible key (guide §3.1)
-      .join(dict.hint("shuffle_hash"), Seq("t"), "left")
+      // no join hint: shuffle_hash on the dictionary measured neutral
+      // (benchmark full/sparse, 3 interleaved pairs each, 4 cores; median
+      // task core-s hinted → unhinted 2.848 → 2.796 and 1.305 → 1.320),
+      // and unhinted the planner may broadcast a small dictionary or
+      // use a sort-merge join, which spills where a hash build cannot
+      .join(dict, Seq("t"), "left")
       .groupBy("doc_id")
       .agg(
         sort_array(collect_list(when(col("ia").isNotNull, struct(col("ia"), col("tid")))))
           .as("ps")
       )
-      .select(col("doc_id"), transform(col("ps"), s => s.getField("tid")).as("tids"))
+      .join(med, Seq("doc_id"), "left")
+      .select(
+        col("doc_id"),
+        transform(col("ps"), s => s.getField("tid")).as("tids"),
+        coalesce(col("medias"), emptyMedias).as("medias")
+      )
 
   /** Collect + broadcast the dictionary as a tid-indexed flat UTF-8
     * blob ([[graft.functions.PackedDict]]: one byte array + one offset
@@ -233,80 +249,59 @@ object Scoring {
 
   /** Stage S: score against precomputed doc representations (the
     * pipeline checkpoints them once and reuses them across resume-able
-    * scoring chunks). One row per candidate pair end to end: the text
-    * kernel — best JW, rescue-Levenshtein, strong-span bit masks — runs
-    * as a single codegen'd expression over the two dict-id arrays
-    * ([[graft.functions.FusedSpanKernel]]), so there is no Generate and
-    * no aggregate. `txtIds` from [[textIdsRep]], `bc` from
-    * [[broadcastDict]], both derived from the same textRep.
-    * Value-identical to [[scoreWithRepsDirect]] (ScoringDedupSpec).
+    * scoring chunks). One row per candidate pair end to end: the pair
+    * stream joins the per-doc rep on `doc_a` and on `doc_b`, and one
+    * projection computes the whole score — the text kernel (best JW,
+    * rescue-Levenshtein, strong-span bit masks) as a single codegen'd
+    * expression over the two dict-id arrays
+    * ([[graft.functions.FusedSpanKernel]]), the media terms over the two
+    * media arrays, and the FS combination. No Generate, no aggregate.
+    * `rep` from [[textIdsRep]], `bc` from [[broadcastDict]], both
+    * derived from the same textRep. Value-identical to
+    * [[scoreWithRepsDirect]] (ScoringDedupSpec).
     *
-    * PRECONDITION: `candidates` must be distinct on (doc_a, doc_b):
-    * both branches join at candidate-row grain, so a duplicate input
-    * pair yields duplicate scored rows. Blocking.candidatesFromKeys
-    * guarantees it; a dropDuplicates here would add a full shuffle of
-    * the candidate set to every scoring chunk. */
+    * PRECONDITION: `candidates` must be distinct on (doc_a, doc_b): the
+    * joins keep candidate-row grain, so a duplicate input pair yields
+    * duplicate scored rows. Blocking.candidatesFromKeys guarantees it; a
+    * dropDuplicates here would add a full shuffle of the candidate set
+    * to every scoring chunk. */
   def scoreWithRepsFused(
       candidates: DataFrame,
-      txtIds: DataFrame,
-      med: DataFrame,
+      rep: DataFrame,
       w: Weights,
       bc: org.apache.spark.broadcast.Broadcast[graft.functions.PackedDict]
   ): DataFrame = {
-    // Two independent pair-grain branches joined on (doc_a, doc_b) —
-    // deliberately NOT one join chain: a single chain would carry the
-    // tids_a/medias_a array payloads through the two later sort-merge
-    // joins, and sorting var-length rows ×8 concurrent chunk jobs was
-    // a measured in-pipeline LOSS (scoring stage 1,333 vs 923 CPU
-    // core-s for an exploded-span formulation) despite the kernel
-    // itself being cheaper. In this shape each array rides exactly ONE
-    // join. Join strategy is the planner's: forcing SHUFFLE_HASH builds
-    // measured neutral (the sort-merge sorts are radix sorts over long
-    // keys), and broadcasting the reps measured a CPU loss on one box
-    // (broadcast hash-relation builds cost more than local exchanges).
-    val pairs = candidates.select("doc_a", "doc_b")
-    val textPair = pairs
-      .join(txtIds.select(col("doc_id").as("doc_a"), col("tids").as("tids_a")), "doc_a")
-      .join(txtIds.select(col("doc_id").as("doc_b"), col("tids").as("tids_b")), "doc_b")
+    // One join chain with both rep arrays on both joins. The earlier
+    // shape kept each array on one sort-merge join (text and media
+    // branches merged at pair grain: 5 joins, 10 exchanges per chunk)
+    // because an exploded-span chain had lost at 32 threads; with the
+    // score one per-row expression that no longer holds. On the
+    // benchmark's `full` corpus (4 cores, traced seeds 1-3) AQE
+    // broadcasts the rep, a call runs 102 jobs instead of 136 and stage
+    // S shuffles 2.3 MB instead of 9.0 MB. Join strategy is the planner's.
+    def side(s: String): DataFrame =
+      rep.select(col("doc_id").as(s"doc_$s"), col("tids").as(s"tids_$s"), col("medias").as(s"medias_$s"))
+    val joined = candidates.select("doc_a", "doc_b")
+      .join(side("a"), "doc_a")
+      .join(side("b"), "doc_b")
       .select(
         col("doc_a"), col("doc_b"),
         graft.functions.FusedSpanScore.score(
-          col("tids_a"), col("tids_b"), 0.75, w.jwStrong, w.levStrong, bc).as("r")
+          col("tids_a"), col("tids_b"), 0.75, w.jwStrong, w.levStrong, bc).as("r"),
+        mediaScore(w).as("m_score"),
+        mediaJaccard.as("media_jaccard")
       )
       .select(
-        col("doc_a"), col("doc_b"),
+        col("doc_a"), col("doc_b"), col("m_score"), col("media_jaccard"),
         col("r.jw_best").as("jw_best"),
         col("r.lev_best").as("lev_best"),
         col("r.mask_a").as("mask_a"),
         col("r.mask_b").as("mask_b")
       )
-    val joined = mediaPairScores(candidates, med, w)
-      .join(textPair, Seq("doc_a", "doc_b"))
       .withColumn("strong_a", bit_count(col("mask_a")).cast("long"))
       .withColumn("strong_b", bit_count(col("mask_b")).cast("long"))
       .withColumn("strong_min", least(col("strong_a"), col("strong_b")))
     finishScore(joined, w)
-  }
-
-  /** Media branch of [[scoreWithRepsFused]] at pair grain. */
-  private def mediaPairScores(candidates: DataFrame, med: DataFrame, w: Weights): DataFrame = {
-    val pairs = candidates.select("doc_a", "doc_b")
-    val medA = med.select(col("doc_id").as("doc_a"), col("medias").as("medias_a"))
-    val medB = med.select(col("doc_id").as("doc_b"), col("medias").as("medias_b"))
-    pairs
-      .join(medA, Seq("doc_a"), "left")
-      .join(medB, Seq("doc_b"), "left")
-      .withColumn("medias_a", coalesce(col("medias_a"), emptyMedias))
-      .withColumn("medias_b", coalesce(col("medias_b"), emptyMedias))
-      .select(
-        col("doc_a"), col("doc_b"),
-        mediaScore(w).as("m_score"),
-        when(
-          size(array_union(col("medias_a"), col("medias_b"))) > 0,
-          size(array_intersect(col("medias_a"), col("medias_b"))).cast("double") /
-            size(array_union(col("medias_a"), col("medias_b")))
-        ).otherwise(lit(0.0)).as("media_jaccard")
-      )
   }
 
   /** Final FS combination + decision gate of [[scoreWithRepsFused]]. */
@@ -339,11 +334,7 @@ object Scoring {
       .select(
         col("doc_a"), col("doc_b"),
         mediaScore(w).as("m_score"),
-        when(
-          size(array_union(col("medias_a"), col("medias_b"))) > 0,
-          size(array_intersect(col("medias_a"), col("medias_b"))).cast("double") /
-            size(array_union(col("medias_a"), col("medias_b")))
-        ).otherwise(lit(0.0)).as("media_jaccard")
+        mediaJaccard.as("media_jaccard")
       )
 
     // --- text branch: slim exploded span pairs ---

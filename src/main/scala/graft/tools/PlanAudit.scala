@@ -64,13 +64,14 @@ object PlanAudit {
       val txt = graft.scoring.Scoring.textRep(docs).localCheckpoint(true)
       val med = graft.scoring.Scoring.mediaRep(docs).localCheckpoint(true)
       val dict = graft.scoring.Scoring.textDictDense(txt).localCheckpoint(true)
-      val ids = graft.scoring.Scoring.textIdsRep(txt, dict).localCheckpoint(true)
-      audit("stage S — scoreWithRepsFused (default): two pair-grain branches, no Generate/aggregate",
-        "Text branch: the whole per-pair score — best JW, rescue-Levenshtein, strong-span masks — is ONE " +
-          "codegen'd expression over the two dict-id arrays (FusedSpanScore); the media branch left-joins " +
-          "the media sets. Each array payload rides exactly one sort-merge join; branches merge fixed-width at pair grain.",
+      val rep = graft.scoring.Scoring.textIdsRep(txt, dict, med).localCheckpoint(true)
+      audit("stage S — scoreWithRepsFused (default): one per-doc rep joined twice, no Generate/aggregate",
+        "The pair stream joins the per-doc rep (span-text ids + media set) on doc_a, then on doc_b; one " +
+          "projection computes the whole score — best JW, rescue-Levenshtein and strong-span masks as ONE " +
+          "codegen'd expression over the two dict-id arrays (FusedSpanScore), the media terms, the FS " +
+          "combination. Two joins per chunk, no branch merge.",
         graft.scoring.Scoring.scoreWithRepsFused(
-          cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
+          cand, rep, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
       audit("stage S — scoreWithRepsDirect (text-carrying fallback)",
         "Inline string kernels over the exploded stream — the unbounded-dictionary fallback; same value " +
           "semantics (ScoringDedupSpec).",

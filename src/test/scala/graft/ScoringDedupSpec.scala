@@ -29,9 +29,9 @@ class ScoringDedupSpec extends AnyFunSuite {
     val txt = Scoring.textRep(docs).localCheckpoint(true)
     val med = Scoring.mediaRep(docs).localCheckpoint(true)
     val dict = Scoring.textDictDense(txt).localCheckpoint(true)
-    val ids = Scoring.textIdsRep(txt, dict)
+    val rep = Scoring.textIdsRep(txt, dict, med)
     val a = Scoring.scoreWithRepsDirect(cand, txt, med).collect().map(r => key(r) -> r).toMap
-    val b = Scoring.scoreWithRepsFused(cand, ids, med, Scoring.Weights(), Scoring.broadcastDict(dict))
+    val b = Scoring.scoreWithRepsFused(cand, rep, Scoring.Weights(), Scoring.broadcastDict(dict))
       .collect().map(r => key(r) -> r).toMap
     assert(a.keySet == b.keySet,
       s"pair sets differ: only-direct=${(a.keySet -- b.keySet).take(5)} only-fused=${(b.keySet -- a.keySet).take(5)}")

@@ -77,4 +77,31 @@ class ScoringSpec extends AnyFunSuite {
     val (_, m, sm) = pairScore(d, "n01", "n02")
     assert(m && sm >= 2)
   }
+
+  test("a scoring chunk runs one per-doc rep through exactly 2 joins and at most 4 shuffles (broadcast off)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // own session: broadcast joins off (static and adaptive) without
+    // touching the shared session's conf
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val docs = graft.schema.Fixture.docs(s, graft.schema.Fixture.scales("t1")).toDF()
+    val cand = graft.blocking.Blocking.candidates(docs, graft.blocking.Blocking.Cfg()).localCheckpoint(true)
+    val txt = Scoring.textRep(docs).localCheckpoint(true)
+    val dict = Scoring.textDictDense(txt).localCheckpoint(true)
+    val rep = Scoring.textIdsRep(txt, dict, Scoring.mediaRep(docs)).localCheckpoint(true)
+    val scored = Scoring.scoreWithRepsFused(cand, rep, Scoring.Weights(), Scoring.broadcastDict(dict))
+    scored.write.format("noop").mode("overwrite").save()
+    // the executed plan with AQE unwrapped: the final plan and the plan
+    // inside every query stage
+    object Walk extends AdaptiveSparkPlanHelper
+    val plan: SparkPlan = scored.queryExecution.executedPlan
+    val joins = Walk.collect(plan) { case j: BaseJoinExec => j.nodeName }
+    val shuffles = Walk.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(joins.size == 2, s"joins: $joins\n$plan")
+    assert(shuffles.size <= 4, s"${shuffles.size} shuffle exchanges\n$plan")
+  }
 }

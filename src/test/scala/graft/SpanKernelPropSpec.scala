@@ -152,4 +152,58 @@ class SpanKernelPropSpec extends AnyFunSuite {
     }, 300)
     assert(hit63 > 0, "no case exercised span index 63 in the masks")
   }
+
+  // deterministic edges of the branch-free match scan: `a` running past
+  // `b`'s end (64 bytes against 1-3, so the match window of a's tail is
+  // empty), both sides 64 bytes (position 63 claimed), and window 0
+  // (both sides at most 3 bytes)
+  private val edgeCases: Seq[(String, String)] = {
+    val a64 = "abcdefghijklmnopqrstuvwxyz0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ+/"
+    val pastEnd = Seq("a", "/", "ab", "+/", "a/", "abc", "zyx", "Z+/").map(a64 -> _) ++
+      Seq(("a" * 64, "a"), ("a" * 64, "aaa"), ("ab" * 32, "ba"), ("x" * 63 + "y", "y"))
+    val full64 = Seq(
+      ("!" + a64.tail, a64), (a64.init + "!", a64), (a64.reverse, a64), ("ab" * 32, "ba" * 32),
+      (a64.tail + "a", a64), ("a" * 64, "a" * 63 + "b"), (a64.take(32) + a64.take(32), a64))
+    val window0 = Seq(("a", "b"), ("ab", "ba"), ("abc", "acb"), ("abc", "bca"), ("abc", "cab"),
+      ("ab", "abc"), ("abc", "abd"), ("ab", "b"), ("aa", "a"), ("aba", "bab"))
+    (pastEnd ++ full64 ++ window0).flatMap { case (x, y) => Seq((x, y), (y, x)) }
+  }
+
+  test("edge list: past-the-end, 64-byte and window-0 pairs equal the references in every kernel") {
+    assert(edgeCases.forall { case (a, b) => a != b && a.length <= 64 && b.length <= 64 })
+    for ((a, b) <- edgeCases; cutoff <- Seq(0.0, 0.75)) {
+      val (ua, ub) = (u(a), u(b))
+      val s = JW.jaroWinkler(a, b)
+      assert(bits(JW.jwAsciiSmall(ua, ub, cutoff)) == bits(JW.jwAsciiSmallRef(ua, ub, cutoff)),
+        s"jwAsciiSmall vs ref at cutoff $cutoff: '$a' / '$b'")
+      assert(bits(JW.jwGE(ua, ub, cutoff)) == bits(gate(s, cutoff)), s"jwGE $cutoff vs String: '$a' / '$b'")
+      assert(bits(JW.jw(ua, ub)) == bits(s), s"jw vs String: '$a' / '$b'")
+      assert(tableClean, "table left dirty")
+    }
+    // the fused kernel, one span pair per call over a dictionary of the
+    // same strings, against the String JW and Spark's Levenshtein
+    val spark = SparkTestSession.spark
+    val w = Scoring.Weights()
+    val pool = edgeCases.flatMap { case (a, b) => Seq(a, b) }.distinct.toArray
+    val id = pool.zipWithIndex.toMap
+    val bytes = pool.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val bc = spark.sparkContext.broadcast(new PackedDict(bytes.flatten, bytes.scanLeft(0)(_ + _.length)))
+    try {
+      for ((a, b) <- edgeCases; cutoff <- Seq(0.0, 0.75)) {
+        val (ua, ub) = (u(a), u(b))
+        val jw = gate(JW.jaroWinkler(a, b), cutoff)
+        val lev =
+          if (jw >= cutoff && jw < w.jwStrong)
+            1.0 - ua.levenshteinDistance(ub).toDouble / math.max(math.max(ua.numChars, ub.numChars), 1)
+          else 0.0
+        val strong = if (jw > 0.0 && (jw >= w.jwStrong || lev >= w.levStrong)) 1L else 0L
+        val r = FusedSpanKernel.score(bc, UnsafeArrayData.fromPrimitiveArray(Array(id(a))),
+          UnsafeArrayData.fromPrimitiveArray(Array(id(b))), cutoff, w.jwStrong, w.levStrong)
+        assert(bits(r.getDouble(0)) == bits(jw) && bits(r.getDouble(1)) == bits(if (jw > 0.0) lev else 0.0) &&
+          r.getLong(2) == strong && r.getLong(3) == strong,
+          s"fused at cutoff $cutoff: '$a' / '$b' gave $r, expected ($jw, $lev, $strong, $strong)")
+        assert(tableClean, "table left dirty")
+      }
+    } finally bc.destroy()
+  }
 }
