@@ -216,11 +216,10 @@ object Bench {
       .collect().map(r => (r.getString(0), r.getString(2)) -> r.getDouble(3)).toMap
     val nPairs = metrics.getOrElse(("scored_pairs", "scored_pairs"), 0.0)
     results("pir_blocking") = metrics.getOrElse(("candidates", "wall_ms"), 0.0) / 1000
-    // scoring = rep checkpoints (S0) + dict stages (S1) + chunked pair
+    // scoring = rep checkpoint (S0) + dict stages (S1) + chunked pair
     // scoring (S) — every stage-S checkpoint is charged to it
     results("pir_scoring") = (metrics.getOrElse(("scored_pairs", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_rep", "wall_ms"), 0.0) +
-      metrics.getOrElse(("media_rep", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_dict", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_ids", "wall_ms"), 0.0)) / 1000
     results("pir_clustering") = metrics.getOrElse(("clusters", "wall_ms"), 0.0) / 1000

@@ -55,7 +55,16 @@ object Lineage {
       .partitionBy(partitionCols: _*)
       .parquet(path)
     val m = obs.get
-    (m("rows").asInstanceOf[Long], m("hash").asInstanceOf[Long])
+    val rows = m("rows").asInstanceOf[Long]
+    // a partitioned write of no rows leaves no file to read a schema
+    // from: add one empty file with the read-back columns
+    if (rows == 0L && partitionCols.nonEmpty)
+      df.select(cols.toIndexedSeq.map(col): _*).limit(0)
+        .write
+        .mode("append")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(path)
+    (rows, m("hash").asInstanceOf[Long])
   }
 
   /** Commit a written unit: its lineage fold (if it is a lineage unit)

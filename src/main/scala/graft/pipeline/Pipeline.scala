@@ -44,24 +44,22 @@ object Pipeline {
       // a loss when the host's sync/writeback path is degraded; lower
       // scoreChunks on storage with expensive commits.
       scoreChunks: Int = 8,
-      // dictionary-encode doc ids to longs (nid = xxhash64(doc_id))
-      // through B/S/C: variable-width string ids otherwise ride every
+      // internal doc-id space through B/S/C. "hash" and "dense" encode
+      // ids to longs: variable-width string ids otherwise ride every
       // exploded span-pair row, every scored pair, and every CC
       // iteration — pure shuffle/aggregate payload. Long keys hash and
       // compare in one instruction and shrink the dominant streams.
       // Ids map back to strings at the clusters output (and lazily on
-      // the Result accessors); a distinct-count guard fails loudly on
-      // the ~n²/2⁶⁴ hash-collision case (at 10¹² docs switch to
-      // dictMode = "dense" instead).
-      dictIds: Boolean = true,
-      // "hash": nid = xxhash64(doc_id) — zero-shuffle encode, collision
-      // guard fails loudly at ~n²/2⁶⁴ odds. "dense": a stage-B0
-      // checkpointed dictionary of stable dense ids (range-sort +
-      // zipWithIndex) — one extra shuffle of the id column at encode
-      // time, but collision-FREE by construction: the 10¹²-doc mode,
-      // where birthday odds on 64-bit hashes (~2.7%) stop being
-      // ignorable.
-      dictMode: String = "hash",
+      // the Result accessors).
+      //  - "hash": nid = xxhash64(doc_id) — zero-shuffle encode; a
+      //    distinct-count guard fails loudly on the ~n²/2⁶⁴ collision.
+      //  - "dense": a stage-B0 checkpointed dictionary of stable dense
+      //    ids (range-sort + zipWithIndex) — one extra shuffle of the id
+      //    column at encode time, but collision-FREE by construction:
+      //    the 10¹²-doc mode, where birthday odds on 64-bit hashes
+      //    (~2.7%) stop being ignorable.
+      //  - "off": the input's string ids throughout.
+      ids: String = "hash",
       // byte budget for the span-text dictionary broadcast that the
       // fused stage-S kernel reads. The dictionary is the ONE broadcast
       // in the pipeline that grows with corpus size (distinct span
@@ -106,35 +104,42 @@ object Pipeline {
     * back to the direct kernels. At 2 GiB, bytes + 32·n ≤ 2³¹ already
     * keeps the blob within Int.MaxValue. `scoreChunks` sizes stage S's
     * chunk pool, so it must be positive. Returns the internal id space
-    * the Cfg selects: "off" (string ids), "hash" or "dense" (see
-    * Cfg.dictIds/dictMode). */
+    * (see Cfg.ids). */
   private def requireValid(cfg: Cfg): String = {
     require(cfg.dictMaxBytes <= (2L << 30),
       s"Cfg.dictMaxBytes must be at most 2 GiB (${2L << 30} bytes), got ${cfg.dictMaxBytes}")
     require(cfg.scoreChunks >= 1, s"Cfg.scoreChunks must be at least 1, got ${cfg.scoreChunks}")
-    val idMode = if (!cfg.dictIds) "off" else cfg.dictMode
-    require(Set("off", "hash", "dense").contains(idMode), s"unknown dictMode '${cfg.dictMode}'")
-    idMode
+    require(Set("off", "hash", "dense").contains(cfg.ids), s"unknown Cfg.ids '${cfg.ids}'")
+    cfg.ids
   }
 
-  /** Doc-id guard shared by [[run]] (over the input) and [[runDelta]]
+  /** Input guard shared by [[run]] (over the input) and [[runDelta]]
     * (over the increment), called at the start of stage B's compute so
-    * a bad id fails before any pair is written, not after stages S and
-    * C consumed it. One aggregate over the `doc_id` column per fresh
-    * run. Null ids are rejected in every id mode: hash mode would
-    * encode all of them to xxhash64(null) = 42, dense mode would drop
-    * them at the dictionary join. The collision check is hash-only: at
-    * 10¹² ids use dictMode = "dense" (collisions become certain at that
-    * scale); dense ids are unique by construction. */
+    * bad input fails before any pair is written, not after stages S and
+    * C consumed it. One aggregate per fresh run. Null ids are rejected
+    * in every id mode: hash mode would encode all of them to
+    * xxhash64(null) = 42, dense mode would drop them at the dictionary
+    * join. A text span needs its `text` and a media span its
+    * `media_ref`: a null text would reach the fused kernel as
+    * dictionary entry 0, and null media refs would share one media
+    * block key. The collision check is hash-only: at 10¹² ids use
+    * ids = "dense" (collisions become certain at that scale); dense ids
+    * are unique by construction. */
   private def requireValidIds(docs0: DataFrame, idMode: String, what: String): Unit = {
     val hash = idMode == "hash"
-    val aggs = (count(lit(1)) - count(col("doc_id"))) +:
+    def nullSpans(kind: String, field: String) = coalesce(
+      sum(size(filter(col("spans"), s => s.getField("kind") === lit(kind) && s.getField(field).isNull))),
+      lit(0L))
+    val aggs = Seq(count(lit(1)) - count(col("doc_id")), nullSpans("text", "text"), nullSpans("media", "media_ref")) ++
       (if (hash) Seq(countDistinct(col("doc_id")), countDistinct(xxhash64(col("doc_id")))) else Nil)
     val g = docs0.agg(aggs.head, aggs.tail: _*).head()
     require(g.getLong(0) == 0L, s"${g.getLong(0)} $what rows have a null doc_id")
-    if (hash) require(g.getLong(1) == g.getLong(2),
-      s"xxhash64 doc_id collision among $what docs (${g.getLong(1)} ids -> ${g.getLong(2)} hashes); " +
-        "rerun with dictIds=false")
+    require(g.getLong(1) == 0L && g.getLong(2) == 0L,
+      s"$what docs have ${g.getLong(1)} text spans with a null text and ${g.getLong(2)} media spans " +
+        "with a null media_ref")
+    if (hash) require(g.getLong(3) == g.getLong(4),
+      s"xxhash64 doc_id collision among $what docs (${g.getLong(3)} ids -> ${g.getLong(4)} hashes); " +
+        "rerun with ids=\"off\"")
   }
 
   /** The trimmed content of the marker file `dir/name`, if it exists. */
@@ -284,21 +289,19 @@ object Pipeline {
     }
   }
 
-  /** Stages S0 (doc reps) + S1 (span-text dictionary, size-gated) +
+  /** Stages S0 (per-doc rep) + S1 (span-text dictionary, size-gated) +
     * S (chunk-resumable pair scoring) — shared verbatim by [[run]] and
-    * [[runDelta]]; see the inline comments at each block. Returns the
+    * [[runDelta]]; see the inline comments at each block. `dfFrac` is
+    * the corpus media rarity (Scoring.dfFrac): runDelta passes the
+    * MERGED corpus statistics, so pairs scored over the touched slice
+    * see the rarity a full run over the whole corpus would. Returns the
     * scored-pairs frame (chunk column dropped). */
   private def scoreStage(
       ck: Ckpt,
       cfg: Cfg,
       docs: DataFrame,
       candidates: DataFrame,
-      // media df-fraction table override (media_ref, dffrac): runDelta
-      // passes the MERGED corpus statistics so pairs scored over the
-      // touched slice see the same media rarity a full run over the
-      // whole corpus would — derived-from-`docs` statistics would make
-      // delta scores diverge from the full-run contract.
-      mediaDfFrac: Option[DataFrame] = None
+      dfFrac: DataFrame
   ): DataFrame = {
     import ck.{runDir, spark}
     val chunkPruned = candidates.columns.contains(chunkCol(cfg))
@@ -313,23 +316,13 @@ object Pipeline {
     // open, not a multi-GB dictionary broadcast it never reads.
     val scoredPath = s"$runDir/scored_pairs"
     if (!done(scoredPath)) {
-      // Stage S0 — doc representations, checkpointed once and read by
-      // S1 and the fallback (recomputing them per chunk would re-scan
-      // the whole input scoreChunks times). NOTE: media_rep is
-      // independent of the text chain and COULD run concurrently with
-      // it (guide §2.6) — tried in round 6 and reverted: the bench
-      // contract reports stage-S as the SUM of the S0/S1/S stage
-      // walls, and overlapping stages double-count the overlapped
-      // seconds (pir_scoring read ~100 s against a real elapsed ~70),
-      // so the stages stay serial and the walls additive.
-      val textRep = ck.stage("text_rep")(Scoring.textRep(docs))
-      val mediaRep = ck.stage("media_rep")(mediaDfFrac match {
-        case Some(f) => Scoring.mediaRepWithDf(docs, f)
-        case None => Scoring.mediaRep(docs)
-      })
+      // Stage S0 — the per-doc rep (span texts + media set), checkpointed
+      // once and read by S1 and the fallback (recomputing it per chunk
+      // would re-scan the whole input scoreChunks times).
+      val textRep = ck.stage("text_rep")(Scoring.textRep(docs, dfFrac))
 
       // Stage S1 — dense span-text dictionary + the per-doc rep every
-      // chunk joins twice (`text_ids`: span-text ids + media_rep array),
+      // chunk joins twice (`text_ids`: span-text ids + media set),
       // checkpointed once; the dictionary is broadcast once and every
       // chunk's fused kernel reads it (see Scoring.scoreWithRepsFused).
       // Dictionary-size gate (see Cfg.dictMaxBytes): estimate the
@@ -347,7 +340,7 @@ object Pipeline {
       }
       val dictSide =
         if (dictBcastBytes <= cfg.dictMaxBytes) {
-          val rep = ck.stage("text_ids")(Scoring.textIdsRep(textRep, dict, mediaRep))
+          val rep = ck.stage("text_ids")(Scoring.textIdsRep(textRep, dict))
           Some((rep, Scoring.broadcastDict(dict)))
         } else {
           System.err.println(
@@ -394,8 +387,7 @@ object Pipeline {
                 else candidates.where(pmod(col("salt"), lit(cfg.scoreChunks)) === i)
               val scoredChunk = dictSide match {
                 case Some((rep, bc)) => Scoring.scoreWithRepsFused(chunk, rep, cfg.weights, bc)
-                case None =>
-                  Scoring.scoreWithRepsDirect(chunk, textRep, mediaRep, cfg.weights)
+                case None => Scoring.scoreWithRepsDirect(chunk, textRep, cfg.weights)
               }
               Lineage.commit(cpath, Some(Lineage.write(scoredChunk, cpath)), Nil)
             } catch {
@@ -451,7 +443,7 @@ object Pipeline {
 
     val ck = new Ckpt(spark, runDir, "run")
 
-    // internal long ids (see Cfg.dictIds/dictMode); the checkpointed
+    // internal long ids (see Cfg.ids); the checkpointed
     // clusters table and the Result accessors expose original string
     // ids. idMap is distinct-ed: duplicate doc_id input rows would
     // otherwise multiply every decode join.
@@ -513,20 +505,21 @@ object Pipeline {
       requireValidIds(docs0, idMode, "input")
       Blocking.candidatesFromKeys(keys, cfg.blocking, Some(census))
     }
+    // the media corpus statistics: raw df COUNTS + n_docs (counts sum
+    // across increments exactly; the dffrac ratio does not)
+    val mediaDf = Scoring.mediaDfCounts(docs)
+    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     // a resumed run must still end up delta-capable: force the keys
     // stage (idempotent) even when the candidates checkpoint was hit,
-    // and persist the mergeable media corpus statistics (raw df COUNTS
-    // + n_docs — counts sum across increments exactly; the dffrac
-    // ratio does not) that runDelta folds its increment into
+    // and persist the statistics runDelta folds its increment into
     if (cfg.persistForDelta) {
       keys
-      ck.stage("media_df")(Scoring.mediaDfCounts(docs))
-      ck.stage("corpus_stats")(
-        docs.agg(count(lit(1)).as("n_docs")))
+      ck.stage("media_df")(mediaDf)
+      ck.stage("corpus_stats")(nDocs)
     }
 
     // Stages S0/S1/S — shared with runDelta; see scoreStage
-    val scored = scoreStage(ck, cfg, docs, candidates)
+    val scored = scoreStage(ck, cfg, docs, candidates, Scoring.dfFrac(mediaDf, nDocs))
 
     // Stage C
     graft.util.PhaseTracker.set("clustering")
@@ -641,7 +634,7 @@ object Pipeline {
     * weights.
     *
     * `priorDocs0` (the resolved corpus) is read ONLY via pruned
-    * narrow projections/semi-joins; `dictMode = "dense"` is rejected
+    * narrow projections/semi-joins; `ids = "dense"` is rejected
     * (dense ids are a per-run dictionary — delta id spaces must be
     * stable across runs, which "hash" and "off" are). */
   def runDelta(
@@ -655,7 +648,7 @@ object Pipeline {
     val idMode = requireValid(cfg)
     new java.io.File(runDir).mkdirs()
     require(idMode != "dense",
-      "runDelta requires a run-stable id space: dictMode='hash' (or dictIds=false); " +
+      "runDelta requires a run-stable id space: ids = \"hash\" or \"off\"; " +
         "'dense' ids are a per-run dictionary")
     // the prior run must be delta-capable and share the id space
     val priorMode = markedIdMode(priorRunDir)
@@ -747,10 +740,10 @@ object Pipeline {
     // MERGED media corpus statistics: prior df counts + the increment's
     // (full-outer sum — delta-sized new counts against the persisted
     // vocabulary table), n_docs bumped by the increment. Checkpointed
-    // so the delta dir chains, and fed to scoreStage as the df-fraction
-    // override: pairs scored over the touched slice must see the media
-    // rarity of the WHOLE corpus (a full run over prior ∪ new computes
-    // exactly these fractions, so delta scores match it bit for bit).
+    // so the delta dir chains, and fed to scoreStage as the media
+    // rarity: pairs scored over the touched slice must see the rarity
+    // of the WHOLE corpus (a full run over prior ∪ new computes exactly
+    // these fractions, so delta scores match it bit for bit).
     val mergedDf = ck.stage("media_df") {
       val priorDf = spark.read.parquet(s"$priorRunDir/media_df")
       val newDf = Scoring.mediaDfCounts(docsNew)
@@ -765,11 +758,6 @@ object Pipeline {
         .crossJoin(nPrior.select(col("n_docs").as("n_prior")))
         .select((col("n_docs") + col("n_prior")).as("n_docs"))
     }
-    // same arithmetic shape as Scoring.mediaRep: long df / double n
-    val dfFrac = mergedDf
-      .crossJoin(mergedStats.select(col("n_docs").cast("double").as("n_docs")))
-      .select(col("media_ref"), (col("df") / col("n_docs")).as("dffrac"))
-
     // docs appearing in a delta pair: all new docs + the touched slice
     // of the prior corpus (semi-join prune — the only read of
     // priorDocs0, and it projects nothing until the join keeps a row)
@@ -780,8 +768,7 @@ object Pipeline {
     val docsTouched = docsNew.unionByName(
       enc(priorDocs0).join(touchedIds, Seq("doc_id"), "left_semi"))
 
-    val scored =
-      scoreStage(ck, cfg, docsTouched, candidates, Some(dfFrac))
+    val scored = scoreStage(ck, cfg, docsTouched, candidates, Scoring.dfFrac(mergedDf, mergedStats))
 
     graft.util.PhaseTracker.set("clustering")
     var ccIters = -1

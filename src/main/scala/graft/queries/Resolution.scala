@@ -15,7 +15,7 @@ import graft.tools.Calibrate
   * Every `pir_*` row reads one [[Pipeline.run]] per (JVM, scale): a
   * checkpointed run dir under the temp dir, cached so a sequential
   * query loop (`Verify`) computes each stage once, and deleted when the
-  * JVM exits. The run uses string ids (`dictIds = false`), so each
+  * JVM exits. The run uses string ids (`ids = "off"`), so each
   * cluster is labelled with its lexicographically smallest `doc_id`.
   * It is the production assembly with its limits: at the `bench` scale
   * it needs the heap `Pipeline.run` needs there (ROADMAP item 6).
@@ -51,7 +51,7 @@ object Resolution {
     cache.getOrElseUpdate(scale, {
       val (docsPath, labelsPath) = Fixture.ensureWritten(spark, scale)
       val docs = spark.read.parquet(docsPath)
-      val r = Pipeline.run(spark, docs, scratchDir(s"pir_$scale"), Pipeline.Cfg(dictIds = false))
+      val r = Pipeline.run(spark, docs, scratchDir(s"pir_$scale"), Pipeline.Cfg(ids = "off"))
       Staged(docs, spark.read.parquet(labelsPath), r.candidates, r.scoredPairs, r.clusters, r.ccIterations)
     })
 

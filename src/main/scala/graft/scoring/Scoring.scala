@@ -38,9 +38,10 @@ import graft.text.TextOps.normText
   * reading the texts from a broadcast dictionary; the FS terms are
   * constant-folded literals, and the plan stays at one row per pair.
   * When that dictionary is over the pipeline's byte budget,
-  * [[scoreWithRepsDirect]] scores the same pairs with inline string
-  * kernels over exploded span pairs and one hash aggregate, with no
-  * memory bound. The two are value-identical on every column.
+  * [[scoreWithRepsDirect]] scores the same pairs through the same two
+  * rep joins with inline string kernels over exploded span pairs and
+  * one hash aggregate, with no memory bound. The two are
+  * value-identical on every column.
   */
 object Scoring {
 
@@ -60,40 +61,32 @@ object Scoring {
       threshold: Double = 6.5
   )
 
-  /** Per-doc normalized text spans, truncated to 64 entries: the
-    * strong-span masks are 64-bit (`shiftleft(1L, ia)` wraps mod 64),
-    * so untruncated span indexes would silently alias. The fixture has
-    * ≤ ~9 spans; the cap only bites on pathological inputs. */
-  def textRep(docs0: DataFrame): DataFrame = {
-    val docs = graft.util.Parallelism.ensure(docs0)
-    docs.select(
-      col("doc_id"),
-      slice(
-        transform(
-          filter(col("spans"), s => s.getField("kind") === lit("text")),
-          s => normText(s.getField("text"))
-        ),
-        1, 64
-      ).as("texts")
-    )
-  }
-
-  /** Distinct media refs per doc annotated with their global document-
-    * frequency fraction. Only docs WITH media appear (join left +
-    * coalesce at the use site). The total doc count folds in as a
-    * 1-row cross join — no separate driver action (a `docs.count()`
-    * here would be a full extra input pass before scoring starts).
-    * The media-df dictionary join is a shuffle join on media_ref (at
-    * planet scale the dictionary is itself large); at test scale AQE
-    * turns it into a broadcast join automatically. */
-  def mediaRep(docs0: DataFrame): DataFrame = {
+  /** Stage S0's per-doc rep, one row per doc: (doc_id, texts, medias).
+    * `texts` are the normalized text spans, truncated to 64 entries:
+    * the strong-span masks are 64-bit (`shiftleft(1L, ia)` wraps mod
+    * 64), so untruncated span indexes would silently alias. The fixture
+    * has ≤ ~9 spans; the cap only bites on pathological inputs.
+    * `medias` are the doc's distinct media refs with their df fraction
+    * from `dfFrac` (see [[dfFrac]]), empty for docs without media. The
+    * rarity is an input, not derived from the docs at hand, so an
+    * incremental run scoring only the touched slice of the corpus sees
+    * the same rarity as a full run over the whole corpus. */
+  def textRep(docs0: DataFrame, dfFrac: DataFrame): DataFrame = {
     val docs = graft.util.Parallelism.ensure(docs0)
     val medias = docMediaRefs(docs)
-    val total = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val mediaDf = mediaDfCounts(docs)
-      .crossJoin(total)
-      .select(col("media_ref"), (col("df") / col("n_docs")).as("dffrac"))
-    mediaRepWithDf(medias, mediaDf)
+      .join(dfFrac, "media_ref")
+      .groupBy("doc_id")
+      // sort_array: collect_list order is nondeterministic and the
+      // rare/common double sum in mediaScore is order-sensitive at ulp
+      // level — sorted arrays keep resumed checkpoints byte-stable
+      .agg(sort_array(collect_list(struct(col("media_ref"), col("dffrac")))).as("medias"))
+    val texts = slice(
+      transform(filter(col("spans"), s => s.getField("kind") === lit("text")), s => normText(s.getField("text"))),
+      1, 64
+    )
+    docs.select(col("doc_id"), texts.as("texts"))
+      .join(medias, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("texts"), coalesce(col("medias"), emptyMedias).as("medias"))
   }
 
   /** (doc_id, media_ref) — one row per distinct media ref per doc. */
@@ -111,32 +104,28 @@ object Scoring {
     )
 
   /** Raw media document-frequency COUNTS (media_ref, df) — the
-    * mergeable corpus statistic behind [[mediaRep]]'s dffrac. An
-    * incremental run adds its increment's counts to the persisted
-    * table and bumps n_docs (Pipeline.runDelta); full-outer sum of
-    * counts over a partition of the corpus equals the combined run's
-    * counts exactly, which dffrac (a ratio of floats) does not. */
+    * mergeable corpus statistic behind [[dfFrac]]. An incremental run
+    * adds its increment's counts to the persisted table and bumps
+    * n_docs (Pipeline.runDelta); full-outer sum of counts over a
+    * partition of the corpus equals the combined run's counts exactly,
+    * which dffrac (a ratio of floats) does not. */
   def mediaDfCounts(docs: DataFrame): DataFrame =
     docMediaRefs(docs).groupBy("media_ref").agg(count(lit(1)).as("df"))
 
-  /** Per-doc media arrays from an EXPLICIT df-fraction table
-    * (media_ref, dffrac) — the statistics are an input, not derived
-    * from the docs at hand, so an incremental run scoring only the
-    * touched slice of the corpus sees the same rarity as a full run
-    * over the whole corpus. `mediasOrDocs` accepts either the exploded
-    * (doc_id, media_ref) frame or raw docs. */
-  def mediaRepWithDf(mediasOrDocs: DataFrame, dfFrac: DataFrame): DataFrame = {
-    val medias =
-      if (mediasOrDocs.columns.contains("media_ref")) mediasOrDocs
-      else docMediaRefs(graft.util.Parallelism.ensure(mediasOrDocs))
-    medias
-      .join(dfFrac, "media_ref")
-      .groupBy("doc_id")
-      // sort_array: collect_list order is nondeterministic and the
-      // rare/common double sum in mediaScore is order-sensitive at ulp
-      // level — sorted arrays keep resumed checkpoints byte-stable
-      .agg(sort_array(collect_list(struct(col("media_ref"), col("dffrac")))).as("medias"))
-  }
+  /** Media rarity (media_ref, dffrac) from df counts (media_ref, df)
+    * and a one-row corpus size (n_docs): long df over double n_docs.
+    * The one rarity formula — a full run and an incremental run over
+    * merged counts both go through it, so their fractions are
+    * bit-equal. The corpus size folds in as a 1-row cross join, not a
+    * driver action. */
+  def dfFrac(counts: DataFrame, nDocs: DataFrame): DataFrame =
+    counts
+      .crossJoin(nDocs.select(col("n_docs").cast("double").as("n_docs")))
+      .select(col("media_ref"), (col("df") / col("n_docs")).as("dffrac"))
+
+  /** [[dfFrac]] of `docs` taken as the whole corpus. */
+  def corpusDfFrac(docs: DataFrame): DataFrame =
+    dfFrac(mediaDfCounts(docs), docs.agg(count(lit(1)).as("n_docs")))
 
   private val emptyMedias = array().cast("array<struct<media_ref:string,dffrac:double>>")
 
@@ -172,9 +161,9 @@ object Scoring {
     * plan shape). The pipeline instead checkpoints the reps and calls
     * scoreWithRepsFused directly so resume-able chunks share them. */
   def score(candidates: DataFrame, docs: DataFrame, w: Weights = Weights()): DataFrame = {
-    val txt = textRep(docs).localCheckpoint(true)
+    val txt = textRep(docs, corpusDfFrac(docs)).localCheckpoint(true)
     val dict = textDictDense(txt).localCheckpoint(true)
-    scoreWithRepsFused(candidates, textIdsRep(txt, dict, mediaRep(docs)), w, broadcastDict(dict))
+    scoreWithRepsFused(candidates, textIdsRep(txt, dict), w, broadcastDict(dict))
   }
 
   /** Dense dictionary of the distinct normalized span texts:
@@ -193,12 +182,12 @@ object Scoring {
   }
 
   /** Per-doc rep that every scoring chunk joins twice: (doc_id,
-    * tids:array<int>, medias). `tids` are index-aligned with textRep's
-    * texts array (one shuffle join of the exploded rep against the
-    * dictionary; empty-texts docs keep an empty array); `medias` is the
-    * doc's [[mediaRep]] array, empty for docs without media. */
-  def textIdsRep(txt: DataFrame, dict: DataFrame, med: DataFrame): DataFrame =
-    txt.select(col("doc_id"), posexplode_outer(col("texts")).as(Seq("ia", "t")))
+    * tids:array<int>, medias). `tids` are index-aligned with
+    * [[textRep]]'s texts array (one shuffle join of the exploded rep
+    * against the dictionary; empty-texts docs keep an empty array);
+    * `medias` is carried through from the same rep. */
+  def textIdsRep(txt: DataFrame, dict: DataFrame): DataFrame =
+    txt.select(col("doc_id"), col("medias"), posexplode_outer(col("texts")).as(Seq("ia", "t")))
       // no join hint: shuffle_hash on the dictionary measured neutral
       // (benchmark full/sparse, 3 interleaved pairs each, 4 cores; median
       // task core-s hinted → unhinted 2.848 → 2.796 and 1.305 → 1.320),
@@ -208,14 +197,11 @@ object Scoring {
       .groupBy("doc_id")
       .agg(
         sort_array(collect_list(when(col("ia").isNotNull, struct(col("ia"), col("tid")))))
-          .as("ps")
+          .as("ps"),
+        // one value per doc: every exploded row of a doc carries its medias
+        first(col("medias")).as("medias")
       )
-      .join(med, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        transform(col("ps"), s => s.getField("tid")).as("tids"),
-        coalesce(col("medias"), emptyMedias).as("medias")
-      )
+      .select(col("doc_id"), transform(col("ps"), s => s.getField("tid")).as("tids"), col("medias"))
 
   /** Collect + broadcast the dictionary as a tid-indexed flat UTF-8
     * blob ([[graft.functions.PackedDict]]: one byte array + one offset
@@ -247,6 +233,15 @@ object Scoring {
     dict.sparkSession.sparkContext.broadcast(new graft.functions.PackedDict(flat, offs))
   }
 
+  /** The pair stream joined to a per-doc rep on `doc_a`, then on
+    * `doc_b`: rep column `c` arrives as `c_a` and `c_b`. Both scoring
+    * paths use this one join chain; join strategy is the planner's. */
+  private def joinReps(candidates: DataFrame, rep: DataFrame, cols: String*): DataFrame = {
+    def side(s: String): DataFrame =
+      rep.select(col("doc_id").as(s"doc_$s") +: cols.map(c => col(c).as(s"${c}_$s")): _*)
+    candidates.select("doc_a", "doc_b").join(side("a"), "doc_a").join(side("b"), "doc_b")
+  }
+
   /** Stage S: score against precomputed doc representations (the
     * pipeline checkpoints them once and reuses them across resume-able
     * scoring chunks). One row per candidate pair end to end: the pair
@@ -271,19 +266,7 @@ object Scoring {
       w: Weights,
       bc: org.apache.spark.broadcast.Broadcast[graft.functions.PackedDict]
   ): DataFrame = {
-    // One join chain with both rep arrays on both joins. The earlier
-    // shape kept each array on one sort-merge join (text and media
-    // branches merged at pair grain: 5 joins, 10 exchanges per chunk)
-    // because an exploded-span chain had lost at 32 threads; with the
-    // score one per-row expression that no longer holds. On the
-    // benchmark's `full` corpus (4 cores, traced seeds 1-3) AQE
-    // broadcasts the rep, a call runs 102 jobs instead of 136 and stage
-    // S shuffles 2.3 MB instead of 9.0 MB. Join strategy is the planner's.
-    def side(s: String): DataFrame =
-      rep.select(col("doc_id").as(s"doc_$s"), col("tids").as(s"tids_$s"), col("medias").as(s"medias_$s"))
-    val joined = candidates.select("doc_a", "doc_b")
-      .join(side("a"), "doc_a")
-      .join(side("b"), "doc_b")
+    val joined = joinReps(candidates, rep, "tids", "medias")
       .select(
         col("doc_a"), col("doc_b"),
         graft.functions.FusedSpanScore.score(
@@ -298,18 +281,21 @@ object Scoring {
         col("r.mask_a").as("mask_a"),
         col("r.mask_b").as("mask_b")
       )
-      .withColumn("strong_a", bit_count(col("mask_a")).cast("long"))
-      .withColumn("strong_b", bit_count(col("mask_b")).cast("long"))
-      .withColumn("strong_min", least(col("strong_a"), col("strong_b")))
     finishScore(joined, w)
   }
 
-  /** Final FS combination + decision gate of [[scoreWithRepsFused]]. */
+  /** The FS combination and decision gate shared by both paths: strong-
+    * span counts from the masks, the text-field level, the score and
+    * the gate, over (doc_a, doc_b, m_score, media_jaccard, jw_best,
+    * lev_best, mask_a, mask_b). */
   private def finishScore(df: DataFrame, w: Weights): DataFrame = {
     val textTerm = when(col("strong_min") >= 2, lit(w.wText2))
       .when(col("strong_min") === 1, lit(w.wText1))
       .otherwise(lit(w.wText0))
-    df.withColumn("score", textTerm + col("m_score"))
+    df.withColumn("strong_a", bit_count(col("mask_a")).cast("long"))
+      .withColumn("strong_b", bit_count(col("mask_b")).cast("long"))
+      .withColumn("strong_min", least(col("strong_a"), col("strong_b")))
+      .withColumn("score", textTerm + col("m_score"))
       .withColumn("is_match", col("score") >= lit(w.threshold))
       .select(
         "doc_a", "doc_b", "score", "jw_best", "lev_best", "media_jaccard",
@@ -317,37 +303,26 @@ object Scoring {
       )
   }
 
-  /** Dictionary-free stage S: the JW kernel inline over the
-    * text-carrying exploded span-pair stream, then one hash aggregate
-    * back to pair grain. The pipeline's fallback when the span-text
-    * dictionary is over `Pipeline.Cfg.dictMaxBytes` (no memory bound),
-    * and the value oracle [[scoreWithRepsFused]] is tested against. */
-  def scoreWithRepsDirect(candidates: DataFrame, txt: DataFrame, med: DataFrame, w: Weights = Weights()): DataFrame = {
-    val pairs = candidates.select("doc_a", "doc_b")
-    val medA = med.select(col("doc_id").as("doc_a"), col("medias").as("medias_a"))
-    val medB = med.select(col("doc_id").as("doc_b"), col("medias").as("medias_b"))
-    val mediaPair = pairs
-      .join(medA, Seq("doc_a"), "left")
-      .join(medB, Seq("doc_b"), "left")
-      .withColumn("medias_a", coalesce(col("medias_a"), emptyMedias))
-      .withColumn("medias_b", coalesce(col("medias_b"), emptyMedias))
+  /** Dictionary-free stage S: the same join chain as
+    * [[scoreWithRepsFused]] over [[textRep]]'s rep, the media terms per
+    * pair, the JW kernel inline over the exploded span-pair stream, then
+    * one hash aggregate back to pair grain. The pipeline's fallback when
+    * the span-text dictionary is over `Pipeline.Cfg.dictMaxBytes` (no
+    * memory bound), and the value oracle [[scoreWithRepsFused]] is
+    * tested against. */
+  def scoreWithRepsDirect(candidates: DataFrame, rep: DataFrame, w: Weights = Weights()): DataFrame = {
+    val paired = joinReps(candidates, rep, "texts", "medias")
       .select(
-        col("doc_a"), col("doc_b"),
+        col("doc_a"), col("doc_b"), col("texts_a"), col("texts_b"),
         mediaScore(w).as("m_score"),
         mediaJaccard.as("media_jaccard")
       )
-
-    // --- text branch: slim exploded span pairs ---
-    val txtA = txt.select(col("doc_id").as("doc_a"), col("texts").as("texts_a"))
-    val txtB = txt.select(col("doc_id").as("doc_b"), col("texts").as("texts_b"))
-    val paired = pairs.join(txtA, "doc_a").join(txtB, "doc_b")
-
     val exA = paired.select(
-      col("doc_a"), col("doc_b"), col("texts_b"),
+      col("doc_a"), col("doc_b"), col("m_score"), col("media_jaccard"), col("texts_b"),
       posexplode_outer(col("texts_a")).as(Seq("ia", "ta"))
     )
     val spanPairs = exA.select(
-      col("doc_a"), col("doc_b"), col("ia"), col("ta"),
+      col("doc_a"), col("doc_b"), col("m_score"), col("media_jaccard"), col("ia"), col("ta"),
       posexplode_outer(col("texts_b")).as(Seq("ib", "tb"))
     )
 
@@ -375,30 +350,18 @@ object Scoring {
     // distinct-matched-span counts as bit_or masks over the span index
     // (na, nb ≤ 12 « 64): two count_distinct on different columns would
     // force an Expand ×3 over the exploded span-pair stream — the bit
-    // masks keep this a single plain hash aggregate.
+    // masks keep this a single plain hash aggregate. The media terms
+    // are per pair, so every span-pair row of a pair carries the same.
     val agg = sims
       .groupBy("doc_a", "doc_b")
       .agg(
+        first(col("m_score")).as("m_score"),
+        first(col("media_jaccard")).as("media_jaccard"),
         coalesce(max(col("jw")), lit(0.0)).as("jw_best"),
         coalesce(max(col("lev_sim")), lit(0.0)).as("lev_best"),
         coalesce(bit_or(when(col("strong"), expr("shiftleft(1L, ia)")).otherwise(0L)), lit(0L)).as("mask_a"),
         coalesce(bit_or(when(col("strong"), expr("shiftleft(1L, ib)")).otherwise(0L)), lit(0L)).as("mask_b")
       )
-      .withColumn("strong_a", bit_count(col("mask_a")).cast("long"))
-      .withColumn("strong_b", bit_count(col("mask_b")).cast("long"))
-      .withColumn("strong_min", least(col("strong_a"), col("strong_b")))
-
-    val textTerm = when(col("strong_min") >= 2, lit(w.wText2))
-      .when(col("strong_min") === 1, lit(w.wText1))
-      .otherwise(lit(w.wText0))
-
-    agg
-      .join(mediaPair, Seq("doc_a", "doc_b"))
-      .withColumn("score", textTerm + col("m_score"))
-      .withColumn("is_match", col("score") >= lit(w.threshold))
-      .select(
-        "doc_a", "doc_b", "score", "jw_best", "lev_best", "media_jaccard",
-        "strong_min", "mask_a", "mask_b", "is_match"
-      )
+    finishScore(agg, w)
   }
 }

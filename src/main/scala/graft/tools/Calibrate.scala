@@ -75,7 +75,7 @@ object Calibrate {
     println(s"docs=${docs.count()} labels=${labels.count()}")
 
     val dir = graft.queries.Resolution.scratchDir("calibrate")
-    val run = Pipeline.run(spark, docs, dir, Pipeline.Cfg(dictIds = false, persistForDelta = true))
+    val run = Pipeline.run(spark, docs, dir, Pipeline.Cfg(ids = "off", persistForDelta = true))
     val cand = run.candidates
     println(s"candidates=${cand.count()}")
 

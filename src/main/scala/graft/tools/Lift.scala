@@ -152,7 +152,7 @@ object Lift {
     val docs = graft.schema.Fixture.docs(spark, cfg).toDF().cache()
     val labels = graft.schema.Fixture.labels(spark, cfg).toDF().cache()
     val att = graft.pipeline.Pipeline.run(spark, docs, graft.queries.Resolution.scratchDir("lift"),
-      graft.pipeline.Pipeline.Cfg(dictIds = false)).clusters
+      graft.pipeline.Pipeline.Cfg(ids = "off")).clusters
 
     val row = compute(att.select("doc_id", "cluster_id"), labels, fixtureAccount).head()
     // lift/z are nullable (degenerate baselines) — print, don't NPE

@@ -61,10 +61,9 @@ object PlanAudit {
       graft.blocking.Blocking.candidatesFromKeys(keysM, graft.blocking.Blocking.Cfg()))
     val cand = graft.blocking.Blocking.candidatesFromKeys(keysM, graft.blocking.Blocking.Cfg()).localCheckpoint(true)
     locally {
-      val txt = graft.scoring.Scoring.textRep(docs).localCheckpoint(true)
-      val med = graft.scoring.Scoring.mediaRep(docs).localCheckpoint(true)
+      val txt = graft.scoring.Scoring.textRep(docs, graft.scoring.Scoring.corpusDfFrac(docs)).localCheckpoint(true)
       val dict = graft.scoring.Scoring.textDictDense(txt).localCheckpoint(true)
-      val rep = graft.scoring.Scoring.textIdsRep(txt, dict, med).localCheckpoint(true)
+      val rep = graft.scoring.Scoring.textIdsRep(txt, dict).localCheckpoint(true)
       audit("stage S — scoreWithRepsFused (default): one per-doc rep joined twice, no Generate/aggregate",
         "The pair stream joins the per-doc rep (span-text ids + media set) on doc_a, then on doc_b; one " +
           "projection computes the whole score — best JW, rescue-Levenshtein and strong-span masks as ONE " +
@@ -73,9 +72,10 @@ object PlanAudit {
         graft.scoring.Scoring.scoreWithRepsFused(
           cand, rep, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
       audit("stage S — scoreWithRepsDirect (text-carrying fallback)",
-        "Inline string kernels over the exploded stream — the unbounded-dictionary fallback; same value " +
-          "semantics (ScoringDedupSpec).",
-        graft.scoring.Scoring.scoreWithRepsDirect(cand, txt, med))
+        "The same two joins against the text rep (span texts + media set), the media terms per pair, inline " +
+          "string kernels over the exploded span-pair stream and one hash aggregate back to pair grain — the " +
+          "unbounded-dictionary fallback; same value semantics (ScoringDedupSpec).",
+        graft.scoring.Scoring.scoreWithRepsDirect(cand, txt))
     }
 
     // --- delta (incremental) pipeline paths: the increment is a 20%

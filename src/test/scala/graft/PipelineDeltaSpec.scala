@@ -142,7 +142,7 @@ class PipelineDeltaSpec extends AnyFunSuite {
     // dense ids are a per-run dictionary — no stable cross-run id space
     val e1 = intercept[IllegalArgumentException] {
       Pipeline.runDelta(spark, docsA, docsB, dirPrior, dir("gdense"),
-        Pipeline.Cfg(dictMode = "dense"))
+        Pipeline.Cfg(ids = "dense"))
     }
     assert(e1.getMessage.contains("dense"))
     // a prior run without persistForDelta has no keys/cc_assign tables
@@ -168,6 +168,43 @@ class PipelineDeltaSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](Pipeline.runDelta(spark, docsA, bad, dirPrior, dirN))
     assert(e.getMessage.contains("null doc_id"), e.getMessage)
     assert(!new java.io.File(s"$dirN/candidates").exists(), "delta stage B must not have written candidates")
+  }
+
+  test("a null span text or media_ref in the increment is rejected at delta stage B") {
+    prior // the delta needs a completed prior
+    def firstWith(kind: String) = docsB.where(exists(col("spans"), s => s.getField("kind") === kind))
+      .select("doc_id").orderBy("doc_id").head().getString(0)
+    // both fields nulled on every span of one doc with text and one with media
+    val bad = docsB.withColumn("spans", when(col("doc_id").isin(firstWith("text"), firstWith("media")),
+      transform(col("spans"), s => s.withField("text", lit(null).cast("string"))
+        .withField("media_ref", lit(null).cast("string"))))
+      .otherwise(col("spans")))
+    val dirN = dir("nullspan")
+    val e = intercept[IllegalArgumentException](Pipeline.runDelta(spark, docsA, bad, dirPrior, dirN))
+    assert("[1-9]\\d* text spans with a null text and [1-9]\\d* media spans with a null media_ref"
+      .r.findFirstIn(e.getMessage).isDefined, e.getMessage)
+    assert(!new java.io.File(s"$dirN/candidates").exists(), "delta stage B must not have written candidates")
+  }
+
+  test("delta == full on random splits: runDelta(A, B) clusters equal run(A ∪ B)'s, labels included") {
+    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Prop.propBoolean
+    // a small corpus, split by a random fraction and salt; threshold-free
+    // media weights as in the chained test (prior pairs keep their
+    // at-scoring-time rarity), so the contract is exact
+    val w = graft.scoring.Scoring.Weights(maxDfFrac = 1.0)
+    val corpus = Fixture.docs(spark, Fixture.Cfg(entities = 10, seed = 11L, docsPerEntityMin = 3,
+      docsPerEntityMax = 8)).toDF().cache()
+    val full = Pipeline.run(spark, corpus, dir("pfull"), Pipeline.Cfg(weights = w)).clusters.collect().toSet
+    PropCheck.check(Prop.forAllNoShrink(Gen.choose(1, 9), Gen.choose(0L, Int.MaxValue.toLong)) { (tenths, salt) =>
+      val inA = pmod(xxhash64(col("doc_id"), lit(salt)), lit(10)) < tenths
+      val (a, b) = (corpus.where(inA), corpus.where(!inA))
+      val pDir = dir("pprior")
+      Pipeline.run(spark, a, pDir, Pipeline.Cfg(weights = w, persistForDelta = true))
+      val got = Pipeline.runDelta(spark, a, b, pDir, dir("pdelta"), Pipeline.Cfg(weights = w)).clusters.collect().toSet
+      (got == full) :| s"A = ${tenths}0% split, salt $salt: ${(got -- full).size} rows only in delta, " +
+        s"${(full -- got).size} only in the full run"
+    }, minSuccessful = 5)
   }
 
   test("_parents pin: resuming a delta dir against a different prior fails loudly") {

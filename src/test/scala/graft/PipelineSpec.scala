@@ -29,7 +29,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cluster ids are members of their own cluster (canonical-id stability)") {
-    // canonical id = the doc_id of the min-nid member (dictIds path):
+    // canonical id = the doc_id of the min-nid member (long-id path):
     // must BE a member, and must be the same member on every rerun
     // (determinism is covered by the resume byte-identity test below)
     val members = result.clusters.select(col("doc_id").as("m"))
@@ -37,9 +37,9 @@ class PipelineSpec extends AnyFunSuite {
       .join(members, Seq("m"), "left_anti")
       .count()
     assert(bad == 0, s"$bad cluster ids are not member doc ids")
-    // and with dictIds off, the canonical id is the lexicographic min
+    // and with string ids, the canonical id is the lexicographic min
     val dirS = Files.createTempDirectory("graft_pipe_strid").toString
-    val strRun = Pipeline.run(spark, docs, dirS, Pipeline.Cfg(dictIds = false))
+    val strRun = Pipeline.run(spark, docs, dirS, Pipeline.Cfg(ids = "off"))
     val badS = strRun.clusters
       .groupBy("cluster_id").agg(min("doc_id").as("mn"))
       .where(col("cluster_id") =!= col("mn"))
@@ -55,12 +55,12 @@ class PipelineSpec extends AnyFunSuite {
       .agg(sort_array(collect_list("doc_id")).as("ms"))
       .select("ms")
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "dictIds=true and dictIds=false must produce identical partitions")
+      "hash and string ids must produce identical partitions")
     // dense-dictionary mode (the 10¹²-doc encoding): same partition AND
     // — because dense ids are assigned in doc_id sort order — the exact
     // same canonical labels as the string path
     val dirD = Files.createTempDirectory("graft_pipe_dense").toString
-    val denseRun = Pipeline.run(spark, docs, dirD, Pipeline.Cfg(dictMode = "dense"))
+    val denseRun = Pipeline.run(spark, docs, dirD, Pipeline.Cfg(ids = "dense"))
     val d = denseRun.clusters.select("cluster_id", "doc_id")
     val s = strRun.clusters.select("cluster_id", "doc_id")
     assert(d.exceptAll(s).count() == 0 && s.exceptAll(d).count() == 0,
@@ -132,7 +132,7 @@ class PipelineSpec extends AnyFunSuite {
       when(col("doc_id") === first, lit(null).cast("string")).otherwise(col("doc_id")))
     // every id mode: hash (default), dense (whose stage-B0 dictionary
     // must not be written either) and off
-    Seq(Pipeline.Cfg(), Pipeline.Cfg(dictMode = "dense"), Pipeline.Cfg(dictIds = false)).foreach { cfg =>
+    Seq(Pipeline.Cfg(), Pipeline.Cfg(ids = "dense"), Pipeline.Cfg(ids = "off")).foreach { cfg =>
       val dirN = Files.createTempDirectory("graft_pipe_nullid").toString
       val e = intercept[IllegalArgumentException](Pipeline.run(spark, bad, dirN, cfg))
       assert(e.getMessage.contains("null doc_id"), e.getMessage)
@@ -140,6 +140,48 @@ class PipelineSpec extends AnyFunSuite {
         assert(!new java.io.File(s"$dirN/$s").exists(), s"$cfg: stage B must not have written $s")
       }
     }
+  }
+
+  test("a text span without text or a media span without media_ref is rejected at stage B") {
+    // a null text would reach the fused kernel as dictionary entry 0, and
+    // null media refs would all share one media block key: the guard must
+    // name the null fields and fire before stage B writes anything
+    def firstWith(kind: String) = docs.where(exists(col("spans"), s => s.getField("kind") === kind))
+      .select("doc_id").orderBy("doc_id").head().getString(0)
+    def nullField(kind: String, field: String)(d: org.apache.spark.sql.DataFrame) = {
+      val id = firstWith(kind)
+      d.withColumn("spans", when(col("doc_id") === id,
+        transform(col("spans"), s => when(s.getField("kind") === kind, s.withField(field, lit(null).cast("string")))
+          .otherwise(s))).otherwise(col("spans")))
+    }
+    Seq(
+      "[1-9]\\d* text spans with a null text and 0 media spans" -> nullField("text", "text") _,
+      "0 text spans with a null text and [1-9]\\d* media spans with a null media_ref" ->
+        nullField("media", "media_ref") _
+    ).foreach { case (want, corrupt) =>
+      val dirN = Files.createTempDirectory("graft_pipe_nullspan").toString
+      val e = intercept[IllegalArgumentException](Pipeline.run(spark, corrupt(docs), dirN))
+      assert(want.r.findFirstIn(e.getMessage).isDefined, e.getMessage)
+      assert(!new java.io.File(s"$dirN/candidates").exists(), s"$want: stage B must not have written candidates")
+    }
+  }
+
+  test("a corpus without candidate pairs runs and resumes: every doc is its own cluster") {
+    // the candidates checkpoint is partitioned by scoring chunk, so an
+    // empty pair set writes no partition dir; its read must still work,
+    // on the fresh run and on the resume
+    import spark.implicits._
+    val lone = Seq(
+      graft.schema.Doc("p1", Seq(graft.schema.Span("text", "alpha beta gamma delta epsilon", null, 0))),
+      graft.schema.Doc("p2", Seq(graft.schema.Span("text", "zulu yankee xray whiskey victor", null, 0)))
+    ).toDF()
+    val dirE = Files.createTempDirectory("graft_pipe_nopairs").toString
+    val r = Pipeline.run(spark, lone, dirE)
+    assert(r.candidates.count() == 0 && r.scoredPairs.count() == 0)
+    def labels(res: Pipeline.Result) =
+      res.clusters.orderBy("doc_id").collect().map(x => x.getAs[String]("doc_id") -> x.getAs[String]("cluster_id")).toSeq
+    assert(labels(r) == Seq("p1" -> "p1", "p2" -> "p2"))
+    assert(labels(Pipeline.run(spark, lone, dirE)) == labels(r))
   }
 
   test("span-sequence invariant: pipeline outputs join back to untouched input spans") {
@@ -213,7 +255,7 @@ class PipelineSpec extends AnyFunSuite {
     val crashes = Seq[(String, () => Unit)](
       "data written, no metadata, no _SUCCESS" ->
         (() => rm("clusters/_SUCCESS", "clusters/_lineage", "clusters/_metrics")),
-      "metadata written, no _SUCCESS" -> (() => rm("candidates/_SUCCESS", "text_rep", "media_rep", "text_dict",
+      "metadata written, no _SUCCESS" -> (() => rm("candidates/_SUCCESS", "text_rep", "text_dict",
         "text_ids", "scored_pairs", "clusters")),
       "one chunk lost" -> (() => rm("scored_pairs/_SUCCESS", "scored_pairs/chunk=2"))
     )
@@ -296,7 +338,7 @@ class PipelineSpec extends AnyFunSuite {
     val lineage = spark.read.parquet(s"$runDir/lineage")
     val folds = lineage.groupBy("stage").agg(sum("output_rows"), bit_xor(col("content_hash")))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(folds.keySet == Set("candidates", "text_rep", "media_rep", "text_dict", "text_ids",
+    assert(folds.keySet == Set("candidates", "text_rep", "text_dict", "text_ids",
       "scored_pairs", "clusters"))
     // the fold observed by each write equals one over the checkpoint as
     // it reads back (candidates' partition column last, chunk dropped)

@@ -26,11 +26,10 @@ class ScoringDedupSpec extends AnyFunSuite {
       cand: org.apache.spark.sql.DataFrame,
       docs: org.apache.spark.sql.DataFrame
   ): Map[(String, String), Row] = {
-    val txt = Scoring.textRep(docs).localCheckpoint(true)
-    val med = Scoring.mediaRep(docs).localCheckpoint(true)
+    val txt = Scoring.textRep(docs, Scoring.corpusDfFrac(docs)).localCheckpoint(true)
     val dict = Scoring.textDictDense(txt).localCheckpoint(true)
-    val rep = Scoring.textIdsRep(txt, dict, med)
-    val a = Scoring.scoreWithRepsDirect(cand, txt, med).collect().map(r => key(r) -> r).toMap
+    val rep = Scoring.textIdsRep(txt, dict)
+    val a = Scoring.scoreWithRepsDirect(cand, txt).collect().map(r => key(r) -> r).toMap
     val b = Scoring.scoreWithRepsFused(cand, rep, Scoring.Weights(), Scoring.broadcastDict(dict))
       .collect().map(r => key(r) -> r).toMap
     assert(a.keySet == b.keySet,
