@@ -37,40 +37,23 @@ object Blocking {
   }
 
   /** Per-doc blocking keys: (doc_id, key_kind, block_key:long).
-    * key_kind ∈ {'lsh','media'}.
+    * key_kind ∈ {'lsh','media'}. `view` is the docs'
+    * [[graft.schema.SpanView]]: an lsh key hashes the normalized join of
+    * a doc's texts, a media key each distinct media ref.
     *
     * MinHash shape: one compiled pass per doc (MinHashBands) — rolling
     * shingle window + k affine minima + band mixing in registers; the
     * per-doc output is `bands` longs, with no shingle rows and no
     * shuffle. */
-  def docKeys(docs: DataFrame, cfg: Cfg): DataFrame = {
-    val texts = transform(
-      filter(col("spans"), s => s.getField("kind") === lit("text")),
-      s => s.getField("text")
-    )
-    val docText = normText(array_join(texts, " "))
-
-    // the shingle/hash projection is the CPU-heavy stage — make sure it
-    // is not fused onto an under-parallel file scan
-    val src = graft.util.Parallelism.ensure(docs.select(col("doc_id"), docText.as("dt")))
-    val lsh = src.select(
+  def docKeys(view: DataFrame, cfg: Cfg): DataFrame = {
+    val lsh = view.select(
       col("doc_id"),
       explode(graft.functions.MinHashBands.bandKeys(
-        col("dt"), cfg.shingleN, cfg.minhashK, cfg.bands, cfg.seed)).as("block_key")
+        normText(array_join(col("texts"), " ")), cfg.shingleN, cfg.minhashK, cfg.bands, cfg.seed)).as("block_key")
     ).select(col("doc_id"), lit("lsh").as("key_kind"), col("block_key"))
 
-    val media = graft.util.Parallelism.ensure(docs)
-      .select(
-        col("doc_id"),
-        explode(
-          array_distinct(
-            transform(
-              filter(col("spans"), s => s.getField("kind") === lit("media")),
-              s => s.getField("media_ref")
-            )
-          )
-        ).as("media_ref")
-      )
+    val media = view
+      .select(col("doc_id"), explode(col("medias")).as("media_ref"))
       .select(col("doc_id"), lit("media").as("key_kind"), xxhash64(lit("m"), col("media_ref")).as("block_key"))
 
     lsh.unionByName(media)
@@ -90,7 +73,7 @@ object Blocking {
     * time at the bench scale. [[graft.pipeline.Pipeline.run]] builds
     * the same pairs from its own pinned (or checkpointed) key table. */
   def candidates(docs: DataFrame, cfg: Cfg): DataFrame =
-    candidatesFromKeys(docKeys(docs, cfg).localCheckpoint(true), cfg)
+    candidatesFromKeys(docKeys(graft.schema.SpanView(docs), cfg).localCheckpoint(true), cfg)
 
   /** The distinct key kinds of a key table, sorted by UTF-8 byte order
     * (= Spark's string comparison) — the witness dedup enumerates them

@@ -42,8 +42,7 @@ object Attach {
       clusters: DataFrame,
       scored: DataFrame,
       attachFloor: Double = DefaultAttachFloor,
-      minSpanBits: Int = 2,
-      maxLocalMoves: Long = 2000000L
+      minSpanBits: Int = 2
   ): DataFrame = {
     // join-strategy note (round 6): these small-side joins are left to
     // the planner DELIBERATELY — AQE upgrades them to broadcast at
@@ -100,39 +99,19 @@ object Attach {
     // components over the move edges. Every mover has out-degree
     // exactly 1 and established clusters don't move, so a component
     // contains at most ONE pre-existing cluster — this cannot
-    // transitively merge two established clusters.
+    // transitively merge two established clusters. Move sets are tiny
+    // relative to the corpus (one edge per attaching singleton), so CC
+    // takes its driver union-find path on all but pathological
+    // singleton floods; labels are the min member either way. The pin
+    // keeps CC's edge and node reads off the evidence plan.
     val moveEdges = chosen
       .select(col("doc_id").as("src"), col("new_cluster").as("dst"))
       .localCheckpoint(true)
-    // Adaptive execution: move sets are tiny relative to the corpus
-    // (one edge per attaching singleton), so below `maxLocalMoves` a
-    // driver-side union-find replaces ~10 latency-bound shuffle rounds
-    // with one collect + one broadcastable mapping — semantically
-    // identical (component label = min member). The distributed CC
-    // path remains for pathological singleton floods.
-    val nMoves = moveEdges.count()
-    val mapping: DataFrame =
-      if (nMoves <= maxLocalMoves) {
-        // shared driver union-find (UnionFind): id-type generic; with
-        // 8-byte ids the 2M-move cap holds ~64 MB of driver map, vs
-        // ~hundreds of MB for strings. Union-by-min ⇒ every component's
-        // root IS its min member; roots keep their id via the left-join
-        // coalesce downstream.
-        UnionFind.labelFrame(
-          clusters.sparkSession,
-          UnionFind.minLabels(moveEdges.collect()),
-          moveEdges.schema("src").dataType,
-          "cluster_id", "merged_cluster"
-        )
-      } else {
-        val vertices = moveEdges.select(col("src").as("doc_id"))
-          .union(moveEdges.select(col("dst").as("doc_id")))
-          .distinct()
-        ConnectedComponents
-          .run(moveEdges, vertices)
-          .assignments
-          .select(col("doc_id").as("cluster_id"), col("cluster_id").as("merged_cluster"))
-      }
+    val movers = moveEdges.select(col("src").as("doc_id"))
+      .union(moveEdges.select(col("dst").as("doc_id")))
+      .distinct()
+    val mapping = ConnectedComponents.run(moveEdges, movers).assignments
+      .select(col("doc_id").as("cluster_id"), col("cluster_id").as("merged_cluster"))
 
     val moved = clusters
       .join(mapping, Seq("cluster_id"), "left")

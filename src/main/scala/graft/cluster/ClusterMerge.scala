@@ -19,14 +19,8 @@ object ClusterMerge {
     * profile blob (the reference persists merged entities as JSON —
     * identity_graph.py:416-456). */
   def mergedEntities(clusters: DataFrame, docs: DataFrame, scored: DataFrame): DataFrame = {
-    val spans = docs.select(
-      col("doc_id"),
-      size(filter(col("spans"), s => s.getField("kind") === lit("text"))).as("n_text"),
-      transform(
-        filter(col("spans"), s => s.getField("kind") === lit("media")),
-        s => s.getField("media_ref")
-      ).as("media")
-    )
+    val spans = graft.schema.SpanView(docs)
+      .select(col("doc_id"), size(col("texts")).as("n_text"), col("medias").as("media"))
     // per-doc best evidence score (either orientation)
     val bestA = scored.select(col("doc_a").as("doc_id"), col("score"))
     val bestB = scored.select(col("doc_b").as("doc_id"), col("score"))

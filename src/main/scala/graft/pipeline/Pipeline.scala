@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
+import graft.schema.SpanView
 import graft.scoring.Scoring
 import graft.cluster.{Attach, ConnectedComponents}
 import graft.lineage.Lineage
@@ -113,33 +114,41 @@ object Pipeline {
     cfg.ids
   }
 
-  /** Input guard shared by [[run]] (over the input) and [[runDelta]]
-    * (over the increment), called at the start of stage B's compute so
-    * bad input fails before any pair is written, not after stages S and
-    * C consumed it. One aggregate per fresh run. Null ids are rejected
-    * in every id mode: hash mode would encode all of them to
+  /** The one decode of the nested input and its guard, shared by [[run]]
+    * (over the input) and [[runDelta]] (over the increment): `docs0`'s
+    * [[SpanView]], pinned, and its doc count. The pin's own job observes
+    * the guard's counts, so bad input fails before any pair is written,
+    * not after stages S and C consumed it. Null ids are rejected in
+    * every id mode: hash mode would encode all of them to
     * xxhash64(null) = 42, dense mode would drop them at the dictionary
     * join. A text span needs its `text` and a media span its
     * `media_ref`: a null text would reach the fused kernel as
     * dictionary entry 0, and null media refs would share one media
-    * block key. The collision check is hash-only: at 10¹² ids use
-    * ids = "dense" (collisions become certain at that scale); dense ids
-    * are unique by construction. */
-  private def requireValidIds(docs0: DataFrame, idMode: String, what: String): Unit = {
-    val hash = idMode == "hash"
-    def nullSpans(kind: String, field: String) = coalesce(
-      sum(size(filter(col("spans"), s => s.getField("kind") === lit(kind) && s.getField(field).isNull))),
-      lit(0L))
-    val aggs = Seq(count(lit(1)) - count(col("doc_id")), nullSpans("text", "text"), nullSpans("media", "media_ref")) ++
-      (if (hash) Seq(countDistinct(col("doc_id")), countDistinct(xxhash64(col("doc_id")))) else Nil)
-    val g = docs0.agg(aggs.head, aggs.tail: _*).head()
-    require(g.getLong(0) == 0L, s"${g.getLong(0)} $what rows have a null doc_id")
-    require(g.getLong(1) == 0L && g.getLong(2) == 0L,
-      s"$what docs have ${g.getLong(1)} text spans with a null text and ${g.getLong(2)} media spans " +
+    * block key (the view keeps one null media ref per doc, so those are
+    * counted per doc). The collision check is hash-only, one aggregate
+    * over the pin: at 10¹² ids use ids = "dense" (collisions become
+    * certain at that scale); dense ids are unique by construction. */
+  private def pinView(docs0: DataFrame, idMode: String, what: String): (DataFrame, Long) = {
+    val obs = Observation()
+    val view = SpanView(graft.util.Parallelism.ensure(docs0))
+      .observe(obs,
+        count(lit(1)).as("docs"),
+        count(col("doc_id")).as("ids"),
+        coalesce(sum(size(filter(col("texts"), _.isNull))), lit(0L)).as("texts"),
+        count_if(exists(col("medias"), _.isNull)).as("medias"))
+      .localCheckpoint(true)
+    val g = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
+    require(g("docs") == g("ids"), s"${g("docs") - g("ids")} $what rows have a null doc_id")
+    require(g("texts") == 0L && g("medias") == 0L,
+      s"$what docs have ${g("texts")} text spans with a null text and ${g("medias")} media spans " +
         "with a null media_ref")
-    if (hash) require(g.getLong(3) == g.getLong(4),
-      s"xxhash64 doc_id collision among $what docs (${g.getLong(3)} ids -> ${g.getLong(4)} hashes); " +
-        "rerun with ids=\"off\"")
+    if (idMode == "hash") {
+      val c = view.agg(countDistinct(col("doc_id")), countDistinct(xxhash64(col("doc_id")))).head()
+      require(c.getLong(0) == c.getLong(1),
+        s"xxhash64 doc_id collision among $what docs (${c.getLong(0)} ids -> ${c.getLong(1)} hashes); " +
+          "rerun with ids=\"off\"")
+    }
+    (view, g("docs"))
   }
 
   /** The trimmed content of the marker file `dir/name`, if it exists. */
@@ -291,17 +300,18 @@ object Pipeline {
 
   /** Stages S0 (per-doc rep) + S1 (span-text dictionary, size-gated) +
     * S (chunk-resumable pair scoring) — shared verbatim by [[run]] and
-    * [[runDelta]]; see the inline comments at each block. `dfFrac` is
-    * the corpus media rarity (Scoring.dfFrac): runDelta passes the
-    * MERGED corpus statistics, so pairs scored over the touched slice
-    * see the rarity a full run over the whole corpus would. Returns the
-    * scored-pairs frame (chunk column dropped). */
+    * [[runDelta]]; see the inline comments at each block. `view` is the
+    * scored docs' [[SpanView]], `dfFrac` the corpus media rarity
+    * (Scoring.dfFrac): runDelta passes the MERGED corpus statistics, so
+    * pairs scored over the touched slice see the rarity a full run over
+    * the whole corpus would. Both are read only when stage S0 runs.
+    * Returns the scored-pairs frame (chunk column dropped). */
   private def scoreStage(
       ck: Ckpt,
       cfg: Cfg,
-      docs: DataFrame,
+      view: => DataFrame,
       candidates: DataFrame,
-      dfFrac: DataFrame
+      dfFrac: => DataFrame
   ): DataFrame = {
     import ck.{runDir, spark}
     val chunkPruned = candidates.columns.contains(chunkCol(cfg))
@@ -319,7 +329,7 @@ object Pipeline {
       // Stage S0 — the per-doc rep (span texts + media set), checkpointed
       // once and read by S1 and the fallback (recomputing it per chunk
       // would re-scan the whole input scoreChunks times).
-      val textRep = ck.stage("text_rep")(Scoring.textRep(docs, dfFrac))
+      val textRep = ck.stage("text_rep")(Scoring.textRep(view, dfFrac))
 
       // Stage S1 — dense span-text dictionary + the per-doc rep every
       // chunk joins twice (`text_ids`: span-text ids + media set),
@@ -467,16 +477,26 @@ object Pipeline {
       case "dense" => denseDict
       case _ => docs0.select(col("doc_id").as("orig_id"), xxhash64(col("doc_id")).as("nid")).distinct()
     }).localCheckpoint(true))
-    // lazy: in dense mode this forces stage B0, which must come after
-    // the doc-id guard at the start of the candidates stage
-    lazy val docs = idMode match {
-      case "off" => docs0
-      case "hash" => docs0.withColumn("doc_id", xxhash64(col("doc_id")))
+    // the input in the internal id space
+    def encode(df: DataFrame): DataFrame = idMode match {
+      case "off" => df
+      case "hash" => df.withColumn("doc_id", xxhash64(col("doc_id")))
       case "dense" =>
-        docs0
+        df
           .join(denseDict.withColumnRenamed("orig_id", "doc_id"), "doc_id")
           .drop("doc_id")
           .withColumnRenamed("nid", "doc_id")
+    }
+    // doc_id-only reads (CC's node list): a pruned scan of the input
+    lazy val docs = encode(docs0)
+    // Stage B starts with the one decode of the nested input (see
+    // pinView), built on first use only: the key table, the media
+    // statistics and stage S0 all read it, and a run resumed past
+    // stage S0 never builds it. In dense mode the encode forces stage
+    // B0, after the guard.
+    lazy val (view, nDocsIn) = {
+      val (v, n) = pinView(docs0, idMode, "input")
+      (encode(v), n)
     }
 
     // Stage B — key table materialized once (lazily, only when the
@@ -488,8 +508,8 @@ object Pipeline {
     // later runDelta can join against it; otherwise a localCheckpoint
     // pin, recomputed only when the candidates stage is fresh.
     lazy val keys =
-      if (cfg.persistForDelta) ck.stage("keys")(Blocking.docKeys(docs, cfg.blocking))
-      else Blocking.docKeys(docs, cfg.blocking).localCheckpoint(true)
+      if (cfg.persistForDelta) ck.stage("keys")(Blocking.docKeys(view, cfg.blocking))
+      else Blocking.docKeys(view, cfg.blocking).localCheckpoint(true)
     // block census pinned once, shared by pair generation AND the
     // drop-accounting metrics (dropMetrics previously re-aggregated
     // the whole key table a second time)
@@ -501,14 +521,14 @@ object Pipeline {
         "dropped_blocks" -> drops.getDouble(0),
         "dropped_pairs_est" -> drops.getDouble(1)
       )
-    }) {
-      requireValidIds(docs0, idMode, "input")
-      Blocking.candidatesFromKeys(keys, cfg.blocking, Some(census))
-    }
+    })(Blocking.candidatesFromKeys(keys, cfg.blocking, Some(census)))
     // the media corpus statistics: raw df COUNTS + n_docs (counts sum
     // across increments exactly; the dffrac ratio does not)
-    val mediaDf = Scoring.mediaDfCounts(docs)
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+    lazy val mediaDf = Scoring.mediaDfCounts(view)
+    lazy val nDocs = {
+      import spark.implicits._
+      Seq(nDocsIn).toDF("n_docs")
+    }
     // a resumed run must still end up delta-capable: force the keys
     // stage (idempotent) even when the candidates checkpoint was hit,
     // and persist the statistics runDelta folds its increment into
@@ -519,7 +539,7 @@ object Pipeline {
     }
 
     // Stages S0/S1/S — shared with runDelta; see scoreStage
-    val scored = scoreStage(ck, cfg, docs, candidates, Scoring.dfFrac(mediaDf, nDocs))
+    val scored = scoreStage(ck, cfg, view, candidates, Scoring.dfFrac(mediaDf, nDocs))
 
     // Stage C
     graft.util.PhaseTracker.set("clustering")
@@ -681,7 +701,13 @@ object Pipeline {
 
     def enc(df: DataFrame): DataFrame =
       if (idMode == "off") df else df.withColumn("doc_id", xxhash64(col("doc_id")))
+    // doc_id-only reads of the increment; its one decode (see pinView)
+    // is built on first use, by the keys_new stage or stage S0
     val docsNew = enc(newDocs0)
+    lazy val (viewNew, nNew) = {
+      val (v, n) = pinView(newDocs0, idMode, "new")
+      (enc(v), n)
+    }
 
     // nid → original-id dictionary for the output boundary: every id
     // that can appear in the output is either a prior doc (all present
@@ -717,15 +743,15 @@ object Pipeline {
     }
     val keysNew = ck.stage("keys_new") {
       // loud guards, both delta-sized: new ids must be valid (see
-      // requireValidIds) and must be NEW (delta adds docs; upsert of an
+      // pinView) and must be NEW (delta adds docs; upsert of an
       // existing doc needs a retract, which increments cannot express)
-      requireValidIds(newDocs0, idMode, "new")
-      val overlap = docsNew.select("doc_id")
+      val view = viewNew
+      val overlap = view.select("doc_id")
         .join(spark.read.parquet(s"$priorRunDir/cc_assign").select("doc_id"), Seq("doc_id"), "left_semi")
         .count()
       require(overlap == 0L,
         s"$overlap new doc ids already exist in the prior run — runDelta adds docs, it cannot upsert")
-      Blocking.docKeys(docsNew, cfg.blocking)
+      Blocking.docKeys(view, cfg.blocking)
     }
 
     val candidates = candidatesStage(ck, cfg, (_, total) => Seq(
@@ -746,29 +772,31 @@ object Pipeline {
     // these fractions, so delta scores match it bit for bit).
     val mergedDf = ck.stage("media_df") {
       val priorDf = spark.read.parquet(s"$priorRunDir/media_df")
-      val newDf = Scoring.mediaDfCounts(docsNew)
+      val newDf = Scoring.mediaDfCounts(viewNew)
       priorDf.select(col("media_ref"), col("df").as("df_p"))
         .join(newDf.select(col("media_ref"), col("df").as("df_n")), Seq("media_ref"), "full_outer")
         .select(col("media_ref"),
           (coalesce(col("df_p"), lit(0L)) + coalesce(col("df_n"), lit(0L))).as("df"))
     }
     val mergedStats = ck.stage("corpus_stats") {
+      import spark.implicits._
       val nPrior = spark.read.parquet(s"$priorRunDir/corpus_stats")
-      docsNew.agg(count(lit(1)).as("n_docs"))
+      Seq(nNew).toDF("n_docs")
         .crossJoin(nPrior.select(col("n_docs").as("n_prior")))
         .select((col("n_docs") + col("n_prior")).as("n_docs"))
     }
     // docs appearing in a delta pair: all new docs + the touched slice
     // of the prior corpus (semi-join prune — the only read of
-    // priorDocs0, and it projects nothing until the join keeps a row)
+    // priorDocs0, and it projects nothing until the join keeps a row),
+    // pinned: stage S0 reads the view twice
     val touchedIds = candidates
       .select(col("doc_a").as("doc_id"))
       .union(candidates.select(col("doc_b").as("doc_id")))
       .distinct()
-    val docsTouched = docsNew.unionByName(
-      enc(priorDocs0).join(touchedIds, Seq("doc_id"), "left_semi"))
+    def viewTouched = viewNew.unionByName(
+      enc(SpanView(priorDocs0)).join(touchedIds, Seq("doc_id"), "left_semi").localCheckpoint(true))
 
-    val scored = scoreStage(ck, cfg, docsTouched, candidates, Scoring.dfFrac(mergedDf, mergedStats))
+    val scored = scoreStage(ck, cfg, viewTouched, candidates, Scoring.dfFrac(mergedDf, mergedStats))
 
     graft.util.PhaseTracker.set("clustering")
     var ccIters = -1

@@ -1,5 +1,8 @@
 package graft.schema
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 /** Core data model for the identity-resolution pipeline.
   *
   * The input row shape comes from the graft contract (BASELINE.json
@@ -17,6 +20,22 @@ final case class Span(
 )
 
 final case class Doc(doc_id: String, spans: Seq[Span])
+
+/** The one decoder of the nested `spans` column: docs of the [[Doc]]
+  * shape to one row per doc, (doc_id, texts, medias). `texts` are the
+  * raw texts of the text spans in span order, nulls kept; `medias` are
+  * the distinct media refs of the media spans in first-occurrence
+  * order (`array_distinct`). The pipeline's input guard, blocking keys,
+  * media statistics and stage-S rep, and the merged entity records, all
+  * read this view; each normalizes the raw texts its own way. */
+object SpanView {
+  def apply(docs: DataFrame): DataFrame = {
+    def fields(kind: String, field: String) =
+      transform(filter(col("spans"), s => s.getField("kind") === lit(kind)), s => s.getField(field))
+    docs.select(col("doc_id"), fields("text", "text").as("texts"),
+      array_distinct(fields("media", "media_ref")).as("medias"))
+  }
+}
 
 /** Ground-truth companion row (generator-only knowledge); analog of the
   * reference's GroundTruth.session_to_person

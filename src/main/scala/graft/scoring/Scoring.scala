@@ -61,7 +61,8 @@ object Scoring {
       threshold: Double = 6.5
   )
 
-  /** Stage S0's per-doc rep, one row per doc: (doc_id, texts, medias).
+  /** Stage S0's per-doc rep, one row per doc: (doc_id, texts, medias),
+    * from the docs' [[graft.schema.SpanView]] `view`.
     * `texts` are the normalized text spans, truncated to 64 entries:
     * the strong-span masks are 64-bit (`shiftleft(1L, ia)` wraps mod
     * 64), so untruncated span indexes would silently alias. The fixture
@@ -71,46 +72,28 @@ object Scoring {
     * rarity is an input, not derived from the docs at hand, so an
     * incremental run scoring only the touched slice of the corpus sees
     * the same rarity as a full run over the whole corpus. */
-  def textRep(docs0: DataFrame, dfFrac: DataFrame): DataFrame = {
-    val docs = graft.util.Parallelism.ensure(docs0)
-    val medias = docMediaRefs(docs)
+  def textRep(view: DataFrame, dfFrac: DataFrame): DataFrame = {
+    val medias = view.select(col("doc_id"), explode(col("medias")).as("media_ref"))
       .join(dfFrac, "media_ref")
       .groupBy("doc_id")
       // sort_array: collect_list order is nondeterministic and the
       // rare/common double sum in mediaScore is order-sensitive at ulp
       // level — sorted arrays keep resumed checkpoints byte-stable
       .agg(sort_array(collect_list(struct(col("media_ref"), col("dffrac")))).as("medias"))
-    val texts = slice(
-      transform(filter(col("spans"), s => s.getField("kind") === lit("text")), s => normText(s.getField("text"))),
-      1, 64
-    )
-    docs.select(col("doc_id"), texts.as("texts"))
+    view.select(col("doc_id"), slice(transform(col("texts"), t => normText(t)), 1, 64).as("texts"))
       .join(medias, Seq("doc_id"), "left")
       .select(col("doc_id"), col("texts"), coalesce(col("medias"), emptyMedias).as("medias"))
   }
 
-  /** (doc_id, media_ref) — one row per distinct media ref per doc. */
-  def docMediaRefs(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      explode(
-        array_distinct(
-          transform(
-            filter(col("spans"), s => s.getField("kind") === lit("media")),
-            s => s.getField("media_ref")
-          )
-        )
-      ).as("media_ref")
-    )
-
-  /** Raw media document-frequency COUNTS (media_ref, df) — the
+  /** Raw media document-frequency COUNTS (media_ref, df) of the docs'
+    * [[graft.schema.SpanView]] — the
     * mergeable corpus statistic behind [[dfFrac]]. An incremental run
     * adds its increment's counts to the persisted table and bumps
     * n_docs (Pipeline.runDelta); full-outer sum of counts over a
     * partition of the corpus equals the combined run's counts exactly,
     * which dffrac (a ratio of floats) does not. */
-  def mediaDfCounts(docs: DataFrame): DataFrame =
-    docMediaRefs(docs).groupBy("media_ref").agg(count(lit(1)).as("df"))
+  def mediaDfCounts(view: DataFrame): DataFrame =
+    view.select(explode(col("medias")).as("media_ref")).groupBy("media_ref").agg(count(lit(1)).as("df"))
 
   /** Media rarity (media_ref, dffrac) from df counts (media_ref, df)
     * and a one-row corpus size (n_docs): long df over double n_docs.
@@ -123,9 +106,10 @@ object Scoring {
       .crossJoin(nDocs.select(col("n_docs").cast("double").as("n_docs")))
       .select(col("media_ref"), (col("df") / col("n_docs")).as("dffrac"))
 
-  /** [[dfFrac]] of `docs` taken as the whole corpus. */
-  def corpusDfFrac(docs: DataFrame): DataFrame =
-    dfFrac(mediaDfCounts(docs), docs.agg(count(lit(1)).as("n_docs")))
+  /** [[dfFrac]] of the docs behind `view` (a [[graft.schema.SpanView]])
+    * taken as the whole corpus. */
+  def corpusDfFrac(view: DataFrame): DataFrame =
+    dfFrac(mediaDfCounts(view), view.agg(count(lit(1)).as("n_docs")))
 
   private val emptyMedias = array().cast("array<struct<media_ref:string,dffrac:double>>")
 
@@ -161,7 +145,8 @@ object Scoring {
     * plan shape). The pipeline instead checkpoints the reps and calls
     * scoreWithRepsFused directly so resume-able chunks share them. */
   def score(candidates: DataFrame, docs: DataFrame, w: Weights = Weights()): DataFrame = {
-    val txt = textRep(docs, corpusDfFrac(docs)).localCheckpoint(true)
+    val view = graft.schema.SpanView(docs)
+    val txt = textRep(view, corpusDfFrac(view)).localCheckpoint(true)
     val dict = textDictDense(txt).localCheckpoint(true)
     scoreWithRepsFused(candidates, textIdsRep(txt, dict), w, broadcastDict(dict))
   }

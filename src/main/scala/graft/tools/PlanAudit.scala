@@ -50,10 +50,11 @@ object PlanAudit {
     val (docsPath, _) = graft.schema.Fixture.ensureWritten(spark, "t1")
     val docs = spark.read.parquet(docsPath)
       .withColumn("doc_id", org.apache.spark.sql.functions.xxhash64(org.apache.spark.sql.functions.col("doc_id")))
-    val keys = graft.blocking.Blocking.docKeys(docs, graft.blocking.Blocking.Cfg())
+    val view = graft.schema.SpanView(docs)
+    val keys = graft.blocking.Blocking.docKeys(view, graft.blocking.Blocking.Cfg())
     audit("stage B — docKeys (fused MinHash kernel, default)",
       "One compiled pass per doc (MinHashBands expression): rolling shingle window + k affine minima + " +
-        "band mixing in registers — NO shuffle, no k-min aggregate; scan reads only (doc_id, spans).",
+        "band mixing in registers over the SpanView's texts and medias — NO shuffle, no k-min aggregate; scan reads only (doc_id, spans).",
       keys)
     val keysM = keys.localCheckpoint(true)
     audit("stage B — candidatesFromKeys (census + salted pair self-join)",
@@ -61,7 +62,7 @@ object PlanAudit {
       graft.blocking.Blocking.candidatesFromKeys(keysM, graft.blocking.Blocking.Cfg()))
     val cand = graft.blocking.Blocking.candidatesFromKeys(keysM, graft.blocking.Blocking.Cfg()).localCheckpoint(true)
     locally {
-      val txt = graft.scoring.Scoring.textRep(docs, graft.scoring.Scoring.corpusDfFrac(docs)).localCheckpoint(true)
+      val txt = graft.scoring.Scoring.textRep(view, graft.scoring.Scoring.corpusDfFrac(view)).localCheckpoint(true)
       val dict = graft.scoring.Scoring.textDictDense(txt).localCheckpoint(true)
       val rep = graft.scoring.Scoring.textIdsRep(txt, dict).localCheckpoint(true)
       audit("stage S — scoreWithRepsFused (default): one per-doc rep joined twice, no Generate/aggregate",
@@ -84,9 +85,9 @@ object PlanAudit {
     locally {
       import org.apache.spark.sql.functions.{pmod, xxhash64, col, lit}
       val isNew = pmod(xxhash64(col("doc_id")), lit(5)) === 4
-      val priorKeys = graft.blocking.Blocking.docKeys(docs.where(!isNew), graft.blocking.Blocking.Cfg())
+      val priorKeys = graft.blocking.Blocking.docKeys(view.where(!isNew), graft.blocking.Blocking.Cfg())
         .localCheckpoint(true)
-      val newKeys = graft.blocking.Blocking.docKeys(docs.where(isNew), graft.blocking.Blocking.Cfg())
+      val newKeys = graft.blocking.Blocking.docKeys(view.where(isNew), graft.blocking.Blocking.Cfg())
         .localCheckpoint(true)
       audit("delta blocking — deltaCandidates (new keys × persisted prior key table)",
         "The corpus-side input is the PRIOR RUN'S KEY CHECKPOINT, not the docs (no re-shingling): a " +

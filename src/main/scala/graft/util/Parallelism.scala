@@ -15,8 +15,8 @@ object Parallelism {
     * added. */
   def ensure(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    // df.rdd costs one extra planning pass per call-site (7 sites, ms
-    // each, once per pipeline build). Deliberately NOT replaced with
+    // df.rdd costs one extra planning pass per call (ms each; the
+    // pipeline calls it once per input decode). Deliberately NOT replaced with
     // executedPlan.outputPartitioning.numPartitions: file scans report
     // UnknownPartitioning(0), which would turn this guard into an
     // unconditional repartition — a real shuffle added on production

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
-import graft.schema.Fixture
+import graft.schema.{Fixture, SpanView}
 
 /** Delta blocking contract (Blocking.deltaCandidates): when no block's
   * size crosses maxBlockSize between the prior and combined runs, the
@@ -30,9 +30,9 @@ class BlockingDeltaSpec extends AnyFunSuite {
     val newDocs = docs.where(pmod(xxhash64(col("doc_id")), lit(5)) === 4)
     val cfg = Blocking.Cfg()
 
-    val keysAll = Blocking.docKeys(docs, cfg).localCheckpoint(true)
-    val keysOld = Blocking.docKeys(oldDocs, cfg).localCheckpoint(true)
-    val keysNew = Blocking.docKeys(newDocs, cfg).localCheckpoint(true)
+    val keysAll = Blocking.docKeys(SpanView(docs), cfg).localCheckpoint(true)
+    val keysOld = Blocking.docKeys(SpanView(oldDocs), cfg).localCheckpoint(true)
+    val keysNew = Blocking.docKeys(SpanView(newDocs), cfg).localCheckpoint(true)
 
     val full = rows(Blocking.candidatesFromKeys(keysAll, cfg))
     val prior = rows(Blocking.candidatesFromKeys(keysOld, cfg))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
 import graft.functions.MinHashKernel
-import graft.schema.{Doc, Fixture, Span}
+import graft.schema.{Doc, Fixture, Span, SpanView}
 import graft.text.TextOps
 
 /** The fused MinHash kernel (functions/MinHashBands.scala) must emit
@@ -39,12 +39,12 @@ class BlockingFusedSpec extends AnyFunSuite {
       .select(col("doc_id"), minhashSigFromAgg(cfg.minhashK).as("sig"))
       .select(col("doc_id"), lit("lsh").as("key_kind"),
         explode(bandKeys(col("sig"), cfg.bands, cfg.rows)).as("block_key"))
-    lsh.unionByName(Blocking.docKeys(docs, cfg).where(col("key_kind") === "media"))
+    lsh.unionByName(Blocking.docKeys(SpanView(docs), cfg).where(col("key_kind") === "media"))
   }
 
   private def keySet(docs: DataFrame, fused: Boolean): Set[(String, String, Long)] = {
     val cfg = Blocking.Cfg()
-    (if (fused) Blocking.docKeys(docs, cfg) else aggregateKeys(docs, cfg))
+    (if (fused) Blocking.docKeys(SpanView(docs), cfg) else aggregateKeys(docs, cfg))
       .collect()
       .map(r => (r.getAs[String]("doc_id"), r.getAs[String]("key_kind"), r.getAs[Long]("block_key")))
       .toSet

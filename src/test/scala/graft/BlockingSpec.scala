@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.schema.{Doc, Fixture, Span}
+import graft.schema.{Doc, Fixture, Span, SpanView}
 import graft.blocking.Blocking
 
 class BlockingSpec extends AnyFunSuite {
@@ -51,7 +51,7 @@ class BlockingSpec extends AnyFunSuite {
     val cfg = Blocking.Cfg(maxBlockSize = 100)
     val cand = Blocking.candidates(docs, cfg)
     assert(cand.count() == 0, "all pairs come from the over-cap hot block")
-    val m = Blocking.dropMetrics(Blocking.docKeys(docs, cfg), cfg).head()
+    val m = Blocking.dropMetrics(Blocking.docKeys(SpanView(docs), cfg), cfg).head()
     assert(m.getDouble(0) == 1.0)
     assert(m.getDouble(1) == 300.0 * 299 / 2)
   }

@@ -5,7 +5,7 @@ import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
-import graft.schema.Fixture
+import graft.schema.{Fixture, SpanView}
 
 /** Round-6 optimization contract: the witness dedup's per-kind
   * conditional-min HashAggregate (Blocking.dedupWitness) must produce
@@ -51,7 +51,7 @@ class BlockingWitnessSpec extends AnyFunSuite {
   test("pipeline kinds (lsh/media): conditional-min == struct-min, incl. witness and salt") {
     val docs = Fixture.docs(spark, Fixture.scales("t1")).toDF()
     val cfg = Blocking.Cfg()
-    val keys = Blocking.docKeys(docs, cfg).localCheckpoint(true)
+    val keys = Blocking.docKeys(SpanView(docs), cfg).localCheckpoint(true)
     val got = rows(Blocking.candidatesFromKeys(keys, cfg))
     val want = rows(structMinCandidates(keys, cfg))
     assert(got.nonEmpty)
@@ -112,9 +112,9 @@ class BlockingWitnessSpec extends AnyFunSuite {
     val oldDocs = docs.where(pmod(xxhash64(col("doc_id")), lit(5)) < 4)
     val newDocs = docs.where(pmod(xxhash64(col("doc_id")), lit(5)) === 4)
     val cfg = Blocking.Cfg()
-    val keysAll = Blocking.docKeys(docs, cfg).localCheckpoint(true)
-    val keysOld = Blocking.docKeys(oldDocs, cfg).localCheckpoint(true)
-    val keysNew = Blocking.docKeys(newDocs, cfg).localCheckpoint(true)
+    val keysAll = Blocking.docKeys(SpanView(docs), cfg).localCheckpoint(true)
+    val keysOld = Blocking.docKeys(SpanView(oldDocs), cfg).localCheckpoint(true)
+    val keysNew = Blocking.docKeys(SpanView(newDocs), cfg).localCheckpoint(true)
     val full = rows(structMinCandidates(keysAll, cfg))
     val prior = rows(Blocking.candidatesFromKeys(keysOld, cfg))
     val delta = rows(Blocking.deltaCandidates(keysNew, keysOld, cfg))

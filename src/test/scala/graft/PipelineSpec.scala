@@ -352,4 +352,55 @@ class PipelineSpec extends AnyFunSuite {
     val names = metrics.select("name").collect().map(_.getString(0)).toSet
     assert(names.contains("candidate_pairs") && names.contains("cc_iterations") && names.contains("dropped_pairs_est"))
   }
+
+  test("the nested input is decoded once per fresh run, and only when a stage needs it") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Walk extends AdaptiveSparkPlanHelper
+    val root = Files.createTempDirectory("graft_pipe_scans").toString
+    val (docsPath, _) = Fixture.ensureWritten(spark, "t1")
+    val all = spark.read.parquet(docsPath)
+    val isNew = pmod(xxhash64(col("doc_id")), lit(5)) === 4
+    all.where(!isNew).write.parquet(s"$root/prior_docs")
+    all.where(isNew).write.parquet(s"$root/new_docs")
+    // executed file scans that read `spans` (action -> input dir), over
+    // every query the body runs. Scans that read no row are not decodes:
+    // `Dataset.rdd` (Parallelism.ensure's partition count) reports a plan
+    // it never runs.
+    def spanScans(body: => Unit): Seq[(String, String)] = {
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          Walk.collectWithSubqueries(qe.executedPlan) {
+            case s: FileSourceScanExec
+                if s.requiredSchema.fieldNames.contains("spans") && s.metrics("numOutputRows").value > 0 =>
+              f -> s.relation.location.rootPaths.map(_.getName).mkString(",")
+          }.foreach(scans.add)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try { body; org.apache.spark.ListenerDrain(spark.sparkContext) }
+      finally spark.listenerManager.unregister(listener)
+      scala.jdk.CollectionConverters.IteratorHasAsScala(scans.iterator).asScala.toSeq
+    }
+    val input = spark.read.parquet(s"$root/prior_docs", s"$root/new_docs")
+    val dirF = s"$root/full"
+    val fresh = spanScans(Pipeline.run(spark, input, dirF))
+    assert(fresh.size == 1, s"fresh run: $fresh")
+    val rerun = spanScans(Pipeline.run(spark, input, dirF))
+    assert(rerun.isEmpty, s"rerun of a complete run dir: $rerun")
+    Seq("text_rep", "text_dict", "text_ids", "scored_pairs", "clusters").foreach { st =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dirF/$st"))
+    }
+    val resumed = spanScans(Pipeline.run(spark, input, dirF))
+    assert(resumed.size == 1, s"resume with only candidates committed: $resumed")
+
+    val prior = spark.read.parquet(s"$root/prior_docs")
+    val dirP = s"$root/prior"
+    Pipeline.run(spark, prior, dirP, Pipeline.Cfg(persistForDelta = true))
+    val delta = spanScans(Pipeline.runDelta(spark, prior, spark.read.parquet(s"$root/new_docs"), dirP, s"$root/delta"))
+    assert(delta.count(_._2 == "new_docs") == 1 && delta.count(_._2 == "prior_docs") <= 1 &&
+      delta.forall(d => Set("new_docs", "prior_docs")(d._2)), s"runDelta: $delta")
+  }
 }

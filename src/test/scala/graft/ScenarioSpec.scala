@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.schema.Fixture
+import graft.schema.{Fixture, SpanView}
 import graft.blocking.Blocking
 import graft.scoring.Scoring
 import graft.cluster.{Attach, ConnectedComponents}
@@ -75,7 +75,7 @@ class ScenarioSpec extends AnyFunSuite {
     // accounting — the 100 TB posture: a synchronized spike may not
     // produce an n² block, and may not vanish silently either
     val bcfg = Blocking.Cfg(maxBlockSize = 100)
-    val keys = Blocking.docKeys(docs, bcfg).localCheckpoint(true)
+    val keys = Blocking.docKeys(SpanView(docs), bcfg).localCheckpoint(true)
     val drops = Blocking.dropMetrics(keys, bcfg).head()
     info(s"dropped_blocks=${drops.getDouble(0)} dropped_pairs_est=${drops.getDouble(1)}")
     assert(drops.getDouble(0) >= 1.0, "the live-event block must hit the cap")

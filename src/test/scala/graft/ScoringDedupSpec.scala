@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
-import graft.schema.{Doc, Fixture, Span}
+import graft.schema.{Doc, Fixture, Span, SpanView}
 import graft.blocking.Blocking
 import graft.scoring.Scoring
 
@@ -26,7 +26,7 @@ class ScoringDedupSpec extends AnyFunSuite {
       cand: org.apache.spark.sql.DataFrame,
       docs: org.apache.spark.sql.DataFrame
   ): Map[(String, String), Row] = {
-    val txt = Scoring.textRep(docs, Scoring.corpusDfFrac(docs)).localCheckpoint(true)
+    val txt = Scoring.textRep(SpanView(docs), Scoring.corpusDfFrac(SpanView(docs))).localCheckpoint(true)
     val dict = Scoring.textDictDense(txt).localCheckpoint(true)
     val rep = Scoring.textIdsRep(txt, dict)
     val a = Scoring.scoreWithRepsDirect(cand, txt).collect().map(r => key(r) -> r).toMap

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import graft.schema.{Doc, Span}
+import graft.schema.{Doc, Span, SpanView}
 import graft.scoring.Scoring
 
 /** Decision-boundary semantics of the FS scorer: the contamination-
@@ -90,7 +90,7 @@ class ScoringSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     val docs = graft.schema.Fixture.docs(s, graft.schema.Fixture.scales("t1")).toDF()
     val cand = graft.blocking.Blocking.candidates(docs, graft.blocking.Blocking.Cfg()).localCheckpoint(true)
-    val txt = Scoring.textRep(docs, Scoring.corpusDfFrac(docs)).localCheckpoint(true)
+    val txt = Scoring.textRep(SpanView(docs), Scoring.corpusDfFrac(SpanView(docs))).localCheckpoint(true)
     val dict = Scoring.textDictDense(txt).localCheckpoint(true)
     val rep = Scoring.textIdsRep(txt, dict).localCheckpoint(true)
     val scored = Scoring.scoreWithRepsFused(cand, rep, Scoring.Weights(), Scoring.broadcastDict(dict))
@@ -114,7 +114,7 @@ class ScoringSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     val docs = graft.schema.Fixture.docs(s, graft.schema.Fixture.scales("t1")).toDF()
     val cand = graft.blocking.Blocking.candidates(docs, graft.blocking.Blocking.Cfg()).localCheckpoint(true)
-    val txt = Scoring.textRep(docs, Scoring.corpusDfFrac(docs)).localCheckpoint(true)
+    val txt = Scoring.textRep(SpanView(docs), Scoring.corpusDfFrac(SpanView(docs))).localCheckpoint(true)
     val scored = Scoring.scoreWithRepsDirect(cand, txt)
     scored.write.format("noop").mode("overwrite").save()
     object Walk extends AdaptiveSparkPlanHelper
