@@ -124,32 +124,22 @@ object Pipeline {
     * join. A text span needs its `text` and a media span its
     * `media_ref`: a null text would reach the fused kernel as
     * dictionary entry 0, and null media refs would share one media
-    * block key (the view keeps one null media ref per doc, so those are
-    * counted per doc). The collision check is hash-only, one grouping
-    * of the pin by hash: at 10¹² ids use ids = "dense" (collisions become
-    * certain at that scale); dense ids are unique by construction. */
+    * block key. The collision check is hash-only, one aggregate over
+    * the pin: at 10¹² ids use ids = "dense" (collisions become certain
+    * at that scale); dense ids are unique by construction. */
   private def pinView(docs0: DataFrame, idMode: String, what: String): (DataFrame, Long) = {
     val obs = Observation()
-    val view = SpanView(graft.util.Parallelism.ensure(docs0))
-      .observe(obs,
-        count(lit(1)).as("docs"),
-        count(col("doc_id")).as("ids"),
-        coalesce(sum(size(filter(col("texts"), _.isNull))), lit(0L)).as("texts"),
-        count_if(exists(col("medias"), _.isNull)).as("medias"))
-      .localCheckpoint(true)
+    val view = SpanView.observed(graft.util.Parallelism.ensure(docs0), obs).localCheckpoint(true)
     val g = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
     require(g("docs") == g("ids"), s"${g("docs") - g("ids")} $what rows have a null doc_id")
     require(g("texts") == 0L && g("medias") == 0L,
       s"$what docs have ${g("texts")} text spans with a null text and ${g("medias")} media spans " +
         "with a null media_ref")
     if (idMode == "hash") {
-      val shared = view.groupBy(xxhash64(col("doc_id")))
-        .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-        .where(col("lo") =!= col("hi"))
-        .collect()
-      require(shared.isEmpty,
-        s"xxhash64 doc_id collision among $what docs (${shared.length} hashes shared by distinct ids, " +
-          s"e.g. ${shared.head.getString(1)} and ${shared.head.getString(2)}); rerun with ids=\"off\"")
+      val c = view.agg(countDistinct(col("doc_id")), countDistinct(xxhash64(col("doc_id")))).head()
+      require(c.getLong(0) == c.getLong(1),
+        s"xxhash64 doc_id collision among $what docs (${c.getLong(0)} ids -> ${c.getLong(1)} hashes); " +
+          "rerun with ids=\"off\"")
     }
     (view, g("docs"))
   }

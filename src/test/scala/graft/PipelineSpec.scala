@@ -166,6 +166,23 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("null media refs are counted per span, also when one doc holds several") {
+    // the span view deduplicates a doc's media refs, so the guard's count
+    // must be taken before that: here every media span of one doc with
+    // at least two of them loses its ref
+    def isMedia(s: org.apache.spark.sql.Column) = s.getField("kind") === "media"
+    val row = docs.select(col("doc_id"), size(filter(col("spans"), isMedia(_))).as("n"))
+      .where(col("n") >= 2).orderBy("doc_id").head()
+    val (id, n) = (row.getString(0), row.getInt(1))
+    val bad = docs.withColumn("spans", when(col("doc_id") === id,
+      transform(col("spans"), s => when(isMedia(s), s.withField("media_ref", lit(null).cast("string"))).otherwise(s)))
+      .otherwise(col("spans")))
+    val dirN = Files.createTempDirectory("graft_pipe_nullmedia").toString
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, bad, dirN))
+    assert(e.getMessage.contains(s"0 text spans with a null text and $n media spans with a null media_ref"),
+      e.getMessage)
+  }
+
   test("a corpus without candidate pairs runs and resumes: every doc is its own cluster") {
     // the candidates checkpoint is partitioned by scoring chunk, so an
     // empty pair set writes no partition dir; its read must still work,
