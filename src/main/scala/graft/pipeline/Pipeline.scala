@@ -124,9 +124,11 @@ object Pipeline {
     * join. A text span needs its `text` and a media span its
     * `media_ref`: a null text would reach the fused kernel as
     * dictionary entry 0, and null media refs would share one media
-    * block key. The collision check is hash-only, one aggregate over
-    * the pin: at 10¹² ids use ids = "dense" (collisions become certain
-    * at that scale); dense ids are unique by construction. */
+    * block key. The collision check is hash-only: one grouping of the
+    * pin by hash, one shuffle where two `countDistinct`s need two (a
+    * job more per run). At 10¹² ids use ids = "dense" (collisions
+    * become certain at that scale); dense ids are unique by
+    * construction. */
   private def pinView(docs0: DataFrame, idMode: String, what: String): (DataFrame, Long) = {
     val obs = Observation()
     val view = SpanView.observed(graft.util.Parallelism.ensure(docs0), obs).localCheckpoint(true)
@@ -136,9 +138,10 @@ object Pipeline {
       s"$what docs have ${g("texts")} text spans with a null text and ${g("medias")} media spans " +
         "with a null media_ref")
     if (idMode == "hash") {
-      val c = view.agg(countDistinct(col("doc_id")), countDistinct(xxhash64(col("doc_id")))).head()
-      require(c.getLong(0) == c.getLong(1),
-        s"xxhash64 doc_id collision among $what docs (${c.getLong(0)} ids -> ${c.getLong(1)} hashes); " +
+      val shared = view.groupBy(xxhash64(col("doc_id")))
+        .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).where(col("lo") =!= col("hi")).collect()
+      require(shared.isEmpty,
+        s"xxhash64 doc_id collision among $what docs (${shared.length} hashes shared by distinct ids); " +
           "rerun with ids=\"off\"")
     }
     (view, g("docs"))
