@@ -7,6 +7,7 @@ import graft.schema.SpanView
 import graft.scoring.Scoring
 import graft.cluster.{Attach, ConnectedComponents}
 import graft.lineage.Lineage
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end three-stage resolution pipeline with per-stage
   * checkpointing and idempotent resume.
@@ -128,10 +129,13 @@ object Pipeline {
     * pin by hash, one shuffle where two `countDistinct`s need two (a
     * job more per run). At 10¹² ids use ids = "dense" (collisions
     * become certain at that scale); dense ids are unique by
-    * construction. */
+    * construction. The pin is kept on local disk, not on the heap: it
+    * holds every doc's raw texts until the run ends, and at `bench`
+    * scale an on-heap pin ran a 4 GB driver out of heap in stage B. */
   private def pinView(docs0: DataFrame, idMode: String, what: String): (DataFrame, Long) = {
     val obs = Observation()
-    val view = SpanView.observed(graft.util.Parallelism.ensure(docs0), obs).localCheckpoint(true)
+    val view = SpanView.observed(graft.util.Parallelism.ensure(docs0), obs)
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val g = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
     require(g("docs") == g("ids"), s"${g("docs") - g("ids")} $what rows have a null doc_id")
     require(g("texts") == 0L && g("medias") == 0L,
@@ -790,7 +794,8 @@ object Pipeline {
       .union(candidates.select(col("doc_b").as("doc_id")))
       .distinct()
     def viewTouched = viewNew.unionByName(
-      enc(SpanView(priorDocs0)).join(touchedIds, Seq("doc_id"), "left_semi").localCheckpoint(true))
+      enc(SpanView(priorDocs0)).join(touchedIds, Seq("doc_id"), "left_semi")
+        .localCheckpoint(true, StorageLevel.DISK_ONLY))
 
     val scored = scoreStage(ck, cfg, viewTouched, candidates, Scoring.dfFrac(mergedDf, mergedStats))
 
