@@ -134,7 +134,7 @@ object Pipeline {
     * scale an on-heap pin ran a 4 GB driver out of heap in stage B. */
   private def pinView(docs0: DataFrame, idMode: String, what: String): (DataFrame, Long) = {
     val obs = Observation()
-    val view = SpanView.observed(graft.util.Parallelism.ensure(docs0), obs)
+    val view = SpanView(graft.util.Parallelism.ensure(docs0), Some(obs))
       .localCheckpoint(true, StorageLevel.DISK_ONLY)
     val g = obs.get.view.mapValues(_.asInstanceOf[Long]).toMap
     require(g("docs") == g("ids"), s"${g("docs") - g("ids")} $what rows have a null doc_id")

@@ -29,27 +29,18 @@ final case class Doc(doc_id: String, spans: Seq[Span])
   * media statistics and stage-S rep, and the merged entity records, all
   * read this view; each normalizes the raw texts its own way. */
 object SpanView {
-  def apply(docs: DataFrame): DataFrame = dedupMedias(decode(docs))
-
-  /** [[apply]], observing into `obs` on the view's own job the input
+  /** `guard`, if given, observes on the view's own job the input
     * guard's counts: rows (`docs`), non-null ids (`ids`), text spans
     * with a null text (`texts`) and media spans with a null media_ref
-    * (`medias`). Null media refs are counted per span, before the refs
-    * are deduplicated. */
-  def observed(docs: DataFrame, obs: Observation): DataFrame = {
-    def nulls(c: String) = coalesce(sum(size(filter(col(c), _.isNull))), lit(0L)).as(c)
-    dedupMedias(decode(docs).observe(obs,
-      count(lit(1)).as("docs"), count(col("doc_id")).as("ids"), nulls("texts"), nulls("medias")))
-  }
-
-  private def decode(docs: DataFrame): DataFrame = {
+    * (`medias`, per span: taken before the refs are deduplicated). */
+  def apply(docs: DataFrame, guard: Option[Observation] = None): DataFrame = {
     def fields(kind: String, field: String) =
       transform(filter(col("spans"), s => s.getField("kind") === lit(kind)), s => s.getField(field))
-    docs.select(col("doc_id"), fields("text", "text").as("texts"), fields("media", "media_ref").as("medias"))
+    def nulls(c: String) = coalesce(sum(size(filter(col(c), _.isNull))), lit(0L)).as(c)
+    val raw = docs.select(col("doc_id"), fields("text", "text").as("texts"), fields("media", "media_ref").as("medias"))
+    guard.fold(raw)(raw.observe(_, count(lit(1)).as("docs"), count(col("doc_id")).as("ids"), nulls("texts"),
+      nulls("medias"))).withColumn("medias", array_distinct(col("medias")))
   }
-
-  private def dedupMedias(raw: DataFrame): DataFrame =
-    raw.withColumn("medias", array_distinct(col("medias")))
 }
 
 /** Ground-truth companion row (generator-only knowledge); analog of the
